@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Bench main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each query is fully executed through the `noop`
@@ -16,15 +15,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // Untimed warmup pass: the first execution of each query pays
     // Janino/JIT codegen compilation and parquet-footer reads (observed:
     // a 0.5 s steady-state query reading 8-30 s cold). One full untimed
@@ -46,10 +38,14 @@ object Bench {
         SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
+    var errors = List.empty[String]
     val tw = System.nanoTime()
-    queries.foreach { case (_, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        errors ::= s"warmup:$name"
+        System.err.println(s"[bench] $name failed in warmup: ${e.getMessage}")
+      }
     }
     val warmup = (System.nanoTime() - tw) / 1e9
 
@@ -57,7 +53,6 @@ object Bench {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    var errors = List.empty[String]
     // Machine-load canary: a fixed-work, IO-free, plan-stable query timed
     // once per epoch. Its per-epoch times are reported raw — when the r10
     // artifact's 43% full-run spread recurs, the canary series says
@@ -70,7 +65,8 @@ object Bench {
       val t0 = System.nanoTime()
       // bit_xor, not sum: xxhash64 is full-range, so summing 32M of them
       // overflows long and ANSI mode turns that into a hard error.
-      spark.range(0L, 32L * 1000 * 1000, 1L, cpus.toInt)
+      spark.range(0L, 32L * 1000 * 1000, 1L,
+        spark.sparkContext.defaultParallelism)
         .select(bit_xor(xxhash64(col("id"))).as("h"))
         .write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9

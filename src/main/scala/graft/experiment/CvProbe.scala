@@ -12,7 +12,7 @@ object CvProbe {
   def main(args: Array[String]): Unit = {
     val lag = if (args.nonEmpty) args(0).toInt else 5
     val alpha = if (args.length > 1) args(1).toDouble else 0.4
-    val spark = GoldenExperiment.buildSession()
+    val spark = graft.Session.build()
     val panel = GoldenExperiment.buildPanel(spark)
     // ADF(k=7) p-values per ezlasso column on the REPAIRED panel columns —
     // borderline values near 0.05 flag transform-flip risk vs R.

@@ -1,6 +1,6 @@
 package graft.experiment
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -33,7 +33,13 @@ import graft.sources.Tables
   * Inflation semantics match ScaleProbe exactly (k key-shifted copies,
   * offset 2⁴⁰ — volume ×k AND key cardinality ×k); the known caveat
   * carries over: replicated TEXT means shingle/band dictionaries don't
-  * scale with k, only their bucket depths do. File counts scale with k
+  * scale with k, only their bucket depths do. For the BPE trainer that
+  * caveat is closed by measurement: the VocabScaleProbe main timed the
+  * same uncached `bpeMerges(words, 6)` kernel over synthetic Zipf
+  * vocabularies of 16k → 1M distinct words and fit α = 0.19 (README,
+  * round 13); it was deleted after commit 85d5524, and
+  * `git show 85d5524:src/main/scala/graft/experiment/VocabScaleProbe.scala`
+  * recovers it. File counts scale with k
   * (min(256, 4k) output files per big table) so the scan's split count
   * grows like a real corpus would.
   *
@@ -45,15 +51,8 @@ object DiskScaleProbe {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val root = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       "/root/repo/target/scale")
-    val cores = sys.env.get("SPARK_GRAFT_CORES").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
+    val cores = spark.sparkContext.defaultParallelism
 
     val offset = 1L << 40
     def shifted(df: DataFrame, keys: Seq[String], k: Int): DataFrame =

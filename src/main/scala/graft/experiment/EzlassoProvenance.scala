@@ -27,7 +27,7 @@ import graft.tune.Selection
 object EzlassoProvenance {
 
   def main(args: Array[String]): Unit = {
-    val spark = GoldenExperiment.buildSession()
+    val spark = graft.Session.build()
     val prep = GoldenExperiment.prepare(spark)
 
     // ----- 1. recompute the ezlasso ranking at reference settings --------

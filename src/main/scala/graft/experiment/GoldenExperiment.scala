@@ -62,18 +62,6 @@ object GoldenExperiment {
     */
   final case class Panel(y: DenseMatrix[Double], startPredIdx: Int)
 
-  def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Repaired columns + GDP log-diffs — the prep state that does NOT
     * depend on the model's column set, so multi-model workloads run it
     * once.
@@ -198,7 +186,7 @@ object GoldenExperiment {
     val panelCols = if (args.length > 3 && args(3) == "econ2") EconVars2 else EzlassoAll
     val method = if (args.length > 4) args(4) else "enet"
     val cvFoldPaths = if (args.length > 5 && args(5) != "master") Some(args(5)) else None
-    val spark = buildSession()
+    val spark = graft.Session.build()
     val panel = buildPanel(spark, panelCols)
     val y = panel.y
     val startPredIdx = panel.startPredIdx

@@ -36,7 +36,7 @@ object GoldenTune {
     val span = if (args.length > 2) args(2) else "train"
     val horizon = if (args.length > 3) args(3).toInt else 8
     val caretMode = args.length > 4 && args(4) == "caret"
-    val spark = GoldenExperiment.buildSession()
+    val spark = graft.Session.build()
     val panel = GoldenExperiment.buildPanel(spark)
     val names = GoldenExperiment.EzlassoAll.toIndexedSeq
 

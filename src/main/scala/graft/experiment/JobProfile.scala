@@ -1,15 +1,14 @@
 package graft.experiment
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage/task accounting — the measure-first tool for the
   * r19 optimization round (guide §1). Runs named SparkEntry queries
-  * through the noop sink exactly like Bench (same master/partitions
-  * contract via SPARK_GRAFT_CPUS), after one untimed warmup pass, and
-  * prints for each query: wall seconds, Spark job count, stage count,
-  * task count, summed executor run time, and the gap between wall time
-  * and scheduled work (= driver/planning/broadcast overhead). At sf0.1
+  * through the noop sink exactly like Bench (same [[graft.Session]]),
+  * after one untimed warmup pass, and prints for each query: wall
+  * seconds, Spark job count, stage count, task count, summed executor
+  * run time, and the gap between wall time and scheduled work
+  * (= driver/planning/broadcast overhead). At sf0.1
   * the corpus is small enough that job COUNT × fixed cost dominates the
   * heavy queries — this tool exists to attribute that before and after
   * a restructure.
@@ -20,14 +19,7 @@ object JobProfile {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val d = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
 
     @volatile var jobs = 0
     @volatile var stages = 0

@@ -1,7 +1,5 @@
 package graft.experiment
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump the FULL `.explain("formatted")` physical plan of named
   * SparkEntry queries to files — the r19 optimization round's
   * before/after plan evidence (plans/r19/<query>_<tag>.txt). The query
@@ -16,14 +14,7 @@ object PlanText {
     val outDir = java.nio.file.Paths.get(args(1))
     val tag = args(2)
     val d = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
     java.nio.file.Files.createDirectories(outDir)
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)

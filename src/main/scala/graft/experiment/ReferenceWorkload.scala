@@ -33,7 +33,7 @@ object ReferenceWorkload {
     "enet.selc.25" -> EnetSelc25)
 
   def main(args: Array[String]): Unit = {
-    val spark = GoldenExperiment.buildSession()
+    val spark = graft.Session.build()
     val tol = BlockedCv.GlmnetEquivTol
     val t0 = System.nanoTime()
     val prep = GoldenExperiment.prepare(spark)
@@ -78,7 +78,7 @@ object ReferenceWorkload {
       println(f"[workload] $label done in ${(System.nanoTime() - tm) / 1e9}%.0f s")
     }
     println(f"[workload] FULL 5-model x 2-lag workload (reference: ~6 h) = " +
-      f"${(System.nanoTime() - t0) / 1e9}%.0f s at local[32]")
+      f"${(System.nanoTime() - t0) / 1e9}%.0f s at local[${spark.sparkContext.defaultParallelism}]")
     spark.stop()
   }
 }

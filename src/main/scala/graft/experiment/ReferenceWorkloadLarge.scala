@@ -29,7 +29,7 @@ object ReferenceWorkloadLarge {
       "PPIACO", "PCEPI", "CES3000000008", "M1SL", "WTISPLC"))
 
   def main(args: Array[String]): Unit = {
-    val spark = GoldenExperiment.buildSession()
+    val spark = graft.Session.build()
     val tol = BlockedCv.GlmnetEquivTol
     val t0 = System.nanoTime()
     val prep = GoldenExperiment.prepare(spark)
@@ -86,7 +86,7 @@ object ReferenceWorkloadLarge {
       println(f"[workload12] $label done in ${(System.nanoTime() - tm) / 1e9}%.0f s")
     }
     println(f"[workload12] FULL 15-model x 2-lag workload (reference: ~12 h) = " +
-      f"${(System.nanoTime() - t0) / 1e9}%.0f s at local[32]")
+      f"${(System.nanoTime() - t0) / 1e9}%.0f s at local[${spark.sparkContext.defaultParallelism}]")
     spark.stop()
   }
 }

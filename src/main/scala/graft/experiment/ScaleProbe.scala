@@ -1,6 +1,6 @@
 package graft.experiment
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -24,20 +24,13 @@ import graft.sources.Tables
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Parallelism follows the host (env-overridable) rather than a
+    // Parallelism follows the host (graft.Session) rather than a
     // hardcoded local[32]: on a smaller host a fixed 32 folds scheduling
     // contention into the fitted exponent α, making readings
     // incomparable across machines. The value used is recorded in every
     // emitted JSON line so α can be interpreted next to it.
-    val cores = sys.env.get("SPARK_GRAFT_CORES").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
+    val cores = spark.sparkContext.defaultParallelism
 
     // k key-shifted copies: volume ×k AND key cardinality ×k — the
     // honest scale-up (pure duplication would only deepen groups).

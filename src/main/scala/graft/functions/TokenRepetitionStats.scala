@@ -16,7 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * doGenCode — every fold step walks an interpreted expression tree per
   * element, and the two-sort-two-fold formulation measured 1.6 s at
   * sf0.1 against 0.5 s for the shuffle-aggregate draft it replaced
-  * (X13Probe). This expression keeps x13's map-only, zero-shuffle plan
+  * (the X13Probe main, deleted after commit 85d5524, where
+  * `git show 85d5524:src/main/scala/graft/experiment/X13Probe.scala`
+  * recovers it). This expression keeps x13's map-only, zero-shuffle plan
   * shape AND compiles to a single static call per row: sort the token
   * refs once, scan runs; sort the n-1 bigram START INDEES with a
   * two-position comparator (no bigram strings are materialized), scan

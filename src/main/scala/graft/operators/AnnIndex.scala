@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionCache
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1265,25 +1266,21 @@ object AnnIndex {
   /** The session's variance-balanced PQ index ([[balancedPerm]] then
     * [[trainPq]] on the permuted corpus) plus the permutation itself.
     */
-  private val bpqCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int, Int),
-      (Seq[Int], PqIndex)]]()
+  private val bpqCache = SessionCache.logged[(String, Int, Int, Int), (Seq[Int], PqIndex)] {
+    case (_, m, ksub, iters) => s"bpq:$m:$ksub:$iters"
+  }
   def balancedPqFor(s: SparkSession, path: String, e: => DataFrame,
       m: Int, ksub: Int, iters: Int): (Seq[Int], PqIndex) =
-    bpqCache.synchronized {
-      bpqCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, m, ksub, iters),
-      timedBuild(s"bpq:$m:$ksub:$iters") {
-        val corpus = e
-        val perm = balancedPerm(corpus, m)
-        val pe = corpus.select(col("vec_id"), expr(
-          s"transform(array(${perm.mkString(", ")}), p -> element_at(embedding, p + 1))")
-          .as("embedding"))
-        val idx = trainPq(pe, m, ksub, iters)
-        idx.codes.count()
-        (perm, idx)
-      })
+    bpqCache(s, (path, m, ksub, iters)) {
+      val corpus = e
+      val perm = balancedPerm(corpus, m)
+      val pe = corpus.select(col("vec_id"), expr(
+        s"transform(array(${perm.mkString(", ")}), p -> element_at(embedding, p + 1))")
+        .as("embedding"))
+      val idx = trainPq(pe, m, ksub, iters)
+      idx.codes.count()
+      (perm, idx)
+    }
 
   /** The per-query m × ksub ADC table, as ONE aggregation of the tiny
     * |Q|·m·ksub distance stream (was a groupBy(q_id, sub) + groupBy(q_id)
@@ -1626,8 +1623,10 @@ object AnnIndex {
     rerankExact(idx.coded, rpqAdcCands(idx, qPred, nprobe, k * rerank), q, k)
   }
 
-  private val rpqCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int, Int, Int, Int), RpqIndex]]()
+  private val rpqCache =
+    SessionCache.logged[(String, Int, Int, Int, Int, Int), RpqIndex] {
+      case (_, nlist, _, m, ksub, _) => s"rpq:$nlist:$m:$ksub"
+    }
 
   /** The shared residual-PQ index — composes the session's cached IVF
     * quantizer (the same instance e6/e7/e11 probe), so e31 and e33 pay
@@ -1635,31 +1634,28 @@ object AnnIndex {
     */
   def rpqFor(s: SparkSession, path: String, e: => DataFrame,
       nlist: Int, ivfIters: Int, m: Int, ksub: Int, pqIters: Int): RpqIndex =
-    rpqCache.synchronized {
-      rpqCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, nlist, ivfIters, m, ksub, pqIters),
-      timedBuild(s"rpq:$nlist:$m:$ksub") {
-        val idx = trainResidualPq(e,
-          ivfFor(s, path, e, nlist, ivfIters), m, ksub, pqIters)
-        idx.coded.count(); idx
-      })
+    rpqCache(s, (path, nlist, ivfIters, m, ksub, pqIters)) {
+      val idx = trainResidualPq(e,
+        ivfFor(s, path, e, nlist, ivfIters), m, ksub, pqIters)
+      idx.coded.count(); idx
+    }
 
-  // a stopped, GC'd session releases its cached indexes with it. The
-  // previous identityHashCode key could both collide after GC (hashes
-  // are address-derived and reusable, handing a new session an index
-  // bound to a dead session's state) and pin every entry for the JVM
-  // lifetime.
-  private val ivfCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int), IvfIndex]]()
-  private val lshCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int), DataFrame]]()
-  private val pqCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int, Int), PqIndex]]()
-  private val ivfPqCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int, Int, Int, Int), IvfPqIndex]]()
-  private val nswCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int), NswIndex]]()
+  private val ivfCache = SessionCache.logged[(String, Int, Int), IvfIndex] {
+    case (_, nlist, iters) => s"ivf:$nlist:$iters"
+  }
+  private val lshCache = SessionCache.logged[(String, Int), DataFrame] {
+    case (_, tables) => s"lsh:$tables"
+  }
+  private val pqCache = SessionCache.logged[(String, Int, Int, Int), PqIndex] {
+    case (_, m, ksub, iters) => s"pq:$m:$ksub:$iters"
+  }
+  private val ivfPqCache =
+    SessionCache.logged[(String, Int, Int, Int, Int, Int), IvfPqIndex] {
+      case (_, nlist, _, m, ksub, _) => s"ivfpq:$nlist:$m:$ksub"
+    }
+  private val nswCache = SessionCache.logged[(String, Int, Int), NswIndex] {
+    case (_, m, tables) => s"nsw:$m:$tables"
+  }
 
   /** Wall-clock seconds spent training/building each index, recorded on
     * cache miss (keyed by family, params summarized). Bench reads this
@@ -1714,16 +1710,12 @@ object AnnIndex {
     */
   def ivfFor(s: SparkSession, path: String, e: => DataFrame,
       nlist: Int, iters: Int): IvfIndex =
-    ivfCache.synchronized {
-      ivfCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, nlist, iters),
-      timedBuild(s"ivf:$nlist:$iters") {
-        // count() materializes the persisted index INSIDE the timed build,
-        // so searches are pure reads and the build log carries the true
-        // construction cost (not ~0 for a lazily-persisted frame).
-        val idx = trainIvf(e, nlist, iters); idx.lists.count(); idx
-      })
+    ivfCache(s, (path, nlist, iters)) {
+      // count() materializes the persisted index INSIDE the timed build,
+      // so searches are pure reads and the build log carries the true
+      // construction cost (not ~0 for a lazily-persisted frame).
+      val idx = trainIvf(e, nlist, iters); idx.lists.count(); idx
+    }
 
   /** Persist a trained IVF index as two parquet tables — the index
     * LIFECYCLE a serving deployment needs (build offline, ship the
@@ -1904,22 +1896,18 @@ object AnnIndex {
     * pattern): the cached full-corpus hierarchy with `dead` removed,
     * base edges persisted.
     */
-  private val compactedHnswCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, HnswIndex]]()
+  private val compactedHnswCache =
+    SessionCache.logged[String, HnswIndex](_ => "hnsw-compact")
   def compactedHnswFor(s: SparkSession, key: String, path: String,
       e: => DataFrame, dead: DataFrame => DataFrame): HnswIndex =
-    compactedHnswCache.synchronized {
-      compactedHnswCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(key,
-      timedBuild("hnsw-compact") {
-        val corpus = e
-        val idx = compactHnsw(hnswFor(s, path, corpus), dead(corpus))
-        val persisted = idx.copy(edges = idx.edges +
-          (0 -> idx.edges(0).persist(StorageLevel.MEMORY_AND_DISK)))
-        persisted.edges(0).count()
-        persisted
-      })
+    compactedHnswCache(s, key) {
+      val corpus = e
+      val idx = compactHnsw(hnswFor(s, path, corpus), dead(corpus))
+      val persisted = idx.copy(edges = idx.edges +
+        (0 -> idx.edges(0).persist(StorageLevel.MEMORY_AND_DISK)))
+      persisted.edges(0).count()
+      persisted
+    }
 
   /** The COMPOSED HNSW lifecycle (e38 — e25's end-to-end bar for the
     * hierarchy): reuse the session's e35 fold (train → ingest → fold,
@@ -1929,28 +1917,24 @@ object AnnIndex {
     * every stage the same code path its own query serves. Returns
     * (loaded index, survivor corpus).
     */
-  private val lifecycleHnswCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, (HnswIndex, DataFrame)]]()
+  private val lifecycleHnswCache =
+    SessionCache.logged[String, (HnswIndex, DataFrame)](_ => "hnsw-lifecycle")
   def lifecycleHnswFor(s: SparkSession, key: String, path: String,
       e: => DataFrame, arrivals: DataFrame => DataFrame,
       dead: DataFrame => DataFrame): (HnswIndex, DataFrame) =
-    lifecycleHnswCache.synchronized {
-      lifecycleHnswCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(key,
-      timedBuild("hnsw-lifecycle") {
-        val (folded, corpusPlus) =
-          foldedHnswFor(s, s"$path|e35", path, e, arrivals)
-        val compacted = compactHnsw(folded, dead(corpusPlus))
-        val dir = scratchDir("hnsw_lc_")
-        saveHnsw(compacted, dir)
-        val loaded = loadHnsw(s, dir)
-        val persisted = loaded.copy(edges = loaded.edges +
-          (0 -> loaded.edges(0).persist(StorageLevel.MEMORY_AND_DISK)))
-        persisted.edges(0).count()
-        (persisted,
-          corpusPlus.join(dead(corpusPlus), Seq("vec_id"), "left_anti"))
-      })
+    lifecycleHnswCache(s, key) {
+      val (folded, corpusPlus) =
+        foldedHnswFor(s, s"$path|e35", path, e, arrivals)
+      val compacted = compactHnsw(folded, dead(corpusPlus))
+      val dir = scratchDir("hnsw_lc_")
+      saveHnsw(compacted, dir)
+      val loaded = loadHnsw(s, dir)
+      val persisted = loaded.copy(edges = loaded.edges +
+        (0 -> loaded.edges(0).persist(StorageLevel.MEMORY_AND_DISK)))
+      persisted.edges(0).count()
+      (persisted,
+        corpusPlus.join(dead(corpusPlus), Seq("vec_id"), "left_anti"))
+    }
 
   /** The DELETE half of the index lifecycle (e18, VERDICT r11 #5) —
     * build (e6) / persist+load (e15) / append under frozen bounds (e14)
@@ -2074,13 +2058,9 @@ object AnnIndex {
     */
   def lshFor(s: SparkSession, path: String, e: => DataFrame,
       tables: Int): DataFrame =
-    lshCache.synchronized {
-      lshCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, tables),
-      timedBuild(s"lsh:$tables") {
-        val b = buildLsh(e, tables); b.count(); b
-      })
+    lshCache(s, (path, tables)) {
+      val b = buildLsh(e, tables); b.count(); b
+    }
 
   /** The shared NSW graph index for `path`'s embeddings in session `s`
     * (e26's search and e27's recall curve walk one frozen graph). The
@@ -2090,70 +2070,60 @@ object AnnIndex {
     */
   def nswFor(s: SparkSession, path: String, e: => DataFrame,
       m: Int, tables: Int): NswIndex =
-    nswCache.synchronized {
-      nswCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, m, tables),
-      timedBuild(s"nsw:$m:$tables") {
-        trainNsw(e, lshFor(s, path, e, tables), m)
-      })
+    nswCache(s, (path, m, tables)) {
+      trainNsw(e, lshFor(s, path, e, tables), m)
+    }
 
-  private val hnswCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int), HnswIndex]]()
+  private val hnswCache = SessionCache.logged[(String, Int, Int), HnswIndex] {
+    case (_, m0, tables) => s"hnsw:$m0:$tables"
+  }
 
   /** The shared HNSW hierarchy for `path`'s embeddings in session `s`
     * (e30's search, e27's hnsw curve rows, and e32's clustered lane all
     * walk one frozen hierarchy per corpus). Same shared [[lshFor]]
-    * banding as the flat index. `path` must encode any corpus DERIVATION
-    * (e32 keys its clustered lane as `path|clustered`) — the by-name
-    * frame is never evaluated on a cache hit.
+    * banding as the flat index. `path` is the [[SessionCache]] key: it
+    * encodes any corpus derivation (e32 keys its clustered lane as
+    * `path|clustered`).
     */
   def hnswFor(s: SparkSession, path: String, e: => DataFrame,
       m0: Int = 8, tables: Int = 4): HnswIndex =
-    hnswCache.synchronized {
-      hnswCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, m0, tables),
-      timedBuild(s"hnsw:$m0:$tables") {
-        trainHnsw(e, lshFor(s, path, e, tables), m0)
-      })
+    hnswCache(s, (path, m0, tables)) {
+      trainHnsw(e, lshFor(s, path, e, tables), m0)
+    }
 
-  private val foldedHnswCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, HnswIndex]]()
+  private val foldedHnswCache =
+    SessionCache.logged[(String, Int, Int, Int, Int), HnswIndex] {
+      case (_, deg, _, _, cap) => s"hnsw-fold:$deg:$cap"
+    }
 
   /** The session's FOLDED hierarchy for e35: the cached full-corpus
     * hierarchy ([[hnswFor]]) with `arrivals`' streamed edge lists
     * ([[graft.streaming.EventStream.hnswIngest]]) folded into the base
     * graph ([[foldHnswArrivals]]), base edges persisted so the fold's
     * ingest search runs once per session. `key` must encode the
-    * arrival derivation (the hnswFor contract — by-name frames are
-    * never evaluated on a cache hit); the numeric fold parameters are
-    * appended to the cache key HERE (ADVICE r18), so two calls sharing
-    * a caller key but differing in deg/ef/beamRounds/cap build
+    * arrival derivation (the [[SessionCache]] rule); the numeric fold
+    * parameters join it in the cache key HERE (ADVICE r18), so two calls
+    * sharing a caller key but differing in deg/ef/beamRounds/cap build
     * separate folds instead of silently sharing the first.
     */
   def foldedHnswFor(s: SparkSession, key: String, path: String,
       e: => DataFrame, arrivals: DataFrame => DataFrame,
       deg: Int = 4, ef: Int = 8, beamRounds: Int = 3,
       cap: Int = 16): (HnswIndex, DataFrame) =
-    foldedHnswCache.synchronized {
-      foldedHnswCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(s"$key|$deg|$ef|$beamRounds|$cap",
-      timedBuild(s"hnsw-fold:$deg:$cap") {
-        val corpus = e
-        val idx = hnswFor(s, path, corpus)
-        val arr = arrivals(corpus)
-        val ingest = graft.streaming.EventStream.hnswIngest(
-          idx, corpus, arr, deg, ef, beamRounds)
-        val folded = foldHnswArrivals(idx,
-          corpus.select(col("vec_id"), col("embedding")).unionByName(arr),
-          arr, ingest, cap)
-        val persisted = folded.copy(edges = folded.edges +
-          (0 -> folded.edges(0).persist(StorageLevel.MEMORY_AND_DISK)))
-        persisted.edges(0).count()
-        persisted
-      }) match {
+    foldedHnswCache(s, (key, deg, ef, beamRounds, cap)) {
+      val corpus = e
+      val idx = hnswFor(s, path, corpus)
+      val arr = arrivals(corpus)
+      val ingest = graft.streaming.EventStream.hnswIngest(
+        idx, corpus, arr, deg, ef, beamRounds)
+      val folded = foldHnswArrivals(idx,
+        corpus.select(col("vec_id"), col("embedding")).unionByName(arr),
+        arr, ingest, cap)
+      val persisted = folded.copy(edges = folded.edges +
+        (0 -> folded.edges(0).persist(StorageLevel.MEMORY_AND_DISK)))
+      persisted.edges(0).count()
+      persisted
+    } match {
       case idx => (idx,
         e.select(col("vec_id"), col("embedding")).unionByName(arrivals(e)))
     }
@@ -2163,72 +2133,55 @@ object AnnIndex {
     */
   def pqFor(s: SparkSession, path: String, e: => DataFrame,
       m: Int, ksub: Int, iters: Int): PqIndex =
-    pqCache.synchronized {
-      pqCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, m, ksub, iters),
-      timedBuild(s"pq:$m:$ksub:$iters") {
-        val idx = trainPq(e, m, ksub, iters); idx.codes.count(); idx
-      })
+    pqCache(s, (path, m, ksub, iters)) {
+      val idx = trainPq(e, m, ksub, iters); idx.codes.count(); idx
+    }
 
-  private val sq8Cache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, Sq8Index]]()
+  private val sq8Cache = SessionCache.logged[String, Sq8Index](_ => "sq8")
 
-  private val sq8IncrCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, Sq8Index]]()
+  private val sq8IncrCache = SessionCache.logged[String, Sq8Index](_ => "sq8incr")
 
   /** The shared INCREMENTAL SQ8 index for `key` in session `s`: bounds
     * trained on `base` only, `arrivals` encoded under them, one persisted
     * union (e14's serve-side state). `key` must encode the SPLIT as well
-    * as the data path — the by-name frames are never evaluated on a cache
-    * hit, so a path-only key would silently hand a different base/arrival
-    * split the first split's quantizer (the other caches key on their
-    * build params for the same reason).
+    * as the data path (the [[SessionCache]] rule): a path-only key would
+    * silently hand a different base/arrival split the first split's
+    * quantizer.
     */
   def sq8IncrFor(s: SparkSession, key: String,
       base: => DataFrame, arrivals: => DataFrame): Sq8Index =
-    sq8IncrCache.synchronized {
-      sq8IncrCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(key,
-      timedBuild("sq8incr") {
-        val idx = trainSq8Incremental(base, arrivals)
-        val persisted = idx.copy(codes =
-          idx.codes.persist(StorageLevel.MEMORY_AND_DISK))
-        persisted.codes.count()
-        persisted
-      })
+    sq8IncrCache(s, key) {
+      val idx = trainSq8Incremental(base, arrivals)
+      val persisted = idx.copy(codes =
+        idx.codes.persist(StorageLevel.MEMORY_AND_DISK))
+      persisted.codes.count()
+      persisted
+    }
 
   /** The shared SQ8 index for `path`'s embeddings in session `s`. */
   def sq8For(s: SparkSession, path: String, e: => DataFrame): Sq8Index =
-    sq8Cache.synchronized {
-      sq8Cache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(path,
-      timedBuild("sq8") {
-        val idx = trainSq8(e); idx.codes.count(); idx
-      })
+    sq8Cache(s, path) {
+      val idx = trainSq8(e); idx.codes.count(); idx
+    }
 
   /** The shared composed IVF+PQ index for `path`'s embeddings in session
     * `s`. Reuses the session's cached IVF quantizer and PQ codebook (the
     * same instances e6/e7 and e9/e10 search), so composing costs one
     * corpus-sized (vec_id → cid, codes) join, materialized once — the
-    * stored-index build a real system would run at ingest.
+    * stored-index build a real system would run at ingest. The two
+    * parts are looked up before the composed cache so its build time
+    * carries the join alone.
     */
   def ivfPqFor(s: SparkSession, path: String, e: => DataFrame,
-      nlist: Int, ivfIters: Int, m: Int, ksub: Int, pqIters: Int): IvfPqIndex =
-    ivfPqCache.synchronized {
-      ivfPqCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, nlist, ivfIters, m, ksub, pqIters), {
-      val ivf = ivfFor(s, path, e, nlist, ivfIters)
-      val pq = pqFor(s, path, e, m, ksub, pqIters)
-      timedBuild(s"ivfpq:$nlist:$m:$ksub") {
-        val coded = pq.codes.select(col("vec_id"), col("codes"))
-          .join(ivf.lists.select(col("vec_id"), col("cid")), "vec_id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        coded.count()
-        IvfPqIndex(ivf, pq, coded)
-      }
-    })
+      nlist: Int, ivfIters: Int, m: Int, ksub: Int, pqIters: Int): IvfPqIndex = {
+    val ivf = ivfFor(s, path, e, nlist, ivfIters)
+    val pq = pqFor(s, path, e, m, ksub, pqIters)
+    ivfPqCache(s, (path, nlist, ivfIters, m, ksub, pqIters)) {
+      val coded = pq.codes.select(col("vec_id"), col("codes"))
+        .join(ivf.lists.select(col("vec_id"), col("cid")), "vec_id")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      coded.count()
+      IvfPqIndex(ivf, pq, coded)
+    }
+  }
 }

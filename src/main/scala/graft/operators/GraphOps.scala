@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionCache
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -543,13 +544,9 @@ object GraphOps {
     * five supersteps re-scan it (from cache instead of re-deriving;
     * ReuseExchange only collapses duplicates inside ONE execution).
     */
-  private val graphCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, (DataFrame, DataFrame)]]()
+  private val graphCache = SessionCache[String, (DataFrame, DataFrame)]()
   private def copurchase(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    graphCache.synchronized {
-      graphCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(d, {
+    graphCache(s, d) {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val e = li.as("a").join(li.as("b"), "ok")
@@ -570,7 +567,7 @@ object GraphOps {
       val ew = withOutdeg(e).repartition(col("dst")).persist()
       val nodes = li.select(col("pk").as("node")).distinct().persist()
       (ew, nodes)
-    })
+    }
 
   /** Triangle participation per node over a symmetric edge list (g4):
     * canonical id-orientation (src < dst) makes each undirected edge one
@@ -712,8 +709,7 @@ object GraphOps {
     * pre-partitioned on dst so g5's shared-neighbor pivot joins off the
     * cache exchange-free.
     */
-  private val strongCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, DataFrame]]()
+  private val strongCache = SessionCache[String, DataFrame]()
 
   /** The weighted strong graph backing [[strongCopurchase]]: same
     * threshold, but the distinct-order support count survives as the
@@ -724,10 +720,7 @@ object GraphOps {
     * consumer costs no second corpus scan or cache copy.
     */
   private[graft] def strongWeighted(s: SparkSession, d: String): DataFrame =
-    strongCache.synchronized {
-      strongCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(d, {
+    strongCache(s, d) {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.as("a").join(li.as("b"), "ok")
@@ -737,7 +730,7 @@ object GraphOps {
         .agg(count_distinct(col("ok")).as("orders"))
         .filter(col("orders") >= 2)
         .repartition(col("dst")).persist()
-    })
+    }
 
   private def strongCopurchase(s: SparkSession, d: String): DataFrame =
     strongWeighted(s, d).select(col("src"), col("dst"))
@@ -808,20 +801,16 @@ object GraphOps {
     * hub side joins/aggregates exchange-free; the part-side round pays
     * the one exchange the alternation forces).
     */
-  private val bipartiteCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, DataFrame]]()
+  private val bipartiteCache = SessionCache[String, DataFrame]()
   private def bipartite(s: SparkSession, d: String): DataFrame =
-    bipartiteCache.synchronized {
-      bipartiteCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(d, {
+    bipartiteCache(s, d) {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("part"))
       val or = Tables.orders(s, d)
         .select(col("o_orderkey").as("ok"), col("o_custkey").as("cust"))
       li.join(or, "ok").select(col("cust"), col("part"))
         .distinct().repartition(col("cust")).persist()
-    })
+    }
 
   /** One HITS half-round as a DuckDB CTE quadruple (raw inflow sum →
     * max-normalize to e6, authorities then hubs) — kept beside the

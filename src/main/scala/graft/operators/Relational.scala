@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionCache
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -327,14 +328,10 @@ object Relational {
     * sfDir); quantity is cent-cast on write so the read side does no
     * decimal work.
     */
-  private val bucketedCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, Boolean]]()
+  private val bucketedCache = SessionCache[String, Boolean]()
   private[graft] def bucketedTablesFor(s: SparkSession, d: String,
       ordersTbl: String, lineitemTbl: String): Unit =
-    bucketedCache.synchronized {
-      bucketedCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(d, {
+    bucketedCache(s, d) {
       // The in-memory catalog dies with the JVM but the warehouse dirs
       // persist — a fresh session's saveAsTable then refuses the orphan
       // LOCATION. Drop both ways: the catalog entry (same-session
@@ -363,7 +360,7 @@ object Relational {
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(lineitemTbl)
       true
-    })
+    }
 
   private val assetDirCache =
     scala.collection.concurrent.TrieMap.empty[String, String]

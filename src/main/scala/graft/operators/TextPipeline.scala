@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionCache
 import graft.functions.TextFunctions
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -512,37 +513,30 @@ object TextPipeline {
   // pair detection is the expensive stage (corpus scan + band shuffle +
   // verify join) and THREE queries consume its output (d5 the pairs, d7
   // the resolved labels, d10 the survivorship policy) — a production
-  // dedup computes it once, not once per report. WeakHashMap on the
-  // session so a stopped session's state is collectable; the pair table
+  // dedup computes it once, not once per report. The pair table
   // persists (it holds only near-dup docs — orders of magnitude smaller
   // than the corpus), and dupClusters' output already materializes via
   // driver union-find or localCheckpoint.
-  private val pairCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Double), DataFrame]]()
-  private val labelCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Double), DataFrame]]()
+  private val pairCache = SessionCache[(String, Double), DataFrame]()
+  private val labelCache = SessionCache[(String, Double), DataFrame]()
 
   /** Per-(session, path, τ) near-dup pair table, computed and persisted
     * once (columns: doc_a, doc_b, common, jaccard).
     */
   private[graft] def nearDupPairsFor(s: SparkSession, path: String,
       docs: => DataFrame, minJaccard: Double): DataFrame =
-    pairCache.synchronized {
-      pairCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, minJaccard),
-      nearDupPairs(docs, minJaccard).persist())
+    pairCache(s, (path, minJaccard)) {
+      nearDupPairs(docs, minJaccard).persist()
+    }
 
   /** Per-(session, path, τ) resolved cluster labels over the shared pair
     * table, computed once (columns: node, lbl).
     */
   private[graft] def dupLabelsFor(s: SparkSession, path: String,
       docs: => DataFrame, minJaccard: Double): DataFrame =
-    labelCache.synchronized {
-      labelCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((path, minJaccard),
-      dupClusters(nearDupPairsFor(s, path, docs, minJaccard)))
+    labelCache(s, (path, minJaccard)) {
+      dupClusters(nearDupPairsFor(s, path, docs, minJaccard))
+    }
 
   /** Per-JVM scratch parent for the synthetic PPM asset corpus; removed
     * at JVM exit (same discipline as Relational's csvScratchRoot).
@@ -2035,7 +2029,9 @@ object TextPipeline {
     * kernel is the codegen'd [[graft.functions.TokenRepetitionStats]]
     * expression — a higher-order-function formulation (array_sort +
     * aggregate() folds) measured 3× slower because HOFs run interpreted
-    * (X13Probe).
+    * (the X13Probe main, deleted after commit 85d5524, where
+    * `git show 85d5524:src/main/scala/graft/experiment/X13Probe.scala`
+    * recovers it).
     * Thresholds sit ≥500 quanta from every observed value at sf0.01 AND
     * sf0.1, with both classes populated.
     */
@@ -3195,23 +3191,20 @@ object TextPipeline {
     * table, x29 the encoded vocab; one training run serves both (the
     * copurchase/AnnIndex build-once pattern).
     */
-  private val bpeCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int),
-      (Seq[(Int, String, String, String, Long)], DataFrame)]]()
+  // Through the shared build log (AnnIndex.buildLog): training runs
+  // once in Bench's untimed warmup, and its cost is REPORTED in
+  // index_build_sec instead of hiding — the r9 ANN lesson applied.
+  private val bpeCache = SessionCache.logged[(String, Int),
+      (Seq[(Int, String, String, String, Long)], DataFrame)] {
+    case (_, k) => s"bpe:$k"
+  }
   private[graft] def bpeTrainedFor(s: SparkSession, d: String, k: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) =
-    bpeCache.synchronized {
-      bpeCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate((d, k),
-      // Through the shared build log (AnnIndex.buildLog): training runs
-      // once in Bench's untimed warmup, and its cost is REPORTED in
-      // index_build_sec instead of hiding — the r9 ANN lesson applied.
-      AnnIndex.timedBuild(s"bpe:$k") {
-        val words = corpusWords(Tables.documents(s, d))
-          .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-        bpeTrain(words, k)
-      })
+    bpeCache(s, (d, k)) {
+      val words = corpusWords(Tables.documents(s, d))
+        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+      bpeTrain(words, k)
+    }
 
   /** The corpus word stream x28/x29 tokenize over: the [a-z]+ arm of
     * x4's pre-tokenizer on lowercased text, one row per OCCURRENCE.
@@ -3441,36 +3434,28 @@ object TextPipeline {
   }
 
   /** Session-cached x51 trajectory (4 Viterbi passes — built once). */
-  private val uniSchedCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, DataFrame]]()
+  private val uniSchedCache =
+    SessionCache.logged[String, DataFrame](_ => "unigram-schedule")
   private[graft] def unigramScheduleFor(s: SparkSession, d: String)
       : DataFrame =
-    uniSchedCache.synchronized {
-      uniSchedCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(d,
-      AnnIndex.timedBuild("unigram-schedule") {
-        val t = unigramPruneSchedule(Tables.documents(s, d))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        t.count()
-        t
-      })
+    uniSchedCache(s, d) {
+      val t = unigramPruneSchedule(Tables.documents(s, d))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      t.count()
+      t
+    }
 
   /** Session-cached unigram training per corpus — x49 reads the
     * encoder, x50 compares it against the SAME corpus's BPE vocab (the
     * bpeTrainedFor pattern, cost reported through the shared build log).
     */
-  private val unigramCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, (DataFrame, DataFrame)]]()
+  private val unigramCache =
+    SessionCache.logged[String, (DataFrame, DataFrame)](_ => "unigram")
   private[graft] def unigramTrainedFor(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    unigramCache.synchronized {
-      unigramCache.computeIfAbsent(s,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }.getOrElseUpdate(d,
-      AnnIndex.timedBuild("unigram") {
-        unigramTrain(Tables.documents(s, d))
-      })
+    unigramCache(s, d) {
+      unigramTrain(Tables.documents(s, d))
+    }
 
   /** x28's DuckDB oracle: the SAME k-round fixpoint unrolled as CTEs
     * (g1's pattern). The greedy non-overlapping rewrite replays as a

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType}
 
 /** SQL surface for the library's native Catalyst kernels. Enable with
   * `spark.sql.extensions=graft.plans.GraftExtensions` (cluster config) or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` — after
+  * `withExtensions(new GraftExtensions)` on a session builder — after
   * which `spark.sql` users reach the same codegen'd/Tungsten operators
   * the DataFrame surface uses internally:
   *

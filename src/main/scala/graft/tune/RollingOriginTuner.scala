@@ -25,11 +25,10 @@ import org.apache.spark.sql.SparkSession
   * K·19-fold within a task, and tasks are farmed with `spark.parallelize`
   * over a broadcast design. Per-origin RMSE arrays are folded in origin
   * order — deliberately NOT reduceByKey, which would sum doubles in
-  * shuffle-arrival order and drift a ulp from the sequential path — by
-  * default ON THE EXECUTORS (segment-partitioned, origin-sorted sequential
-  * fold; the driver collects only K × |α| summed arrays), with the
-  * historical collect-everything driver fold behind `driverFold`
-  * (SparkParitySpec pins all three paths bit-identical).
+  * shuffle-arrival order and drift a ulp from the sequential path — ON
+  * THE EXECUTORS (segment-partitioned, origin-sorted sequential fold; the
+  * driver collects only K × |α| summed arrays). SparkParitySpec pins the
+  * distributed and sequential paths bit-identical.
   */
 object RollingOriginTuner {
 
@@ -37,8 +36,8 @@ object RollingOriginTuner {
 
   final case class Grid(alphas: Seq[Double], lambdas: Seq[Double])
 
-  /** Driver/sequential fold: group per-origin RMSE arrays by (equation, α)
-    * and sum them origin-ascending.
+  /** Sequential fold: group per-origin RMSE arrays by (equation, α) and
+    * sum them origin-ascending.
     */
   private def foldInOriginOrder(
       results: Seq[((Int, Double, Int), Array[Double])]): Map[(Int, Double), Array[Double]] =
@@ -53,7 +52,7 @@ object RollingOriginTuner {
   /** Executor-side segment fold over a partition whose composite keys
     * ((equation, α), origin) are sorted: each segment's origins arrive
     * consecutively ascending, so a single sequential pass reproduces the
-    * driver fold's summation order exactly.
+    * sequential fold's summation order exactly.
     */
   private def foldSortedSegments(
       it: Iterator[(((Int, Double), Int), Array[Double])]): Iterator[((Int, Double), Array[Double])] = {
@@ -117,7 +116,6 @@ object RollingOriginTuner {
       names: IndexedSeq[String] = IndexedSeq.empty,
       spark: Option[SparkSession] = None,
       tol: Double = 1e-9,
-      driverFold: Boolean = false,
       caretSubmodels: Boolean = false): IndexedSeq[Best] = {
     val design = VarDesign.build(y, p, names, intercept = false)
     val t = design.tReduced
@@ -163,36 +161,29 @@ object RollingOriginTuner {
     // Per-(equation, α) RMSE sums, always folded in ORIGIN ORDER — a
     // reduceByKey would sum doubles in shuffle-arrival order and drift a
     // ulp from the sequential path (SparkParitySpec pins exact parity).
-    // Distributed default: the fold itself runs on EXECUTORS — composite
-    // keys ((j, α), origin) are partitioned by segment and sorted within
+    // Distributed, the fold itself runs on EXECUTORS — composite keys
+    // ((j, α), origin) are partitioned by segment and sorted within
     // partitions, so each segment's origins arrive consecutively ascending
     // and fold sequentially; the driver then collects only K × |α| summed
     // arrays (~1 MB at the reference grid) instead of origins × K × |α|
-    // (~11 MB there, ~GB at a 100× scale-up). `driverFold = true` keeps the
-    // historical collect-then-fold path; both produce bit-identical sums
-    // (same fold order, different host).
+    // (~11 MB there, ~GB at a 100× scale-up).
     val perAlpha: Map[(Int, Double), Array[Double]] = spark match {
       case Some(s) =>
         val bc = s.sparkContext.broadcast(
           (design.z.toArray, design.z.rows, design.z.cols,
             design.yP.toArray, design.yP.rows, design.yP.cols))
         val slices = math.min(origins.length, s.sparkContext.defaultParallelism * 4)
-        val perOrigin = s.sparkContext.parallelize(origins, slices)
+        val segs = design.n * grid.alphas.length
+        val parts = math.max(1, math.min(segs, s.sparkContext.defaultParallelism))
+        val folded = s.sparkContext.parallelize(origins, slices)
           .flatMap { o =>
             val (za, zr, zc, ya, yr, yc) = bc.value
             runOrigin(new DenseMatrix(zr, zc, za), new DenseMatrix(yr, yc, ya))(o)
           }
-        val folded =
-          if (driverFold) foldInOriginOrder(perOrigin.collect().toSeq)
-          else {
-            val segs = design.n * grid.alphas.length
-            val parts = math.max(1, math.min(segs, s.sparkContext.defaultParallelism))
-            perOrigin
-              .map { case ((j, a, o), rmse) => (((j, a), o), rmse) }
-              .repartitionAndSortWithinPartitions(new SegmentPartitioner(parts))
-              .mapPartitions(foldSortedSegments, preservesPartitioning = true)
-              .collect().toMap
-          }
+          .map { case ((j, a, o), rmse) => (((j, a), o), rmse) }
+          .repartitionAndSortWithinPartitions(new SegmentPartitioner(parts))
+          .mapPartitions(foldSortedSegments, preservesPartitioning = true)
+          .collect().toMap
         bc.destroy()
         folded
       case None =>

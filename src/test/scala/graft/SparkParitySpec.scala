@@ -64,13 +64,6 @@ class SparkParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val dist = RollingOriginTuner.tune(y, p = 1, initWindow = 30, horizon = 4,
       grid, IndexedSeq("a", "b"), spark = Some(spark))
     assert(local == dist)
-    // The historical driver-side fold must stay bit-identical too: both
-    // distributed paths sum in origin order, they just fold on different
-    // hosts.
-    val distDriverFold = RollingOriginTuner.tune(y, p = 1, initWindow = 30,
-      horizon = 4, grid, IndexedSeq("a", "b"), spark = Some(spark),
-      driverFold = true)
-    assert(local == distDriverFold)
   }
 
   test("M3 EnetVar: Spark per-equation fits == sequential, exactly") {
