@@ -46,6 +46,14 @@ object AnnIndex {
   private[operators] def dot(a: String, b: String): Column =
     kcol(graft.functions.VecDot(kexpr(col(a)), kexpr(col(b))))
 
+  /** The e6-rounded cosine of two embedding columns — the one rounding
+    * law every ANN oracle hash depends on (the DuckDB replays spell the
+    * same `round(dot / (√·√) · 1e6)`): each norm is folded per pair,
+    * in the same [[dot]] kernel as the numerator.
+    */
+  private[operators] def cosineE6(a: String, b: String): Column =
+    round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))) * 1e6).cast("long")
+
   /** Exact integer squared distance of two e6-quantized unit vectors via
     * the native [[graft.functions.LongSqDist]] kernel (round 10 — same
     * replacement story as [[dot]]; integer arithmetic, exact).
@@ -237,18 +245,10 @@ object AnnIndex {
     */
   private[operators] def probedScoresRanked(idx: IvfIndex, qPred: Column,
       nprobe: Int, candidates: Option[DataFrame]): DataFrame = {
-    val s = idx.lists.sparkSession
-    import s.implicits._
-    val cdist = sqDist("q_unit", "cent")
     val q = idx.lists.filter(qPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("unit").as("q_unit"))
-    val probed = q.crossJoin(broadcast(idx.cents.toDF("cid", "cent")))
-      .select(col("q_id"), col("q_emb"), col("cid"), cdist.as("cdist"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cdist"), col("cid"))))
-      .filter(col("crank") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("cid"), col("crank"))
+    val probed = probeLists(idx, q, nprobe, "q_emb")
     // Filtered search (e16): the allow-set semi-join restricts the
     // CANDIDATE side only — queries still come from the full index, and
     // the restriction applies PRE-ranking (inside the probed lists), so
@@ -261,10 +261,26 @@ object AnnIndex {
     probed.join(candLists, "cid")
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(dot("q_emb", "embedding") /
-          (sqrt(dot("q_emb", "q_emb")) * sqrt(dot("embedding", "embedding"))) * 1e6)
-          .cast("long").as("cosine_e6"),
-        col("crank"))
+        cosineE6("q_emb", "embedding").as("cosine_e6"), col("crank"))
+  }
+
+  /** The IVF probe every IVF-family search shares: each query's `nprobe`
+    * min-L2 centroids (integer distances in e6 unit space, cid ties), by
+    * one rank window over nlist rows per query — centroid-bounded, not
+    * corpus-bounded. `q` carries (q_id, q_unit) plus the `carry`
+    * columns. Columns: q_id, carry…, cid, crank (1-based probe rank).
+    */
+  private def probeLists(ivf: IvfIndex, q: DataFrame, nprobe: Int,
+      carry: String*): DataFrame = {
+    val s = q.sparkSession
+    import s.implicits._
+    val keep = (col("q_id") +: carry.map(col)) :+ col("cid")
+    q.crossJoin(broadcast(ivf.cents.toDF("cid", "cent")))
+      .select(keep :+ sqDist("q_unit", "cent").as("cdist"): _*)
+      .withColumn("crank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("cdist"), col("cid"))))
+      .filter(col("crank") <= nprobe)
+      .select(keep :+ col("crank"): _*)
   }
 
   /** Range (threshold) search over a trained IVF index: every candidate
@@ -283,17 +299,17 @@ object AnnIndex {
     probedScores(idx, qPred, nprobe, candidates)
       .filter(col("cosine_e6") >= tauE6)
 
-  /** Build the multi-table hyperplane LSH index: one bucket per (vector,
-    * table). Columns: vec_id, embedding, t, bucket.
-    */
   /** Hyperplanes per LSH table — the bucket is this many bits wide.
-    * Shared by [[buildLsh]]'s projection/packing and
-    * [[lshScoresMultiProbe]]'s Hamming-1 masks so the probe set cannot
+    * Shared by [[buildLsh]]'s projection/packing and the multi-probe
+    * Hamming-1 masks in [[lshProbeScores]] so the probe set cannot
     * silently desynchronize from the bucket layout (self-review r12);
     * the DuckDB oracles hardcode the same 4 in their replay text.
     */
   private[graft] val LshPlanesPerTable = 4
 
+  /** Build the multi-table hyperplane LSH index: one bucket per (vector,
+    * table). Columns: vec_id, embedding, t, bucket.
+    */
   def buildLsh(e: DataFrame, tables: Int, persist: Boolean = true): DataFrame = {
     // Pre-explode repartition, same reasoning as shingleDigests: the
     // one-file corpus scan would otherwise run the tables×4-plane
@@ -339,20 +355,8 @@ object AnnIndex {
     * would pay a per-query sort whose output is discarded). Columns:
     * q_id, vec_id, cosine.
     */
-  def lshScores(buckets: DataFrame, qPred: Column): DataFrame = {
-    val q = buckets.filter(qPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("t").as("q_t"), col("bucket").as("q_bucket"))
-    buckets.join(broadcast(q),
-        col("t") === col("q_t") && col("bucket") === col("q_bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_emb"), col("vec_id"), col("embedding"))
-      .distinct()
-      .select(col("q_id"), col("vec_id"),
-        (dot("q_emb", "embedding") /
-          (sqrt(dot("q_emb", "q_emb")) * sqrt(dot("embedding", "embedding"))))
-          .as("cosine"))
-  }
+  def lshScores(buckets: DataFrame, qPred: Column): DataFrame =
+    lshProbeScores(buckets, qPred, multiProbe = false)
 
   /** Multi-probe variant of [[lshScores]] (e21): each query probes its
     * own bucket PLUS the four buckets at Hamming distance 1 (XOR with
@@ -364,16 +368,30 @@ object AnnIndex {
     * shape. Candidates dedupe across probes and tables before the exact
     * rescore, same as the single-probe path.
     */
-  def lshScoresMultiProbe(buckets: DataFrame, qPred: Column): DataFrame = {
+  def lshScoresMultiProbe(buckets: DataFrame, qPred: Column): DataFrame =
+    lshProbeScores(buckets, qPred, multiProbe = true)
+
+  /** The join-dedup-score body both LSH scorers share: the broadcast
+    * query side's probe buckets equi-join the bucket table on (t, bucket),
+    * candidates dedupe across probes and tables, then score on the exact
+    * (unrounded) cosine. Only the multi-probe side explodes its probes;
+    * the own-bucket side joins on the query's bucket directly.
+    */
+  private def lshProbeScores(buckets: DataFrame, qPred: Column,
+      multiProbe: Boolean): DataFrame = {
     val q = buckets.filter(qPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("t").as("q_t"), col("bucket").as("q_bucket"))
-      .select(col("q_id"), col("q_emb"), col("q_t"), col("q_bucket"),
-        explode(array((0L +: (0 until LshPlanesPerTable)
-          .map(1L << _)).map(lit(_)): _*)).as("fm"))
-      .withColumn("q_probe", col("q_bucket").bitwiseXOR(col("fm")))
-    buckets.join(broadcast(q),
-        col("t") === col("q_t") && col("bucket") === col("q_probe"))
+    val (probes, probeCol) =
+      if (multiProbe)
+        (q.select(col("q_id"), col("q_emb"), col("q_t"), col("q_bucket"),
+            explode(array((0L +: (0 until LshPlanesPerTable)
+              .map(1L << _)).map(lit(_)): _*)).as("fm"))
+          .withColumn("q_probe", col("q_bucket").bitwiseXOR(col("fm"))),
+          "q_probe")
+      else (q, "q_bucket")
+    buckets.join(broadcast(probes),
+        col("t") === col("q_t") && col("bucket") === col(probeCol))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("q_emb"), col("vec_id"), col("embedding"))
       .distinct()
@@ -465,72 +483,110 @@ object AnnIndex {
         "src")
       .join(emb.select(col("vec_id").as("dst"), col("embedding").as("d_emb")),
         "dst")
-      .select(col("src"), col("dst"),
-        round(dot("s_emb", "d_emb") /
-          (sqrt(dot("s_emb", "s_emb")) * sqrt(dot("d_emb", "d_emb"))) * 1e6)
-          .cast("long").as("c6"))
+      .select(col("src"), col("dst"), cosineE6("s_emb", "d_emb").as("c6"))
   }
 
-  /** Exact e6-cosine of each (q_id, vec_id) candidate pair: candidates
-    * and queries are beam-sized (|Q|·ef·deg), so BOTH broadcast — the
-    * corpus-side join is a map-side hash probe; one corpus scan per
-    * scoring round, no shuffle of the big side.
-    */
-  private def scoreCands(e: DataFrame, q: DataFrame,
-      cand: DataFrame): DataFrame =
-    scoreCandsDistinct(e, q,
-      cand.select(col("q_id"), col("vec_id")).distinct())
-
-  /** [[scoreCands]] without an internal re-distinct (r19 job-count
-    * audit: a walk's wall time is ~all small-job overhead, 340 jobs for
-    * e27 at sf0.1). Row contract (r20): a DISTINCT candidate set yields
-    * distinct scored rows; duplicate candidate rows yield duplicate
-    * scored rows of the SAME set — the descent loops feed non-distinct
-    * expansions and rely on the dedup cut downstream. Same join shape,
-    * same expression, byte-identical scores.
-    */
-  private def scoreCandsDistinct(e: DataFrame, q: DataFrame,
-      candDistinct: DataFrame): DataFrame =
-    scoreCandsCols(e, q, candDistinct, Seq("q_id", "vec_id"))
-
-  /** [[scoreCandsDistinct]] carrying a SWEEP column through the scoring
-    * join (r20): a multi-sweep walk round scores the distinct
-    * (sweep, q_id, vec_id) triples directly instead of scoring distinct
-    * pairs and broadcasting them back into a join against the expansion
-    * — the join-back cost one BroadcastExchange AND a second execution
-    * of the expansion subtree (edges ⋈ broadcast(beam)) per superstep.
-    * A pair reached by k sweep points computes its dot product k times
-    * (beam-bounded rows, 64-mult each) — trivia beside the removed
-    * exchange; the (sweep, q_id, vec_id, cosine) SET is identical
+  /** Exact e6-cosine of each candidate row of `cand` (which carries
+    * q_id, vec_id and the other `keep` columns): candidates and queries
+    * are beam-sized (|Q|·ef·deg), so BOTH broadcast — the corpus-side
+    * join is a map-side hash probe; one corpus scan per scoring round,
+    * no shuffle of the big side. Columns: keep…, cosine_e6.
+    *
+    * No internal distinct (r19 job-count audit: a walk's wall time is
+    * ~all small-job overhead). Row contract (r20): a DISTINCT candidate
+    * set yields distinct scored rows; duplicate candidate rows yield
+    * duplicate scored rows of the SAME set — the descent loops feed
+    * non-distinct expansions and rely on the dedup cut downstream. A
+    * sweep walk keeps its sweep column here and scores the distinct
+    * (sweep, q_id, vec_id) triples directly: a pair reached by k sweep
+    * points computes its dot product k times (beam-bounded rows), and
+    * no scored pair set is broadcast back into a join against the
+    * expansion — the (sweep, q_id, vec_id, cosine) SET is the same
     * because the cosine is a pure function of the pair.
     */
-  private def scoreCandsSweep(e: DataFrame, q: DataFrame,
-      sweepCol: String, candDistinct: DataFrame): DataFrame =
-    scoreCandsCols(e, q, candDistinct, Seq(sweepCol, "q_id", "vec_id"))
-
-  private def scoreCandsCols(e: DataFrame, q: DataFrame,
-      candDistinct: DataFrame, keep: Seq[String]): DataFrame =
+  private def scoreCands(e: DataFrame, q: DataFrame, cand: DataFrame,
+      keep: Seq[String] = Seq("q_id", "vec_id")): DataFrame =
     e.select(col("vec_id"), col("embedding"))
-      .join(broadcast(candDistinct), Seq("vec_id"))
+      .join(broadcast(cand), Seq("vec_id"))
       .join(broadcast(q), Seq("q_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(keep.map(col) :+
-        (round(dot("q_emb", "embedding") /
-          (sqrt(dot("q_emb", "q_emb")) * sqrt(dot("embedding", "embedding")))
-          * 1e6).cast("long").as("cosine_e6")): _*)
+      .select(keep.map(col) :+ cosineE6("q_emb", "embedding").as("cosine_e6"): _*)
+
+  /** Every (query, entry seed) pair. Columns: q_id, vec_id. */
+  private def entryPairs(q: DataFrame, entries: Seq[Long]): DataFrame = {
+    val s = q.sparkSession
+    import s.implicits._
+    q.select(col("q_id")).crossJoin(broadcast(entries.toDF("vec_id")))
+  }
+
+  /** The beam walk every graph search shares: ONE pass serves a whole
+    * sweep, the beam carrying a `sweep` column with one group per
+    * (sweep value, query). beam₀ is the cut of `start` (q_id, vec_id,
+    * cosine_e6) under every sweep value; each of `rounds` supersteps
+    * expands EVERY beam member's neighbor list (one partition-pruned
+    * join of the broadcast beam against `edges` on `edgeKeys`, with
+    * "src" last), scores the distinct (sweep, q_id, vec_id) triples
+    * exactly, and keeps the best of beam ∪ candidates per group (ties by
+    * vec_id — deterministic, so the walk is a pure function of the frozen
+    * graph and the oracle replays it CTE-for-CTE): `fixedWidth` members,
+    * or, without one (an ef sweep), as many as the group's sweep value —
+    * one bounded aggregate at k = max(values) filtered to rank ≤ value,
+    * identical rows to per-value cuts.
+    *
+    * The cut is `dedup = true`: the pool is a union that can repeat a
+    * (vec_id, cosine) pair (a beam member re-found as another member's
+    * neighbor), and the bounded aggregate drops exact duplicates itself,
+    * so no per-round pool or expansion distinct shuffle exists (r20;
+    * identical kept pairs by construction). localCheckpoint per round is
+    * the g1/g13 lineage discipline: the beam is referenced twice per
+    * superstep (expansion + pool), which would otherwise re-execute its
+    * lineage 2^rounds times.
+    *
+    * The scored set starts as `startPairs` (q_id, vec_id) under every
+    * sweep value and accumulates as a PARTS LIST with ONE distinct at
+    * the end: a per-round `union().distinct()` nested r shuffles into
+    * the lineage, and every per-sweep n_scored reader re-executed the
+    * whole chain (r19 job-count audit). Each part derives from a
+    * checkpointed beam, so the single final distinct sees cheap inputs.
+    * Returns (beam: sweep, q_id, vec_id, cosine_e6; scored: sweep, q_id,
+    * vec_id).
+    */
+  private def beamWalk(e: DataFrame, q: DataFrame, edges: DataFrame,
+      edgeKeys: Seq[String], sweep: String, values: Seq[Int],
+      fixedWidth: Option[Int], start: DataFrame, startPairs: DataFrame,
+      rounds: Int): (DataFrame, DataFrame) = {
+    val s = e.sparkSession
+    import s.implicits._
+    val sweepDf = broadcast(values.toDF(sweep))
+    val group = Seq(sweep, "q_id", "vec_id")
+    def cut(pool: DataFrame): DataFrame = {
+      val top = topKCutBy(pool, Seq(sweep, "q_id"), "cosine_e6", "vec_id",
+        fixedWidth.getOrElse(values.max), ascending = false,
+        scoreName = "cosine_e6", idName = "vec_id", dedup = true)
+      (if (fixedWidth.isEmpty) top.filter(col("rank") <= col(sweep)) else top)
+        .select(group.map(col) :+ col("cosine_e6"): _*)
+    }
+    var beam = cut(start.crossJoin(sweepDf)).localCheckpoint()
+    var scoredParts = List[DataFrame](
+      startPairs.crossJoin(sweepDf).select(group.map(col): _*))
+    for (_ <- 1 to rounds) {
+      val cand = edges
+        .join(broadcast(beam.select(col(sweep), col("q_id"),
+          col("vec_id").as("src"))), edgeKeys)
+        .select(col(sweep), col("q_id"), col("dst").as("vec_id"))
+        .filter(col("vec_id") =!= col("q_id"))
+      val pool = beam.union(scoreCands(e, q, cand.distinct(), group))
+      beam = cut(pool).localCheckpoint()
+      scoredParts ::= cand
+    }
+    (beam, scoredParts.reduce(_ union _).distinct())
+  }
 
   /** Greedy beam search over the frozen graph: beam₀ = top-ef of the
-    * scored entry points; each of `rounds` supersteps expands EVERY beam
-    * member's neighbor list (one partition-pruned join of the broadcast
-    * beam against `edges`), scores the candidates exactly, and keeps the
-    * ef best of beam ∪ candidates (ties by vec_id — deterministic, so
-    * the walk is a pure function of the frozen graph and the oracle
-    * replays it CTE-for-CTE). localCheckpoint per round is the g1/g13
-    * lineage discipline: the beam is referenced twice per superstep
-    * (expansion + pool), which would otherwise re-execute its lineage
-    * 2^rounds times. Returns (final beam: q_id, vec_id, cosine_e6;
-    * scored set: q_id, vec_id — the distinct pairs whose distance was
-    * computed, e27's honest work measure).
+    * scored entry points, then `rounds` supersteps of [[beamWalk]].
+    * Returns (final beam: q_id, vec_id, cosine_e6; scored set: q_id,
+    * vec_id — the distinct pairs whose distance was computed, e27's
+    * honest work measure).
     */
   def nswBeam(idx: NswIndex, e: DataFrame, qPred: Column, ef: Int,
       rounds: Int): (DataFrame, DataFrame) = {
@@ -540,14 +596,10 @@ object AnnIndex {
 
   /** [[nswBeam]] for a whole ef SWEEP in ONE walk (e27): the beam
     * carries an `ef` column and every superstep expands/scores/cuts all
-    * sweep points together — candidates are deduped to distinct
-    * (q_id, vec_id) before scoring, so a pair's distance is computed
-    * once for the sweep, not once per ef (exactly the oracle's shape,
-    * and ~4× fewer Spark jobs than a per-ef loop — the r16 bench read
-    * the per-ef spelling at 10.4 s, the suite's most expensive query).
-    * The per-ef cut is one bounded aggregate at k = max(efs) filtered
-    * to rank ≤ ef — identical rows to per-ef cuts at k = ef. Returns
-    * (beam: ef, q_id, vec_id, cosine_e6; scored: ef, q_id, vec_id).
+    * sweep points together (~4× fewer Spark jobs than a per-ef loop —
+    * the r16 bench read the per-ef spelling at 10.4 s, the suite's most
+    * expensive query). Returns (beam: ef, q_id, vec_id, cosine_e6;
+    * scored: ef, q_id, vec_id).
     */
   def nswBeamMulti(idx: NswIndex, e: DataFrame, qPred: Column,
       efs: Seq[Int], rounds: Int): (DataFrame, DataFrame) =
@@ -564,84 +616,20 @@ object AnnIndex {
   def nswBeamFor(idx: NswIndex, e: DataFrame, q0: DataFrame,
       efs: Seq[Int], rounds: Int): (DataFrame, DataFrame) = {
     require(efs.nonEmpty, "nswBeamFor: efs must be non-empty")
-    val s = e.sparkSession
-    import s.implicits._
     // The query set is broadcast into EVERY scoring round; checkpointing
     // it once replaces rounds+1 re-executions of its source scan with
     // one tiny cached read (r19 guide-§2.4 job-count reduction).
     val q = q0.localCheckpoint()
-    val kMax = efs.max
-    val efDf = broadcast(efs.toDF("ef"))
-    // dedup = true: the pool below is a union that can repeat a
-    // (vec_id, cosine) pair (a beam member re-found as another member's
-    // neighbor); the bounded aggregate now drops exact duplicates
-    // itself, so the per-round `pool.distinct()` shuffle — one whole
-    // Exchange + AQE job per superstep whose only purpose was dup
-    // removal — is gone (r20; identical kept pairs by construction).
-    def cut(pool: DataFrame): DataFrame =
-      topKCutBy(pool, Seq("ef", "q_id"), "cosine_e6", "vec_id", kMax,
-        ascending = false, scoreName = "cosine_e6", idName = "vec_id",
-        dedup = true)
-        .filter(col("rank") <= col("ef"))
-        .select(col("ef"), col("q_id"), col("vec_id"), col("cosine_e6"))
-    val entryPairs = q.select(col("q_id"))
-      .crossJoin(broadcast(idx.entries.toDF("vec_id")))
-    val entryScored = scoreCandsDistinct(e, q, entryPairs)
-    var beam = cut(entryScored.crossJoin(efDf)).localCheckpoint()
-    // The scored set accumulates as a PARTS LIST with ONE distinct at
-    // the end: the old per-round `scoredAll.union(cand).distinct()`
-    // nested r shuffles into the lineage, and every per-ef n_scored
-    // reader re-executed the whole chain (r19 job-count audit). Each
-    // part derives from a checkpointed beam, so the single final
-    // distinct sees cheap inputs; the SET is identical.
-    var scoredParts = List[DataFrame](
-      entryScored.select(col("q_id"), col("vec_id"))
-        .crossJoin(efDf).select(col("ef"), col("q_id"), col("vec_id")))
-    for (_ <- 1 to rounds) {
-      // No per-(ef, q_id, vec_id) distinct on the expansion (r20): its
-      // only consumers are the dedup cut, the ef-collapsed scoring set
-      // (which keeps its own distinct — it bounds the scoring join and
-      // the broadcast), and the scored-parts ledger (one final
-      // distinct). Dropping it removes one corpus-independent shuffle
-      // per superstep; duplicate candidate rows are bounded by
-      // beam-neighborhood overlap (≤ ef · m per query) and collapse in
-      // the map-side aggregate.
-      val cand = idx.edges
-        .join(broadcast(beam.select(col("ef"), col("q_id"),
-          col("vec_id").as("src"))), Seq("src"))
-        .select(col("ef"), col("q_id"), col("dst").as("vec_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-      // Single sweep point: every candidate pair carries the one ef, so
-      // the scored rows ARE the per-ef scored rows — attach the ef
-      // constant instead of broadcasting the scores back into a
-      // join-back against the expansion (one BroadcastExchange + one
-      // join per superstep gone on the single-ef serving walks
-      // e26/e28/e30/e34/e35/e37/e38 — r20). Multi-ef sweeps score the
-      // distinct (ef, q_id, vec_id) triples directly
-      // ([[scoreCandsSweep]]): a pair enters exactly the pools of the
-      // efs whose walks reached it, with no join-back broadcast and no
-      // second execution of the expansion subtree.
-      val candScored =
-        if (efs.size == 1)
-          scoreCandsDistinct(e, q,
-            cand.select(col("q_id"), col("vec_id")).distinct())
-            .crossJoin(efDf)
-            .select(col("ef"), col("q_id"), col("vec_id"), col("cosine_e6"))
-        else scoreCandsSweep(e, q, "ef", cand.distinct())
-      val pool = beam.union(candScored)
-      beam = cut(pool).localCheckpoint()
-      scoredParts ::= cand.select(col("ef"), col("q_id"), col("vec_id"))
-    }
-    (beam, scoredParts.reduce(_ union _).distinct())
+    val entryScored = scoreCands(e, q, entryPairs(q, idx.entries))
+    beamWalk(e, q, idx.edges, Seq("src"), "ef", efs, None, entryScored,
+      entryScored.select(col("q_id"), col("vec_id")), rounds)
   }
 
-  /** e29's DEGREE-sweep walk: one beam pass over the union of several
-    * graphs' edges keyed by their degree cap m — the same
+  /** e29's DEGREE-sweep walk: one [[beamWalk]] pass over the union of
+    * several graphs' edges keyed by their degree cap m — the same
     * one-walk-many-sweep-points shape as [[nswBeamMulti]], with m as
     * the sweep column instead of ef (fixed ef cut per (m, q_id)).
-    * Entry seeds are shared (they derive from the bucket table, not
-    * m); candidates dedupe to distinct (q_id, vec_id) before scoring,
-    * so a pair's distance is computed once across the whole sweep.
+    * Entry seeds are shared (they derive from the bucket table, not m).
     * Returns (beam: m, q_id, vec_id, cosine_e6; scored: m, q_id,
     * vec_id).
     */
@@ -654,49 +642,16 @@ object AnnIndex {
       idxs.forall(_._2.entries == idxs.head._2.entries),
       "nswBeamDegreeSweep: all indexes must share one entry set " +
         "(build them from the same LSH bucket table)")
-    val s = e.sparkSession
-    import s.implicits._
     val edges = idxs.map { case (m, ix) =>
       ix.edges.select(lit(m).as("m"), col("src"), col("dst"))
     }.reduce(_ unionByName _)
-    val msDf = broadcast(idxs.map(_._1).toDF("m"))
-    // dedup = true + no pool/expansion distincts: the same r20
-    // walk-kernel restructure as [[nswBeamFor]] (the bounded cut drops
-    // exact duplicate pairs itself — two shuffles per superstep gone,
-    // identical kept pairs).
-    def cut(pool: DataFrame): DataFrame =
-      topKCutBy(pool, Seq("m", "q_id"), "cosine_e6", "vec_id", ef,
-        ascending = false, scoreName = "cosine_e6", idName = "vec_id",
-        dedup = true)
-        .select(col("m"), col("q_id"), col("vec_id"), col("cosine_e6"))
-    // Same r19 job-count restructure as [[nswBeamFor]]: checkpointed
-    // query set, distinct-trusting scoring, parts-list scored set with
-    // one final distinct — identical sets, ~half the small jobs.
     val q = e.filter(qPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       .localCheckpoint()
-    val entryPairs = q.select(col("q_id"))
-      .crossJoin(broadcast(idxs.head._2.entries.toDF("vec_id")))
-    val entryScored = scoreCandsDistinct(e, q, entryPairs)
-    var beam = cut(entryScored.crossJoin(msDf)).localCheckpoint()
-    var scoredParts = List[DataFrame](
-      entryScored.select(col("q_id"), col("vec_id"))
-        .crossJoin(msDf).select(col("m"), col("q_id"), col("vec_id")))
-    for (_ <- 1 to rounds) {
-      val cand = edges
-        .join(broadcast(beam.select(col("m"), col("q_id"),
-          col("vec_id").as("src"))), Seq("m", "src"))
-        .select(col("m"), col("q_id"), col("dst").as("vec_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-      // r20: distinct (m, q_id, vec_id) triples score directly
-      // ([[scoreCandsSweep]]) — no join-back broadcast, no second
-      // expansion execution per superstep; identical scored set.
-      val candScored = scoreCandsSweep(e, q, "m", cand.distinct())
-      val pool = beam.union(candScored)
-      beam = cut(pool).localCheckpoint()
-      scoredParts ::= cand.select(col("m"), col("q_id"), col("vec_id"))
-    }
-    (beam, scoredParts.reduce(_ union _).distinct())
+    val entryScored = scoreCands(e, q, entryPairs(q, idxs.head._2.entries))
+    beamWalk(e, q, edges, Seq("m", "src"), "m", idxs.map(_._1), Some(ef),
+      entryScored,
+      entryScored.select(col("q_id"), col("vec_id")), rounds)
   }
 
   /** Top-k NSW search (e26): the final beam cut to k with ranks —
@@ -863,7 +818,7 @@ object AnnIndex {
     */
   private def scoreCandsWithSelf(e: DataFrame, q: DataFrame,
       cand: DataFrame): DataFrame =
-    scoreCandsDistinct(e, q, cand).unionByName(
+    scoreCands(e, q, cand).unionByName(
       cand.filter(col("vec_id") === col("q_id"))
         .select(col("q_id"), col("vec_id"),
           lit(1000000L).as("cosine_e6")))
@@ -891,29 +846,21 @@ object AnnIndex {
       efs: Seq[Int], beamRounds: Int, descentRounds: Int = 2,
       efd: Int = 2): (DataFrame, DataFrame) = {
     require(efs.nonEmpty, "hnswSearchFor: efs must be non-empty")
-    val s = e.sparkSession
-    import s.implicits._
     // Same r19 job-count restructure as [[nswBeamFor]]: checkpointed
     // query set, distinct-trusting scoring, walked/scored parts lists
     // with ONE final distinct — identical sets, ~half the small jobs.
     val q = q0.localCheckpoint()
-    val efDf = broadcast(efs.toDF("ef"))
-    // r20 walk-kernel restructure (see [[nswBeamFor]]): dedup cuts
-    // replace the per-round pool distincts, the descent/beam expansions
-    // drop their own distincts (duplicate candidate rows score to
-    // duplicate rows of the same set and collapse in the bounded
-    // aggregate), and single-ef serving walks attach the ef constant to
-    // the scored rows instead of broadcasting them back into a
-    // join-back. 2-3 shuffles + 1 broadcast per superstep gone;
-    // identical result sets.
+    // r20 walk-kernel restructure (see [[beamWalk]]): dedup cuts replace
+    // the per-round pool distincts, and the descent expansions drop
+    // their own distincts (duplicate candidate rows score to duplicate
+    // rows of the same set and collapse in the bounded aggregate).
     def cutD(pool: DataFrame): DataFrame =
       topKCut(pool, "q_id", "cosine_e6", "vec_id", efd, ascending = false,
         scoreName = "cosine_e6", idName = "vec_id", dedup = true)
         .select(col("q_id"), col("vec_id"), col("cosine_e6"))
-    val entryPairs = q.select(col("q_id"))
-      .crossJoin(broadcast(idx.entries.toDF("vec_id")))
-    var cur = cutD(scoreCandsWithSelf(e, q, entryPairs)).localCheckpoint()
-    var walkedParts = List[DataFrame](entryPairs)
+    val entries = entryPairs(q, idx.entries)
+    var cur = cutD(scoreCandsWithSelf(e, q, entries)).localCheckpoint()
+    var walkedParts = List[DataFrame](entries)
     for (l <- idx.top to 1 by -1; _ <- 1 to descentRounds) {
       val cand = idx.edges(l)
         .join(broadcast(cur.select(col("q_id"), col("vec_id").as("src"))),
@@ -931,41 +878,12 @@ object AnnIndex {
       .union(seeds)
       .filter(col("vec_id") =!= col("q_id"))
       .distinct()
-    val s0 = scoreCandsDistinct(e, q, cand0)
-    def cutB(pool: DataFrame): DataFrame =
-      topKCutBy(pool, Seq("ef", "q_id"), "cosine_e6", "vec_id", efs.max,
-        ascending = false, scoreName = "cosine_e6", idName = "vec_id",
-        dedup = true)
-        .filter(col("rank") <= col("ef"))
-        .select(col("ef"), col("q_id"), col("vec_id"), col("cosine_e6"))
-    var beam = cutB(s0.crossJoin(efDf)).localCheckpoint()
-    // Pre-beam work (entry + descent expansions + base seeds), ef-
-    // independent by construction; the per-ef cross product and the one
-    // final distinct reproduce the old nested-distinct set exactly.
-    var scoredParts = List[DataFrame](
-      walkedParts.reduce(_ union _).union(cand0).crossJoin(efDf)
-        .select(col("ef"), col("q_id"), col("vec_id")))
-    for (_ <- 2 to beamRounds) {
-      val cand = idx.edges(0)
-        .join(broadcast(beam.select(col("ef"), col("q_id"),
-          col("vec_id").as("src"))), Seq("src"))
-        .select(col("ef"), col("q_id"), col("dst").as("vec_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-      // r20: multi-ef rounds score distinct (ef, q_id, vec_id) triples
-      // directly ([[scoreCandsSweep]]) — no join-back broadcast, no
-      // second expansion execution; identical scored set.
-      val candScored =
-        if (efs.size == 1)
-          scoreCandsDistinct(e, q,
-            cand.select(col("q_id"), col("vec_id")).distinct())
-            .crossJoin(efDf)
-            .select(col("ef"), col("q_id"), col("vec_id"), col("cosine_e6"))
-        else scoreCandsSweep(e, q, "ef", cand.distinct())
-      val pool = beam.union(candScored)
-      beam = cutB(pool).localCheckpoint()
-      scoredParts ::= cand.select(col("ef"), col("q_id"), col("vec_id"))
-    }
-    (beam, scoredParts.reduce(_ union _).distinct())
+    // The base-graph beam starts from the scored seed neighborhood; the
+    // pre-beam work (entry + descent expansions + base seeds) is ef-
+    // independent, so it enters the scored set once per sweep value.
+    beamWalk(e, q, idx.edges(0), Seq("src"), "ef", efs, None,
+      scoreCands(e, q, cand0),
+      walkedParts.reduce(_ union _).union(cand0), beamRounds - 1)
   }
 
   /** Top-k HNSW search (e30) — the e26 output contract. */
@@ -977,9 +895,6 @@ object AnnIndex {
       scoreName = "cosine_e6", idName = "vec_id")
       .select(col("q_id"), col("vec_id"), col("cosine_e6"), col("rank"))
 
-  // ----- per-session index cache ------------------------------------------
-
-  // Weak-keyed by the SparkSession object itself (identity equality):
   /** A trained product-quantization index: `m` subspaces × `ksub` codes
     * per subspace (the codebook — m·ksub·subDim doubles of driver state,
     * broadcast at search time) and the corpus compressed to m small ints
@@ -1024,13 +939,16 @@ object AnnIndex {
         "transform(embedding, x -> cast(round(cast(x as double) / sqrt(_n2) * 1e6) as bigint))")
         .as("unit"))
 
-  /** (vec_id, sub, subvec): each unit vector split into m contiguous
-    * subDim-dim subvectors — the decomposition PQ quantizes per subspace.
+  /** (keys…, sub, subvec): each `vec` vector split into m contiguous
+    * subDim-dim subvectors — the decomposition PQ quantizes per subspace
+    * (training splits the corpus by vec_id; the ADC tables split the
+    * query side).
     */
-  private def subvecs(unit: DataFrame, m: Int, subDim: Int): DataFrame =
-    unit.select(col("vec_id"), posexplode(expr(
-      s"transform(sequence(0, ${m - 1}), s -> slice(unit, s * $subDim + 1, $subDim))"))
-      .as(Seq("sub", "subvec")))
+  private def subvecs(unit: DataFrame, m: Int, subDim: Int,
+      keys: Seq[String] = Seq("vec_id"), vec: String = "unit"): DataFrame =
+    unit.select(keys.map(col) :+ posexplode(expr(
+      s"transform(sequence(0, ${m - 1}), s -> slice($vec, s * $subDim + 1, $subDim))"))
+      .as(Seq("sub", "subvec")): _*)
 
   /** Each (vector, subspace) assigned to its min-L2 code, carrying the
     * subvec for the centroid update. One distributed pass covers ALL
@@ -1051,15 +969,6 @@ object AnnIndex {
         first(col("subvec")).as("subvec"))
   }
 
-  /** Train the PQ codebook (deterministic Lloyd's per subspace — init =
-    * the ksub lowest-vec_id vectors' subvectors, fixed iterations, no
-    * RNG) and encode the corpus. Vectors are unit-normalized FIRST, so
-    * min-L2 in code space is monotone with max-cosine (‖a−b‖² = 2−2cosθ
-    * on the unit sphere) and the ADC ranking approximates the cosine
-    * ranking the rest of the e-family uses. Each Lloyd iteration is one
-    * distributed pass; the update collects m·ksub·subDim averaged doubles.
-    * An emptied code keeps its previous centroid (IVF's rule).
-    */
   /** The deterministic Lloyd's core shared by raw ([[trainPq]]) and
     * residual ([[trainResidualPq]]) codebooks: init = seed subvectors,
     * fixed iterations, floor(mean+0.5) updates, emptied codes keep their
@@ -1100,6 +1009,15 @@ object AnnIndex {
       .agg(expr("transform(array_sort(collect_list(struct(sub, code))), x -> x.code)")
         .as("codes"))
 
+  /** Train the PQ codebook (deterministic Lloyd's per subspace — init =
+    * the ksub lowest-vec_id vectors' subvectors, fixed iterations, no
+    * RNG) and encode the corpus. Vectors are unit-normalized FIRST, so
+    * min-L2 in code space is monotone with max-cosine (‖a−b‖² = 2−2cosθ
+    * on the unit sphere) and the ADC ranking approximates the cosine
+    * ranking the rest of the e-family uses. Each Lloyd iteration is one
+    * distributed pass; the update collects m·ksub·subDim averaged doubles.
+    * An emptied code keeps its previous centroid (IVF's rule).
+    */
   def trainPq(
       e: DataFrame,
       m: Int,
@@ -1208,14 +1126,33 @@ object AnnIndex {
     val q = idx.codes.filter(qPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("unit").as("q_unit"))
-    val qtabs = adcTabs(idx, q)
+    adcScan(idx.codes, adcTables(idx.codebook, idx.m, idx.ksub, q,
+      Seq("q_id"), "q_unit"), None, cut)
+  }
+
+  /** The ADC scan every PQ-family search shares: each code row of
+    * `coded` meets the broadcast query tables `tabs` (q_id, tabs[, on]) —
+    * a cross join for the plain scan, a hash join ON the list id for the
+    * probed IVF scans (only probed lists' codes are touched) — is scored
+    * by the codegen'd [[graft.functions.AdcLookupSum]] (m table lookups
+    * per vector, exact Long sums), and is cut to the `take` smallest
+    * distances per query (vec_id ties). The scan is the corpus-sized
+    * stage, so its cut is the bounded-state aggregate — the shuffle
+    * carries at most `take` pairs per (partition, query). Columns: q_id,
+    * vec_id, adist.
+    */
+  private def adcScan(coded: DataFrame, tabs: DataFrame, on: Option[String],
+      take: Int): DataFrame = {
+    val pairs = on match {
+      case Some(key) => coded.join(broadcast(tabs), key)
+      case None => coded.crossJoin(broadcast(tabs))
+    }
     val adist = kcol(graft.functions.AdcLookupSum(
       kexpr(col("codes")), kexpr(col("tabs"))))
     topKCut(
-      idx.codes.crossJoin(broadcast(qtabs))
-        .filter(col("vec_id") =!= col("q_id"))
+      pairs.filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"), adist.as("adist")),
-      "q_id", "adist", "vec_id", cut, ascending = true,
+      "q_id", "adist", "vec_id", take, ascending = true,
       scoreName = "adist", idName = "vec_id")
       .select(col("q_id"), col("vec_id"), col("adist"))
   }
@@ -1282,29 +1219,28 @@ object AnnIndex {
       (perm, idx)
     }
 
-  /** The per-query m × ksub ADC table, as ONE aggregation of the tiny
-    * |Q|·m·ksub distance stream (was a groupBy(q_id, sub) + groupBy(q_id)
-    * pair — two shuffles): every query has exactly m·ksub (sub, code)
-    * cells, so sorting the flat collect_list by (sub, code) and slicing it
-    * per subspace reconstructs exactly the per-sub sorted tabs the
-    * two-level aggregation produced. Input `q` carries (q_id, q_unit);
-    * output is (q_id, tabs).
+  /** The m × ksub ADC table per `keys` group (q_id for the plain and
+    * composed PQ scans, (q_id, cid) for the residual scan's per-list
+    * tables), as ONE aggregation of the tiny |groups|·m·ksub distance
+    * stream (was a groupBy(…, sub) + groupBy(…) pair — two shuffles):
+    * every group has exactly m·ksub (sub, code) cells, so sorting the
+    * flat collect_list by (sub, code) and slicing it per subspace
+    * reconstructs exactly the per-sub sorted tables the two-level
+    * aggregation produced. `q` carries the `keys` and the e6 unit
+    * vector `vec`; output is (keys…, tabs).
     */
-  private def adcTabs(idx: PqIndex, q: DataFrame): DataFrame = {
-    val s = idx.codes.sparkSession
+  private def adcTables(codebook: Seq[(Int, Int, Seq[Long])], m: Int,
+      ksub: Int, q: DataFrame, keys: Seq[String], vec: String): DataFrame = {
+    val s = q.sparkSession
     import s.implicits._
-    val subDim = idx.codebook.head._3.length
-    val qsub = subvecs(
-      q.select(col("q_id").as("vec_id"), col("q_unit").as("unit")),
-      idx.m, subDim)
-    val dist = sqDist("subvec", "cent")
-    val ksub = idx.ksub
+    val qsub = subvecs(q, m, codebook.head._3.length, keys, vec)
     qsub
-      .join(broadcast(idx.codebook.toDF("sub", "code", "cent")), "sub")
-      .select(col("vec_id").as("q_id"), col("sub"), col("code"), dist.as("dist"))
-      .groupBy(col("q_id"))
+      .join(broadcast(codebook.toDF("sub", "code", "cent")), "sub")
+      .select(keys.map(col) ++ Seq(col("sub"), col("code"),
+        sqDist("subvec", "cent").as("dist")): _*)
+      .groupBy(keys.map(col): _*)
       .agg(expr(
-        s"""transform(sequence(0, ${idx.m - 1}), s ->
+        s"""transform(sequence(0, ${m - 1}), s ->
               transform(slice(array_sort(collect_list(struct(sub, code, dist))),
                               s * $ksub + 1, $ksub),
                         x -> x.dist))""").as("tabs"))
@@ -1323,9 +1259,7 @@ object AnnIndex {
       .join(broadcast(adcCands), "vec_id")
       .join(broadcast(q.select(col("q_id"), col("q_emb"))), "q_id")
       .select(col("q_id"), col("vec_id"), col("adist"),
-        round(dot("q_emb", "embedding") /
-          (sqrt(dot("q_emb", "q_emb")) * sqrt(dot("embedding", "embedding"))) * 1e6)
-          .cast("long").as("cosine_e6"))
+        cosineE6("q_emb", "embedding").as("cosine_e6"))
       .withColumn("rank", row_number().over(wc))
       .filter(col("rank") <= k)
   }
@@ -1447,6 +1381,21 @@ object AnnIndex {
     */
   final case class IvfPqIndex(ivf: IvfIndex, pq: PqIndex, coded: DataFrame)
 
+  /** The probed top-`take` ADC candidate set of [[ivfPqSearch]] BEFORE
+    * the exact re-rank — e33 compares this set's exact-top-k containment
+    * against the residual path's. Columns: q_id, vec_id, adist.
+    */
+  private[graft] def ivfPqAdcCands(idx: IvfPqIndex, qPred: Column,
+      nprobe: Int, take: Int): DataFrame = {
+    val q = idx.pq.codes.filter(qPred)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("unit").as("q_unit"))
+    val probeTabs = probeLists(idx.ivf, q, nprobe).drop("crank")
+      .join(adcTables(idx.pq.codebook, idx.pq.m, idx.pq.ksub, q,
+        Seq("q_id"), "q_unit"), "q_id")
+    adcScan(idx.coded, probeTabs, Some("cid"), take)
+  }
+
   /** Search the composed index: queries probe their `nprobe` min-L2
     * coarse centroids (integer distances, cid ties — e6's rule), the ADC
     * scan joins the broadcast (q_id, cid, tabs) probe set to `coded` ON
@@ -1457,38 +1406,6 @@ object AnnIndex {
     * probe sets, ADC sums, and both rank tie-breaks replay exactly in a
     * relational oracle. Columns: q_id, vec_id, adist, cosine_e6, rank.
     */
-  /** The probed top-`take` ADC candidate set of [[ivfPqSearch]] BEFORE
-    * the exact re-rank — e33 compares this set's exact-top-k containment
-    * against the residual path's. Columns: q_id, vec_id, adist.
-    */
-  private[graft] def ivfPqAdcCands(idx: IvfPqIndex, qPred: Column,
-      nprobe: Int, take: Int): DataFrame = {
-    val s = idx.pq.codes.sparkSession
-    import s.implicits._
-    val q = idx.pq.codes.filter(qPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("unit").as("q_unit"))
-    val cdist = sqDist("q_unit", "cent")
-    // nlist rows per query — the rank window is centroid-bounded, not
-    // corpus-bounded.
-    val probed = q.crossJoin(broadcast(idx.ivf.cents.toDF("cid", "cent")))
-      .select(col("q_id"), col("cid"), cdist.as("cdist"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cdist"), col("cid"))))
-      .filter(col("crank") <= nprobe)
-      .select(col("q_id"), col("cid"))
-    val probeTabs = probed.join(adcTabs(idx.pq, q), "q_id")
-    val adist = kcol(graft.functions.AdcLookupSum(
-      kexpr(col("codes")), kexpr(col("tabs"))))
-    topKCut(
-      idx.coded.join(broadcast(probeTabs), "cid")
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"), adist.as("adist")),
-      "q_id", "adist", "vec_id", take, ascending = true,
-      scoreName = "adist", idName = "vec_id")
-      .select(col("q_id"), col("vec_id"), col("adist"))
-  }
-
   def ivfPqSearch(
       idx: IvfPqIndex, qPred: Column, k: Int, nprobe: Int,
       rerank: Int = 4): DataFrame = {
@@ -1551,43 +1468,11 @@ object AnnIndex {
       else coded)
   }
 
-  /** Per-(query, probed-list) ADC tables over the RESIDUAL codebook:
-    * the query's residual against each probed centroid, one m × ksub
-    * table per (q_id, cid) — nprobe tiny tables per query, broadcast.
-    */
-  private def residualAdcTabs(idx: RpqIndex, q: DataFrame,
-      probed: DataFrame): DataFrame = {
-    val s = idx.coded.sparkSession
-    import s.implicits._
-    val subDim = idx.codebook.head._3.length
-    val qres = probed
-      .join(broadcast(idx.ivf.cents.toDF("cid", "cent")), "cid")
-      .join(q.select(col("q_id"), col("q_unit")), "q_id")
-      .select(col("q_id"), col("cid"),
-        expr("zip_with(q_unit, cent, (a, b) -> a - b)").as("qres"))
-    val qsub = qres.select(col("q_id"), col("cid"), posexplode(expr(
-      s"transform(sequence(0, ${idx.m - 1}), s -> slice(qres, s * $subDim + 1, $subDim))"))
-      .as(Seq("sub", "subvec")))
-    val dist = sqDist("subvec", "cent")
-    val ksub = idx.ksub
-    qsub
-      .join(broadcast(idx.codebook.toDF("sub", "code", "cent")), "sub")
-      .select(col("q_id"), col("cid"), col("sub"), col("code"),
-        dist.as("dist"))
-      .groupBy(col("q_id"), col("cid"))
-      .agg(expr(
-        s"""transform(sequence(0, ${idx.m - 1}), s ->
-              transform(slice(array_sort(collect_list(struct(sub, code, dist))),
-                              s * $ksub + 1, $ksub),
-                        x -> x.dist))""").as("tabs"))
-  }
-
-  /** Search the residual index — [[ivfPqSearch]]'s shape with the one
-    * residual difference: the broadcast probe set carries a PER-LIST ADC
-    * table. Columns: q_id, vec_id, adist, cosine_e6, rank.
-    */
   /** The residual path's probed top-`take` ADC candidates (pre-rerank) —
-    * e33's residual arm. Columns: q_id, vec_id, adist.
+    * e33's residual arm: one m × ksub table per (q_id, probed cid) over
+    * the RESIDUAL codebook, from the query's residual against that
+    * list's centroid — nprobe tiny tables per query, broadcast.
+    * Columns: q_id, vec_id, adist.
     */
   private[graft] def rpqAdcCands(idx: RpqIndex, qPred: Column,
       nprobe: Int, take: Int): DataFrame = {
@@ -1596,25 +1481,18 @@ object AnnIndex {
     val q = idx.coded.filter(qPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("unit").as("q_unit"))
-    val cdist = sqDist("q_unit", "cent")
-    val probed = q.crossJoin(broadcast(idx.ivf.cents.toDF("cid", "cent")))
-      .select(col("q_id"), col("cid"), cdist.as("cdist"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cdist"), col("cid"))))
-      .filter(col("crank") <= nprobe)
-      .select(col("q_id"), col("cid"))
-    val probeTabs = residualAdcTabs(idx, q, probed)
-    val adist = kcol(graft.functions.AdcLookupSum(
-      kexpr(col("codes")), kexpr(col("tabs"))))
-    topKCut(
-      idx.coded.join(broadcast(probeTabs), "cid")
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"), adist.as("adist")),
-      "q_id", "adist", "vec_id", take, ascending = true,
-      scoreName = "adist", idName = "vec_id")
-      .select(col("q_id"), col("vec_id"), col("adist"))
+    val qres = probeLists(idx.ivf, q, nprobe, "q_unit")
+      .join(broadcast(idx.ivf.cents.toDF("cid", "cent")), "cid")
+      .select(col("q_id"), col("cid"),
+        expr("zip_with(q_unit, cent, (a, b) -> a - b)").as("qres"))
+    adcScan(idx.coded, adcTables(idx.codebook, idx.m, idx.ksub, qres,
+      Seq("q_id", "cid"), "qres"), Some("cid"), take)
   }
 
+  /** Search the residual index — [[ivfPqSearch]]'s shape with the one
+    * residual difference: the broadcast probe set carries a PER-LIST ADC
+    * table. Columns: q_id, vec_id, adist, cosine_e6, rank.
+    */
   def rpqSearch(idx: RpqIndex, qPred: Column, k: Int, nprobe: Int,
       rerank: Int = 4): DataFrame = {
     val q = idx.coded.filter(qPred)
@@ -1952,8 +1830,9 @@ object AnnIndex {
     * 100 TB: tombstone cost is kill-set-sized; compaction is one
     * anti-join + rewrite of the lists, amortized over every
     * post-compaction query.
-    */
-  /** Tombstones live BESIDE the source artifact, one kill set per tag
+    *
+    * This is the TOMBSTONE phase ([[compactIvf]] is the other).
+    * Tombstones live BESIDE the source artifact, one kill set per tag
     * (`dir/tombstones-$tag`) — two concurrent delete campaigns against
     * the same index must not clobber each other's kill sets.
     */
@@ -1962,7 +1841,8 @@ object AnnIndex {
     dead.select(col("vec_id")).write.mode("overwrite")
       .parquet(s"$dir/tombstones-$tag")
 
-  /** Compaction produces a COMPLETE standalone index directory
+  /** The COMPACT phase of [[tombstoneIvf]]'s delete lifecycle.
+    * Compaction produces a COMPLETE standalone index directory
     * (centroids re-shipped — nlist rows, negligible — plus the
     * surviving lists as plain `lists`), so the compacted artifact loads
     * through the default [[loadIvf]] path like any other index and can

@@ -7503,9 +7503,7 @@ object TextPipeline {
             col("a.vec_id") =!= col("b.vec_id"))
         .select(col("a.q_id").as("q_id"), col("a.vec_id").as("va"),
           col("b.vec_id").as("vb"),
-          round(dot("a.emb", "b.emb") /
-            (sqrt(dot("a.emb", "a.emb")) * sqrt(dot("b.emb", "b.emb")))
-            * 1e6).cast("long").as("sim_e6"))
+          AnnIndex.cosineE6("a.emb", "b.emb").as("sim_e6"))
       val candAgg = cand.groupBy(col("q_id"))
         .agg(collect_list(struct(col("vec_id"), col("rel_e6"))).as("cands"))
       val psAgg = ps.groupBy(col("q_id"))
@@ -8248,9 +8246,7 @@ object TextPipeline {
         rp.crossJoin(broadcast(qrp))
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id"),
-            round(dot("q_rp", "rp") /
-              (sqrt(dot("q_rp", "q_rp")) * sqrt(dot("rp", "rp"))) * 1e6)
-              .cast("long").as("cosine_e6")),
+            AnnIndex.cosineE6("q_rp", "rp").as("cosine_e6")),
         "q_id", "cosine_e6", "vec_id", 3, ascending = false,
         scoreName = "cosine_e6", idName = "vec_id")
         .select(col("q_id").as("rp_q_id"), col("vec_id").as("rp_vec_id"))

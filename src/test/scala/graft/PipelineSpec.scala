@@ -26,6 +26,21 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** The planted 400-vector ANN fixture: 16-dim gaussian vectors (LCG
+    * seed 13) where queries 0..2 are near-duplicates (cosine ≈ 0.999) of
+    * vectors 10..12. Columns: vec_id, embedding.
+    */
+  private def planted400(): org.apache.spark.sql.DataFrame = {
+    val s = spark
+    import s.implicits._
+    val g = new TestData.Lcg(13L)
+    val base = Array.tabulate(400)(_ => Array.fill(16)(g.gaussian().toFloat))
+    for (q <- 0 until 3)
+      base(q) = base(10 + q).map(v => v + 0.02f * g.gaussian().toFloat)
+    base.zipWithIndex.map { case (e, i) => (i.toLong, e) }.toSeq
+      .toDF("vec_id", "embedding")
+  }
+
   test("mm-family byte oracles: the documents corpus is pure ASCII (their stated invariant)") {
     // mm2/mm3/mm4's DuckDB oracles recompute byte means/bands from CHAR
     // positions (ascii(substr(...)) at (p-1)%band), which equals the
@@ -853,16 +868,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // corpus ("recall via score-everything" must fail); (b) replay — a
     // second search over the same index is row-identical (the frozen-
     // graph determinism the DuckDB oracle relies on).
-    val s = spark
-    import s.implicits._
-    val dim = 16
     val n = 400
-    val g = new TestData.Lcg(13L)
-    val base = Array.tabulate(n)(_ => Array.fill(dim)(g.gaussian().toFloat))
-    for (q <- 0 until 3)
-      base(q) = base(10 + q).map(v => v + 0.02f * g.gaussian().toFloat)
-    val df = base.zipWithIndex.map { case (e, i) => (i.toLong, e) }.toSeq
-      .toDF("vec_id", "embedding")
+    val df = planted400()
     val idx = graft.operators.AnnIndex.trainNsw(
       df, graft.operators.AnnIndex.buildLsh(df, 4, persist = false),
       m = 8, persistEdges = false)
@@ -926,6 +933,78 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("beam walks: one walk over a sweep equals the per-value walks") {
+    // A sweep walk carries its sweep column through every superstep and
+    // cuts per (sweep value, query); its slice at one value must be the
+    // walk run for that value alone — beam rows and scored set — for the
+    // flat ef sweep, the HNSW base-graph ef sweep and the degree sweep.
+    import graft.operators.AnnIndex
+    import org.apache.spark.sql.DataFrame
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    def slice(df: DataFrame, c: String, v: Int): Seq[String] =
+      rows(df.filter(col(c) === v).drop(c))
+    val df = planted400()
+    val qPred = col("vec_id") < 5
+    val buckets = AnnIndex.buildLsh(df, 4, persist = false)
+    val nsw = AnnIndex.trainNsw(df, buckets, m = 8, persistEdges = false)
+    val (mBeam, mScored) = AnnIndex.nswBeamMulti(nsw, df, qPred,
+      Seq(4, 8), rounds = 3)
+    for (ef <- Seq(4, 8)) {
+      val (b, sc) = AnnIndex.nswBeam(nsw, df, qPred, ef, rounds = 3)
+      assert(slice(mBeam, "ef", ef) == rows(b), s"nsw beam at ef=$ef")
+      assert(slice(mScored, "ef", ef) == rows(sc), s"nsw scored at ef=$ef")
+    }
+    val hnsw = AnnIndex.trainHnsw(df, buckets, m0 = 8, mUp = 8, top = 2)
+    val (hBeam, hScored) = AnnIndex.hnswSearchMulti(hnsw, df, qPred,
+      Seq(4, 8), beamRounds = 3)
+    for (ef <- Seq(4, 8)) {
+      val (b, sc) = AnnIndex.hnswSearchMulti(hnsw, df, qPred, Seq(ef),
+        beamRounds = 3)
+      assert(slice(hBeam, "ef", ef) == slice(b, "ef", ef),
+        s"hnsw beam at ef=$ef")
+      assert(slice(hScored, "ef", ef) == slice(sc, "ef", ef),
+        s"hnsw scored at ef=$ef")
+    }
+    val graphs = Seq(4, 8).map(m =>
+      m -> AnnIndex.trainNsw(df, buckets, m, persistEdges = false))
+    val (dBeam, dScored) = AnnIndex.nswBeamDegreeSweep(graphs, df, qPred,
+      ef = 6, rounds = 3)
+    for (g <- graphs) {
+      val (b, sc) = AnnIndex.nswBeamDegreeSweep(Seq(g), df, qPred,
+        ef = 6, rounds = 3)
+      assert(slice(dBeam, "m", g._1) == slice(b, "m", g._1),
+        s"degree-sweep beam at m=${g._1}")
+      assert(slice(dScored, "m", g._1) == slice(sc, "m", g._1),
+        s"degree-sweep scored at m=${g._1}")
+    }
+    assert(rows(mBeam).nonEmpty && rows(hBeam).nonEmpty &&
+      rows(dBeam).nonEmpty, "a sweep walk returned no beam")
+  }
+
+  test("ivfPqAdcCands with every list probed equals the plain PQ scan") {
+    // Probing all nlist lists makes the composed IVF-PQ candidate side
+    // the whole corpus, so its ADC scan and top-`take` cut must return
+    // exactly the plain PQ scan's (q_id, vec_id, adist) rows.
+    import graft.operators.AnnIndex
+    val df = planted400()
+    val qPred = col("vec_id") < 5
+    val ivf = AnnIndex.trainIvf(df, nlist = 4, iters = 2,
+      persistLists = false)
+    val pq = AnnIndex.trainPq(df, m = 4, ksub = 8, iters = 2,
+      persistCodes = false)
+    val coded = pq.codes.select(col("vec_id"), col("codes"))
+      .join(ivf.lists.select(col("vec_id"), col("cid")), "vec_id")
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+      d.select(col("q_id"), col("vec_id"), col("adist")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    val composed = rows(AnnIndex.ivfPqAdcCands(
+      AnnIndex.IvfPqIndex(ivf, pq, coded), qPred, nprobe = 4, take = 12))
+    val plain = rows(AnnIndex.pqAdcCands(pq, qPred, 12))
+    assert(plain.size == 5 * 12, s"plain scan rows: ${plain.size}")
+    assert(composed == plain)
+  }
+
   test("rpSearch: planted near-duplicates are recalled at rank 1 in the projected space") {
     // e8's quality gate, same scheme as the LSH/IVF planted tests: on a
     // uniform corpus an 8-dim projection has no recallable structure
@@ -963,16 +1042,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // so a correct codebook/ADC/re-rank chain cannot miss them, while a
     // scrambled code order or a broken distance table fails
     // deterministically.
-    val s = spark
-    import s.implicits._
-    val dim = 16
-    val n = 400
-    val g = new TestData.Lcg(13L)
-    val base = Array.tabulate(n)(_ => Array.fill(dim)(g.gaussian().toFloat))
-    for (q <- 0 until 3)
-      base(q) = base(10 + q).map(v => v + 0.02f * g.gaussian().toFloat)
-    val df = base.zipWithIndex.map { case (e, i) => (i.toLong, e) }.toSeq
-      .toDF("vec_id", "embedding")
+    val df = planted400()
     val top1 = TextPipeline.pqSearch(df, col("vec_id") < 3, k = 1,
         m = 4, ksub = 8, iters = 2)
       .select(col("q_id"), col("vec_id"), col("cosine_e6"))
