@@ -46,8 +46,11 @@ object ElasticNet {
   /** One fitted point on the path: coefficients on the original scale. */
   final case class Fit(lambda: Double, intercept: Double, beta: DenseVector[Double])
 
-  /** A fitted λ path (descending λ, matching glmnet's convention). */
-  final case class Path(alpha: Double, fits: IndexedSeq[Fit]) {
+  /** A fitted λ path (descending λ, matching glmnet's convention).
+    * `maxIterHits` counts the λ steps that used their whole `maxIter` sweep
+    * budget — a step that stops there may not have converged.
+    */
+  final case class Path(alpha: Double, fits: IndexedSeq[Fit], maxIterHits: Int = 0) {
     def lambdas: IndexedSeq[Double] = fits.map(_.lambda)
 
     /** Coefficients at penalty `s`: exact-λ match wins; otherwise linear
@@ -111,7 +114,9 @@ object ElasticNet {
     *    repeat until the scan is clean — on warm-started paths most λ steps
     *    converge in a few tiny sweeps;
     *  - cᵢ is refreshed exactly (O(T·k)) once per λ step, so incremental
-    *    float drift never crosses a λ boundary.
+    *    float drift never crosses a λ boundary; the residual behind it is
+    *    computed once per λ boundary — with early stopping, the dev.ratio
+    *    check computes it and the next λ step reuses it.
     *
     * Per-sweep cost drops from O(T·k) to O(|A|·p) with |A| active features
     * (and to O(|A|) reads when nothing moves); Gram rows are cached on the
@@ -162,12 +167,16 @@ object ElasticNet {
     val nulldev = { var s = 0.0; var i = 0; while (i < nRows) { s += yw(i) * yw(i); i += 1 }; s }
     var rsqPrev = 0.0
     var stopped = false
+    var rFresh = false // r is the residual of the current β (devRatio left it)
+    var maxIterHits = 0
 
     val lamSeq = lambdas.toIndexedSeq
     var li = 0
     while (li < lamSeq.length && !stopped) {
       val lambda = lamSeq(li)
-      solveAt(cov, yw, r, cv, beta, active, lambda, alpha, effTol, maxIter)
+      val sweeps = solveAt(cov, yw, r, cv, beta, active, lambda, alpha, effTol, maxIter, rFresh)
+      if (sweeps >= maxIter) maxIterHits += 1
+      rFresh = false
       // Back to the original scale: β_orig = β_std / scale.
       val bOrig = cov.toOriginal(beta)
       fits += Fit(lambda, cov.interceptFor(bOrig, yMean), bOrig)
@@ -180,17 +189,21 @@ object ElasticNet {
       // zero-progress warm-started sweep near λmax can't truncate the path.
       if (earlyStop && nulldev > 0.0) {
         val rsq = devRatio(yw, xArr, beta, r, p, nRows, nulldev)
+        rFresh = true
         stopped = li >= GlmnetMnLam - 1 &&
           (rsq > GlmnetDevMax || (rsq - rsqPrev) < GlmnetFDev * rsq)
         rsqPrev = rsq
       }
       li += 1
     }
-    Path(alpha, fits.result())
+    Path(alpha, fits.result(), maxIterHits)
   }
 
   /** One λ step of the coordinate-descent solver: exact residual/cᵢ
-    * refresh at the λ boundary, warm-started active-set sweeps, KKT scan.
+    * refresh at the λ boundary (the residual only when `rFresh` is false:
+    * [[devRatio]] leaves the current β's residual in `r` with identical
+    * arithmetic), warm-started active-set sweeps, KKT scan. Returns the
+    * number of sweeps (0 for the exact λ = 0 solve).
     * This is the HOT method and must stay its own compilation unit: in
     * round 4 it was the body of a `for (lambda <- lambdas)` closure; round
     * 5 flattened it into fitPathCov's while loop, whose combined bytecode
@@ -208,7 +221,8 @@ object ElasticNet {
       lambda: Double,
       alpha: Double,
       effTol: Double,
-      maxIter: Int): Unit = {
+      maxIter: Int,
+      rFresh: Boolean): Int = {
     val nRows = cov.nRows
     val p = cov.p
     val xArr = cov.xArr
@@ -245,22 +259,12 @@ object ElasticNet {
           }
         } catch { case _: breeze.linalg.MatrixSingularException => () }
       }
-      if (solved) return
+      if (solved) return 0
     }
 
-    // Exact refresh of r and cᵢ at the λ boundary: r = yw − Σ x̃ⱼβⱼ.
-    System.arraycopy(yw, 0, r, 0, nRows)
+    // Exact refresh of r and cᵢ at the λ boundary.
+    if (!rFresh) residual(yw, xArr, beta, r, p, nRows)
     var j = 0
-    while (j < p) {
-      val bj = beta(j)
-      if (bj != 0.0) {
-        val base = j * nRows
-        var i = 0
-        while (i < nRows) { r(i) -= xArr(base + i) * bj; i += 1 }
-      }
-      j += 1
-    }
-    j = 0
     while (j < p) { cv(j) = cov.colDot(j, r); j += 1 }
 
     val l1 = lambda * alpha
@@ -305,9 +309,32 @@ object ElasticNet {
         jj += 1
       }
     }
+    iter
   }
 
-  /** dev.ratio 1 − RSS/nulldev of the current coefficients. Kept OUT of
+  /** r = yw − Σ x̃ⱼβⱼ, the exact residual of the current coefficients. */
+  private def residual(
+      yw: Array[Double],
+      xArr: Array[Double],
+      beta: Array[Double],
+      r: Array[Double],
+      p: Int,
+      nRows: Int): Unit = {
+    System.arraycopy(yw, 0, r, 0, nRows)
+    var j = 0
+    while (j < p) {
+      val bj = beta(j)
+      if (bj != 0.0) {
+        val base = j * nRows
+        var i = 0
+        while (i < nRows) { r(i) -= xArr(base + i) * bj; i += 1 }
+      }
+      j += 1
+    }
+  }
+
+  /** dev.ratio 1 − RSS/nulldev of the current coefficients; leaves their
+    * residual in `r`, which the next [[solveAt]] reuses. Kept OUT of
     * [[fitPathCov]] deliberately: inlining this (cold, per-λ) block into
     * the solver method pushed its bytecode past the JIT's huge-method
     * limit in round 5, which silently demoted the ENTIRE coordinate-
@@ -322,17 +349,7 @@ object ElasticNet {
       p: Int,
       nRows: Int,
       nulldev: Double): Double = {
-    System.arraycopy(yw, 0, r, 0, nRows)
-    var j = 0
-    while (j < p) {
-      val bj = beta(j)
-      if (bj != 0.0) {
-        val base = j * nRows
-        var i = 0
-        while (i < nRows) { r(i) -= xArr(base + i) * bj; i += 1 }
-      }
-      j += 1
-    }
+    residual(yw, xArr, beta, r, p, nRows)
     var rss = 0.0
     var i = 0
     while (i < nRows) { rss += r(i) * r(i); i += 1 }

@@ -5746,10 +5746,11 @@ object Estimation {
     // ----- M15: rolling-origin hyperparameter tuning (rows-only) ----------
 
     ("m15_rolling_tune", (s: SparkSession, d: String) => {
-      // The flagship distributed grid (SURVEY §3.3) at query scale: one
-      // task per ORIGIN (its prefix CovDesign built once and shared by all
-      // equation×α path fits) runs as one Spark job over the broadcast
-      // design; per-λ RMSE arrays fold on the driver in origin order.
+      // The flagship distributed grid (SURVEY §3.3) at query scale: each
+      // task folds its (equation, α) segments over every origin (one
+      // prefix CovDesign per origin, shared by the task's path fits) in
+      // one Spark job over the broadcast design; per-λ RMSE arrays are
+      // summed in origin order.
       // Rows-only: parity with the sequential loop is pinned exactly in
       // SparkParitySpec.
       import graft.tune.RollingOriginTuner
@@ -5783,8 +5784,7 @@ object Estimation {
       // selection, the first-grid-index tie-break) in DuckDB. The
       // general-α grid behavior stays in `m15_rolling_tune` (rows-only,
       // SparkParitySpec-pinned) — this is the hash gate on the identical
-      // distributed machinery (same runOrigin, same executor-side
-      // segment fold).
+      // distributed machinery (same per-task segment fold).
       import graft.tune.RollingOriginTuner
       val panel = collectSeries(monthlyPanel(s, d), "month", Seq("rev", "n_orders"))
       val n = panel.length
@@ -5819,7 +5819,7 @@ object Estimation {
       // resample × grid surface in DuckDB. Together with `m15_ridge_tune`
       // (α=0) this brackets the rows-only general-α `m15_rolling_tune`
       // from both ends of its α range on identical machinery (same
-      // runOrigin, same executor-side segment fold).
+      // per-task segment fold).
       import graft.tune.RollingOriginTuner
       val panel = collectSeries(monthlyPanel(s, d), "month", Seq("rev"))
       val n = panel.length

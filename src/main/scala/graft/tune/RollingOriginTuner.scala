@@ -1,6 +1,7 @@
 package graft.tune
 
 import breeze.linalg.{DenseMatrix, DenseVector}
+import dev.ludovic.netlib.blas.BLAS
 import graft.linalg.ElasticNet
 import graft.varmodel.VarDesign
 import org.apache.spark.sql.SparkSession
@@ -18,17 +19,17 @@ import org.apache.spark.sql.SparkSession
   *
   * This is the engine's flagship distributed workload (SURVEY §3.3): the
   * reference burns hours fitting grid × origins × equations sequentially
-  * (readme.txt:31,39). Here a TASK is one ORIGIN: it builds the origin's
-  * prefix CovDesign (standardization + lazily-cached Gram rows) ONCE and
-  * fits all K·19 warm-started λ paths on it, each path scoring ALL λs in a
-  * single pass (glmnet's trick) — so the heavy per-fit work is shared
-  * K·19-fold within a task, and tasks are farmed with `spark.parallelize`
-  * over a broadcast design. Per-origin RMSE arrays are folded in origin
-  * order — deliberately NOT reduceByKey, which would sum doubles in
-  * shuffle-arrival order and drift a ulp from the sequential path — ON
-  * THE EXECUTORS (segment-partitioned, origin-sorted sequential fold; the
-  * driver collects only K × |α| summed arrays). SparkParitySpec pins the
-  * distributed and sequential paths bit-identical.
+  * (readme.txt:31,39). Here a TASK owns a round-robin share of the K·|α|
+  * (equation, α) SEGMENTS and walks all origins ascending: per origin it
+  * builds the prefix CovDesign (standardization + lazily-cached Gram rows)
+  * once, fits each of its segments' warm-started λ paths on it — each path
+  * scoring ALL λs in a single pass (glmnet's trick) — and adds the RMSE
+  * array into the segment's running sum. Summing origin-ascending in one
+  * place is what makes the distributed and sequential paths agree bit for
+  * bit (a reduceByKey would sum in shuffle-arrival order); there is no
+  * shuffle, and the driver collects K·|α| summed arrays. The sequential
+  * path runs the same fold over all segments, and SparkParitySpec pins the
+  * two bit-identical.
   */
 object RollingOriginTuner {
 
@@ -36,52 +37,71 @@ object RollingOriginTuner {
 
   final case class Grid(alphas: Seq[Double], lambdas: Seq[Double])
 
-  /** Sequential fold: group per-origin RMSE arrays by (equation, α) and
-    * sum them origin-ascending.
+  /** Per-λ RMSE over design rows `from until from + horizon` of a fitted
+    * path scored at every `master` λ, on column-major `z` (`zRows` rows)
+    * and the response column starting at `y(yBase)`. A master λ maps onto
+    * the path by [[graft.linalg.BlockedCv.alignOnto]]'s rules — clamp
+    * outside the path, exact λ match, else linear interpolation — and the
+    * arithmetic is breeze's for `alignOnto` + `z(r, ::).t dot beta`, bit
+    * for bit: interpolated coefficients `bh·w + bl·(1 − w)` and the strided
+    * BLAS `ddot` breeze calls for a matrix row. A clamped or exact master
+    * λ reuses its path point's RMSE, computed once. The path's
+    * coefficient vectors must be dense at offset 0, as
+    * [[ElasticNet.fitPathCov]] builds them.
     */
-  private def foldInOriginOrder(
-      results: Seq[((Int, Double, Int), Array[Double])]): Map[(Int, Double), Array[Double]] =
-    results
-      .groupBy { case ((j, a, _), _) => (j, a) }
-      .view.mapValues { group =>
-        group.sortBy(_._1._3).map(_._2).reduce { (x, y) =>
-          x.zip(y).map { case (u, v) => u + v }
-        }
-      }.toMap
-
-  /** Executor-side segment fold over a partition whose composite keys
-    * ((equation, α), origin) are sorted: each segment's origins arrive
-    * consecutively ascending, so a single sequential pass reproduces the
-    * sequential fold's summation order exactly.
-    */
-  private def foldSortedSegments(
-      it: Iterator[(((Int, Double), Int), Array[Double])]): Iterator[((Int, Double), Array[Double])] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[((Int, Double), Array[Double])]
-    var cur: (Int, Double) = null
-    var acc: Array[Double] = null
-    for (((seg, _), rmse) <- it) {
-      if (cur == null || cur != seg) {
-        if (cur != null) out += ((cur, acc))
-        cur = seg
-        acc = rmse.clone()
-      } else {
-        var i = 0
-        while (i < acc.length) { acc(i) += rmse(i); i += 1 }
+  private[graft] def rmseOnto(
+      path: ElasticNet.Path,
+      master: IndexedSeq[Double],
+      z: Array[Double],
+      zRows: Int,
+      y: Array[Double],
+      yBase: Int,
+      from: Int,
+      horizon: Int): Array[Double] = {
+    val fits = path.fits
+    val last = fits.length - 1
+    val p = fits.head.beta.length
+    val blas = BLAS.getInstance()
+    def rmse(beta: Array[Double]): Double = {
+      var sse = 0.0
+      var r = from
+      while (r < from + horizon) {
+        val e = y(yBase + r) - blas.ddot(p, beta, 0, 1, z, r, zRows)
+        sse += e * e
+        r += 1
       }
+      math.sqrt(sse / horizon)
     }
-    if (cur != null) out += ((cur, acc))
-    out.iterator
-  }
-
-  /** Routes a composite ((equation, α), origin) key by its segment so every
-    * segment lands wholly in one partition for the sorted sequential fold.
-    */
-  private class SegmentPartitioner(override val numPartitions: Int)
-      extends org.apache.spark.Partitioner {
-    override def getPartition(key: Any): Int = {
-      val h = key.asInstanceOf[((Int, Double), Int)]._1.hashCode % numPartitions
-      if (h < 0) h + numPartitions else h
+    val atPoint = new Array[Double](fits.length)
+    val done = new Array[Boolean](fits.length)
+    def pointRmse(k: Int): Double = {
+      if (!done(k)) { atPoint(k) = rmse(fits(k).beta.data); done(k) = true }
+      atPoint(k)
     }
+    val scratch = new Array[Double](p)
+    val out = new Array[Double](master.length)
+    var hi = 0 // path cursor, as in alignOnto
+    var mi = 0
+    while (mi < master.length) {
+      val s = master(mi)
+      out(mi) =
+        if (s >= fits.head.lambda) pointRmse(0)
+        else if (s <= fits(last).lambda) pointRmse(last)
+        else {
+          while (hi + 1 < last && fits(hi + 1).lambda >= s) hi += 1
+          if (fits(hi).lambda == s) pointRmse(hi)
+          else {
+            val l1 = fits(hi).lambda; val l0 = fits(hi + 1).lambda
+            val w = (s - l0) / (l1 - l0)
+            val bh = fits(hi).beta.data; val bl = fits(hi + 1).beta.data
+            var k = 0
+            while (k < p) { scratch(k) = bh(k) * w + bl(k) * (1 - w); k += 1 }
+            rmse(scratch)
+          }
+        }
+      mi += 1
+    }
+    out
   }
 
   /** The reference's caret grid: α ∈ .05..(.95) step .05, λ = 10^seq(1, −4,
@@ -123,83 +143,76 @@ object RollingOriginTuner {
     val origins = (initWindow to (t - horizon)).toIndexedSeq
     val lambdas = grid.lambdas.sortBy(-_).toIndexedSeq
 
-    // One task = one ORIGIN: build the prefix CovDesign once, fit all
-    // (equation, α) λ paths on it (Gram rows and standardization shared
-    // K·|α|-fold), score the horizon block, emit per-λ RMSE per key.
-    def runOrigin(z: DenseMatrix[Double], yp: DenseMatrix[Double])(
-        o: Int): Seq[((Int, Double, Int), Array[Double])] = {
-      val cov = new graft.linalg.CovDesign(
-        z(0 until o, ::).toDenseMatrix, intercept = false, standardize = true)
-      for {
-        j <- 0 until design.n
-        a <- grid.alphas
-      } yield {
-        val yTrain = yp(0 until o, j).toDenseVector
-        val fitsAtGrid: IndexedSeq[ElasticNet.Fit] =
-          if (caretSubmodels) {
-            val autoLams = ElasticNet.autoLambdaSequenceCov(cov, yTrain, a)
-            val path = ElasticNet.fitPathCov(cov, yTrain, a, autoLams,
-              tol = tol, earlyStop = true)
-            graft.linalg.BlockedCv.alignOnto(path, lambdas).toIndexedSeq
-          } else {
-            ElasticNet.fitPathCov(cov, yTrain, a, lambdas, tol = tol).fits
+    val alphas = grid.alphas.toIndexedSeq
+    val nAlpha = alphas.length
+    val nSeg = design.n * nAlpha
+    val (zRows, zCols, yRows) = (design.z.rows, design.z.cols, design.yP.rows)
+
+    // The one fold, over column-major z and yP. Segment s is (equation
+    // s / |α|, α index s % |α|). Origins ascending: one prefix CovDesign
+    // per origin (standardization and Gram rows shared by the segments),
+    // one λ path per segment, its RMSE array added into the segment's sum,
+    // so every sum is taken in origin order.
+    def foldSegments(za: Array[Double], ya: Array[Double], segs: IndexedSeq[Int])
+        : Seq[(Int, Array[Double])] = {
+      val z = new DenseMatrix(zRows, zCols, za)
+      val sums = new Array[Array[Double]](segs.length)
+      for (o <- origins) {
+        val cov = new graft.linalg.CovDesign(
+          z(0 until o, ::).toDenseMatrix, intercept = false, standardize = true)
+        var i = 0
+        while (i < segs.length) {
+          val j = segs(i) / nAlpha
+          val a = alphas(segs(i) % nAlpha)
+          val yTrain = new DenseVector(ya, j * yRows, 1, o)
+          val path =
+            if (caretSubmodels) {
+              val autoLams = ElasticNet.autoLambdaSequenceCov(cov, yTrain, a)
+              ElasticNet.fitPathCov(cov, yTrain, a, autoLams, tol = tol, earlyStop = true)
+            } else ElasticNet.fitPathCov(cov, yTrain, a, lambdas, tol = tol)
+          val rmse = rmseOnto(path, lambdas, za, zRows, ya, j * yRows, o, horizon)
+          val acc = sums(i)
+          if (acc == null) sums(i) = rmse
+          else {
+            var l = 0
+            while (l < acc.length) { acc(l) += rmse(l); l += 1 }
           }
-        val rmse = fitsAtGrid.map { fit =>
-          var sse = 0.0
-          var r = o
-          while (r < o + horizon) {
-            val e = yp(r, j) - (z(r, ::).t dot fit.beta)
-            sse += e * e
-            r += 1
-          }
-          math.sqrt(sse / horizon)
-        }.toArray
-        ((j, a, o), rmse)
+          i += 1
+        }
       }
+      segs.zip(sums)
     }
 
-    // Per-(equation, α) RMSE sums, always folded in ORIGIN ORDER — a
-    // reduceByKey would sum doubles in shuffle-arrival order and drift a
-    // ulp from the sequential path (SparkParitySpec pins exact parity).
-    // Distributed, the fold itself runs on EXECUTORS — composite keys
-    // ((j, α), origin) are partitioned by segment and sorted within
-    // partitions, so each segment's origins arrive consecutively ascending
-    // and fold sequentially; the driver then collects only K × |α| summed
-    // arrays (~1 MB at the reference grid) instead of origins × K × |α|
-    // (~11 MB there, ~GB at a 100× scale-up).
-    val perAlpha: Map[(Int, Double), Array[Double]] = spark match {
+    val za = design.z.toArray
+    val ya = design.yP.toArray
+    val folded: Seq[(Int, Array[Double])] = spark match {
       case Some(s) =>
-        val bc = s.sparkContext.broadcast(
-          (design.z.toArray, design.z.rows, design.z.cols,
-            design.yP.toArray, design.yP.rows, design.yP.cols))
-        val slices = math.min(origins.length, s.sparkContext.defaultParallelism * 4)
-        val segs = design.n * grid.alphas.length
-        val parts = math.max(1, math.min(segs, s.sparkContext.defaultParallelism))
-        val folded = s.sparkContext.parallelize(origins, slices)
-          .flatMap { o =>
-            val (za, zr, zc, ya, yr, yc) = bc.value
-            runOrigin(new DenseMatrix(zr, zc, za), new DenseMatrix(yr, yc, ya))(o)
+        val bc = s.sparkContext.broadcast((za, ya))
+        // Up to 4 tasks per core; task t folds segments t, t + tasks, …
+        // (round robin: segments cost alike, origins do not).
+        val tasks = math.min(nSeg, s.sparkContext.defaultParallelism * 4)
+        val out = s.sparkContext.parallelize(0 until tasks, tasks)
+          .flatMap { t =>
+            val (zb, yb) = bc.value
+            foldSegments(zb, yb, t until nSeg by tasks)
           }
-          .map { case ((j, a, o), rmse) => (((j, a), o), rmse) }
-          .repartitionAndSortWithinPartitions(new SegmentPartitioner(parts))
-          .mapPartitions(foldSortedSegments, preservesPartitioning = true)
-          .collect().toMap
+          .collect().toSeq
         bc.destroy()
-        folded
-      case None =>
-        foldInOriginOrder(origins.flatMap(runOrigin(design.z, design.yP)))
+        out
+      case None => foldSegments(za, ya, 0 until nSeg)
     }
-
-    require(perAlpha.size == design.n * grid.alphas.length,
-      s"tuner fold lost segments: ${perAlpha.size} of ${design.n * grid.alphas.length}")
+    val perSeg = new Array[Array[Double]](nSeg)
+    folded.foreach { case (s, sums) => perSeg(s) = sums }
+    require(perSeg.forall(_ != null),
+      s"tuner fold lost segments: ${perSeg.count(_ != null)} of $nSeg")
 
     val nOrigins = origins.length.toDouble
     (0 until design.n).map { j =>
       val candidates = for {
-        a <- grid.alphas
-        sums = perAlpha((j, a))
+        ai <- alphas.indices
+        sums = perSeg(j * nAlpha + ai)
         li <- lambdas.indices
-      } yield (a, lambdas(li), sums(li) / nOrigins)
+      } yield (alphas(ai), lambdas(li), sums(li) / nOrigins)
       val (a, l, r) = candidates.minBy(_._3)
       Best(j, a, l, r)
     }

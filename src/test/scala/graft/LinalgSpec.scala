@@ -191,6 +191,15 @@ class LinalgSpec extends AnyFunSuite {
     assert(devRatio > 0.99)
   }
 
+  test("maxIterHits counts the lambda steps that stop at maxIter") {
+    val cov = new graft.linalg.CovDesign(x, false, true)
+    val lams = ElasticNet.autoLambdaSequenceCov(cov, y, 0.5, 100)
+    val capped = ElasticNet.fitPathCov(cov, y, 0.5, lams, maxIter = 1, earlyStop = true)
+    assert(capped.maxIterHits > 0)
+    val es = ElasticNet.fitPathCov(cov, y, 0.5, lams, earlyStop = true)
+    assert(es.maxIterHits == 0)
+  }
+
   test("early stopping never exits before mnlam=5 path points") {
     // A pure-noise response converges immediately: without the mnlam guard
     // the zero-progress fdev rule would truncate the path at the 2nd λ.

@@ -57,13 +57,25 @@ class SparkParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("M15 tuner: Spark-distributed grid == sequential, exactly") {
     val y = panel(60, seed = 43L)
-    val grid = RollingOriginTuner.Grid(
+    val small = RollingOriginTuner.Grid(
       Seq(0.2, 0.8), (0 until 10).map(i => math.pow(10.0, -4.0 * i / 9)))
-    val local = RollingOriginTuner.tune(y, p = 1, initWindow = 30, horizon = 4,
-      grid, IndexedSeq("a", "b"))
-    val dist = RollingOriginTuner.tune(y, p = 1, initWindow = 30, horizon = 4,
-      grid, IndexedSeq("a", "b"), spark = Some(spark))
-    assert(local == dist)
+    // 3 equations x 19 alphas = 57 segments > defaultParallelism x 4 = 16
+    // tasks, so every task folds several segments.
+    val g = new TestData.Lcg(44L)
+    val y3 = DenseMatrix.horzcat(y, DenseMatrix.tabulate(60, 1)((_, _) => g.gaussian()))
+    val wide = RollingOriginTuner.Grid(RollingOriginTuner.referenceGrid().alphas,
+      (0 until 20).map(i => math.pow(10.0, 1.0 - 5.0 * i / 19)))
+    assert(3 * wide.alphas.size > spark.sparkContext.defaultParallelism * 4)
+    for {
+      (yy, names, grid) <- Seq((y, IndexedSeq("a", "b"), small), (y3, IndexedSeq("a", "b", "c"), wide))
+      caret <- Seq(false, true)
+    } {
+      val local = RollingOriginTuner.tune(yy, p = 1, initWindow = 30, horizon = 4,
+        grid, names, caretSubmodels = caret)
+      val dist = RollingOriginTuner.tune(yy, p = 1, initWindow = 30, horizon = 4,
+        grid, names, spark = Some(spark), caretSubmodels = caret)
+      assert(local == dist, s"${names.size} equations x ${grid.alphas.size} alphas, caret=$caret")
+    }
   }
 
   test("M3 EnetVar: Spark per-equation fits == sequential, exactly") {

@@ -59,6 +59,44 @@ class TuneSpec extends AnyFunSuite {
       s"caret ${c0.meanRmse} vs direct ${d0.meanRmse}")
   }
 
+  test("M15 rmseOnto equals alignOnto + breeze row dot, bit for bit") {
+    import graft.linalg.{BlockedCv, CovDesign, ElasticNet}
+    val (rows, o, horizon) = (80, 60, 8)
+    def bits(a: Double): Long = java.lang.Double.doubleToRawLongBits(a)
+    for (p <- Seq(1, 5, 34); seed <- 1L to 3L) {
+      val z = TestData.matrix(rows, p, seed = 100L * p + seed)
+      val y = z * TestData.vector(p, seed = seed + 7L) + TestData.vector(rows, seed = seed + 9L) * 0.3
+      val cov = new CovDesign(z(0 until o, ::).toDenseMatrix, intercept = false, standardize = true)
+      val yTrain = y(0 until o).copy
+      val lams = ElasticNet.autoLambdaSequenceCov(cov, yTrain, 0.5, 40)
+      val path = ElasticNet.fitPathCov(cov, yTrain, 0.5, lams, earlyStop = true)
+      val pl = path.lambdas
+      // All four alignOnto cases: above the path, below it, an exact path
+      // lambda, and interpolated lambdas between path points.
+      val master = (Seq(pl.head * 3, pl.head * 1.5, pl.last / 2, pl.last / 7, pl(2), pl(3)) ++
+        pl.indices.init.map(i => 0.3 * pl(i) + 0.7 * pl(i + 1)))
+        .sorted(Ordering[Double].reverse).toIndexedSeq
+      assert(master.exists(_ > pl.head) && master.exists(_ < pl.last) &&
+        master.exists(pl.contains) && master.exists(s => s < pl.head && s > pl.last && !pl.contains(s)))
+      def scored(fits: IndexedSeq[ElasticNet.Fit]): Seq[Double] = fits.map { fit =>
+        var sse = 0.0
+        for (r <- o until o + horizon) {
+          val e = y(r) - (z(r, ::).t dot fit.beta)
+          sse += e * e
+        }
+        math.sqrt(sse / horizon)
+      }
+      val ref = scored(BlockedCv.alignOnto(path, master).toIndexedSeq)
+      val got = RollingOriginTuner.rmseOnto(path, master, z.toArray, rows, y.toArray, 0, o, horizon)
+      assert(got.map(bits).toSeq == ref.map(bits), s"p=$p seed=$seed")
+      // The direct-grid branch: a path fitted at the grid itself scores
+      // each grid lambda at its own path point.
+      val direct = ElasticNet.fitPathCov(cov, yTrain, 0.5, master)
+      val gotDirect = RollingOriginTuner.rmseOnto(direct, master, z.toArray, rows, y.toArray, 0, o, horizon)
+      assert(gotDirect.map(bits).toSeq == scored(direct.fits).map(bits), s"direct p=$p seed=$seed")
+    }
+  }
+
   test("M15 reference grid shape: 19 alphas x 200 lambdas spanning 10^1..10^-4") {
     val g = RollingOriginTuner.referenceGrid()
     assert(g.alphas.length == 19)
