@@ -27,9 +27,7 @@ object CvProbe {
     // columns (what iteration 1 of the repair saw).
     {
       import graft.ingest.PanelIngest
-      val dir = sys.env.getOrElse("SPARK_GRAFT_PANEL_DIR", "data/panel")
-      val mRows = PanelIngest.loadMonthly(spark, s"$dir/monthly_panel.parquet")
-        .orderBy("date").collect()
+      val mRows = GoldenExperiment.monthlyRows(spark)
       for (name <- GoldenExperiment.EzlassoAll.drop(1)) {
         val j = PanelIngest.seriesNames.indexOf(name)
         val lv = mRows.map(r => if (r.isNullAt(j + 1)) Double.NaN else r.getDouble(j + 1))

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -95,6 +95,26 @@ object PanelIngest {
   /** S2: fixed-schema scan of quarterly GDP (232×2). */
   def loadGdp(s: SparkSession, path: String): DataFrame =
     validated(s.read.schema(gdpSchema).parquet(path), gdpSchema, "gdp")
+
+  /** P9 collect of a dated table, rows in ascending `date` order. The rows
+    * all go to the driver anyway, so they are sorted there: one Spark job
+    * (the scan) where `orderBy("date").collect()` ran three (range-bound
+    * sample, shuffle map, result). Dates must be non-null and strictly
+    * increasing — a duplicated month fails here, where Spark's sort would
+    * have passed it through.
+    */
+  def collectByDate(df: DataFrame): Array[Row] = {
+    val di = df.schema.fieldIndex("date")
+    val rows = df.collect()
+    require(rows.forall(!_.isNullAt(di)), "null date in a dated table")
+    val sorted = rows.sortBy(_.getDate(di).toLocalDate.toEpochDay)
+    for (i <- 1 until sorted.length) {
+      val (prev, cur) = (sorted(i - 1).getDate(di), sorted(i).getDate(di))
+      require(cur.toLocalDate.isAfter(prev.toLocalDate),
+        s"dates must strictly increase: $cur repeats")
+    }
+    sorted
+  }
 
   private def quarterCol(c: Column): Column = to_date(date_trunc("quarter", c))
 

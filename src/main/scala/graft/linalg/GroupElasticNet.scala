@@ -31,7 +31,11 @@ object GroupElasticNet {
 
   final case class GroupFit(lambda: Double, intercepts: DenseVector[Double], b: DenseMatrix[Double])
 
-  final case class GroupPath(alpha: Double, fits: IndexedSeq[GroupFit]) {
+  /** A fitted group λ path. `maxIterHits` counts the λ steps that used
+    * their whole `maxIter` sweep budget — a step that stops there may not
+    * have converged (as [[ElasticNet.Path]] counts it).
+    */
+  final case class GroupPath(alpha: Double, fits: IndexedSeq[GroupFit], maxIterHits: Int = 0) {
     def lambdas: IndexedSeq[Double] = fits.map(_.lambda)
     def at(s: Double): GroupFit =
       fits.find(_.lambda == s).getOrElse {
@@ -123,6 +127,7 @@ object GroupElasticNet {
     val active = new Array[Boolean](p)
     val u = new Array[Double](kk)
     val fits = IndexedSeq.newBuilder[GroupFit]
+    var maxIterHits = 0
 
     for (lambda <- lambdas) {
       // Exact refresh at the λ boundary: R = Yw − X·B, cᵢ = XᵀR/N.
@@ -214,6 +219,7 @@ object GroupElasticNet {
           jj += 1
         }
       }
+      if (iter >= maxIter) maxIterHits += 1
       // Unscale: β_orig(j,c) = β(j,c) · ysd_c / xsd_j.
       val bOrig = DenseMatrix.tabulate(p, kk)((j, c) => b(j, c) * yScales(c) / cov.scales(j))
       val b0 = DenseVector.tabulate(kk)(c =>
@@ -225,7 +231,7 @@ object GroupElasticNet {
         } else 0.0)
       fits += GroupFit(lambda, b0, bOrig)
     }
-    GroupPath(alpha, fits.result())
+    GroupPath(alpha, fits.result(), maxIterHits)
   }
 
   /** λmax for the group problem: max_j ‖(1/N)·x̃_jᵀ·Ỹ‖₂ / max(α, 0.001).

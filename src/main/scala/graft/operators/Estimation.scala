@@ -2,7 +2,7 @@ package graft.operators
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import graft.linalg.BlockedCv
-import graft.experiment.ModelTrain
+import graft.experiment.{GoldenExperiment, ModelTrain, Stationarity}
 import graft.sources.Tables
 import graft.stats.{Adf, HacTests}
 import graft.varmodel.{EnetVar, InfCrit, VarDesign}
@@ -29,35 +29,20 @@ object Estimation {
 
   import Relational.Q
 
-  /** Converted reference dataset (tools/convert_panel.py) — a repo-local
-    * fixture, deliberately independent of the testdata scale factor.
+  /** Real-panel fixture dir ([[GoldenExperiment.panelDir]]): absolute, so
+    * the same value interpolates into both the Spark reads and the DuckDB
+    * oracle SQL regardless of checkout location (ADVICE r3).
     */
-  /** Real-panel fixture dir: overridable via SPARK_GRAFT_PANEL_DIR, else
-    * resolved against the working directory (the repo root under sbt) —
-    * absolute so the same value interpolates into both the Spark reads and
-    * the DuckDB oracle SQL regardless of checkout location (ADVICE r3).
-    */
-  private val PanelDir = new java.io.File(
-    sys.env.getOrElse("SPARK_GRAFT_PANEL_DIR", "data/panel")).getAbsolutePath
+  private val PanelDir = GoldenExperiment.panelDir
 
-  /** Once-per-JVM stationarity-repair ledger (t2_stationarity_ledger):
-    * repair is deterministic, so caching only saves the ~7 s re-run on
-    * every bench pass. Plain double-checked locking, NOT
-    * AtomicReference.updateAndGet — that contract wants a side-effect-free
-    * function and may re-execute it under contention, which would launch
-    * duplicate ~7 s Spark jobs.
+  /** Stationarity-repair ledger (t2_stationarity_ledger), built once per
+    * session and keyed by the panel directory `prepare` reads: repair is
+    * deterministic in the panel files, so a later invocation in the same
+    * session replays the rows.
     */
-  @volatile private var t2LedgerCache: Array[graft.experiment.Stationarity.LedgerEntry] = _
-  private val t2LedgerLock = new Object
-  private def t2Ledger(s: SparkSession): Array[graft.experiment.Stationarity.LedgerEntry] = {
-    val cached = t2LedgerCache
-    if (cached != null) cached
-    else t2LedgerLock.synchronized {
-      if (t2LedgerCache == null)
-        t2LedgerCache = graft.experiment.GoldenExperiment.prepare(s).ledger.toArray
-      t2LedgerCache
-    }
-  }
+  private val t2Ledgers = graft.SessionCache[String, Array[Stationarity.LedgerEntry]]()
+  private def t2Ledger(s: SparkSession): Array[Stationarity.LedgerEntry] =
+    t2Ledgers(s, PanelDir)(GoldenExperiment.prepare(s).ledger.toArray)
 
   /** Monthly 2-series panel from orders: (month, rev, n_orders) — the
     * testdata's stand-in for the reference's quarterly macro panel.
@@ -5267,8 +5252,8 @@ object Estimation {
       // unused by design: the panel fixture is scale-independent, and the
       // oracle is the expected ledger as a VALUES literal — any repair
       // drift (ADF regression, repair-loop order, currency pooling)
-      // changes these rows and fails the hash. Repair runs once per JVM
-      // (~7 s); every later invocation replays the cached rows.
+      // changes these rows and fails the hash. Repair runs once per
+      // session; every later invocation replays the cached rows.
       val led = t2Ledger(s)
       import s.implicits._
       led.toSeq.map(e => (e.column, e.transform, e.iteration))

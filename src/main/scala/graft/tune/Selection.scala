@@ -65,7 +65,9 @@ object Selection {
       maxNrVar: Int = 10): Seq[String] = {
     // One recursion per COLUMN, then fill the profile from its lag
     // vector — tabulate's per-cell lambda would re-run the whole
-    // O(lag²·T) Whittle recursion `lag` times per series.
+    // O(lag²·T) Whittle recursion `lag` times per series. The O(lag·T)
+    // autocovariances of each pair are primitive-array sums (see
+    // partialCrossTarget), so the per-column cost is the 2×2 recursion.
     val colProfiles: IndexedSeq[DenseVector[Double]] =
       (0 until y.cols).map { j =>
         if (j == 0) Acf.pacfUnivariate(y(::, 0).copy, lag)
@@ -82,6 +84,13 @@ object Selection {
     * multivariate Levinson recursion (Reinsel 1997 §2.3): P_k =
     * L_f⁻¹ Δ_k L_bᵀ⁻¹ with Cholesky factors of the forward/backward
     * innovation covariances.
+    *
+    * The autocovariances Γ_0..Γ_lagMax are scalar sums over the demeaned
+    * pair's column-major array, accumulated in time order and divided by T
+    * once: bit for bit what summing breeze outer products row by row gives
+    * (TuneSpec holds that spelling as the oracle), without the per-row
+    * allocations. The recursion itself stays on breeze (`cholesky`, `inv`,
+    * the d×d products), so its arithmetic is LAPACK's.
     */
   def partialCrossTarget(pair: DenseMatrix[Double], lagMax: Int): DenseVector[Double] = {
     val t = pair.rows
@@ -92,11 +101,16 @@ object Selection {
       val m = breeze.linalg.sum(c(::, j)) / t.toDouble
       c(::, j) :-= m
     }
-    def gamma(k: Int): DenseMatrix[Double] = {
-      val g = DenseMatrix.zeros[Double](d, d)
+    // Γ_k(i, j) = Σ_tt c(tt + k, i)·c(tt, j) / T, tt ascending: term for
+    // term what summing the outer products c(tt + k, ::)ᵀ·c(tt, ::) did,
+    // without ~T small matrices per lag.
+    val ca = c.toArray
+    def gamma(k: Int): DenseMatrix[Double] = DenseMatrix.tabulate(d, d) { (i, j) =>
+      val (bi, bj) = (i * t + k, j * t)
+      var s = 0.0
       var tt = 0
-      while (tt < t - k) { g += c(tt + k, ::).t * c(tt, ::); tt += 1 }
-      g / t.toDouble
+      while (tt < t - k) { s += ca(bi + tt) * ca(bj + tt); tt += 1 }
+      s / t.toDouble
     }
     val gam = (0 to lagMax).map(gamma)
 

@@ -25,9 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val panelFile = new java.io.File(
-    sys.env.getOrElse("SPARK_GRAFT_PANEL_DIR", "data/panel"),
-    "monthly_panel.parquet")
+  private val panelFile = new java.io.File(GoldenExperiment.panelDir, "monthly_panel.parquet")
   private val runHeavy = sys.env.contains("SPARK_GRAFT_FULL_GOLDEN")
 
   private var spark: SparkSession = _

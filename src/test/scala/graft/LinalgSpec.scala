@@ -1,7 +1,7 @@
 package graft
 
 import breeze.linalg.{diag, DenseMatrix, DenseVector}
-import graft.linalg.{BlockedCv, ElasticNet}
+import graft.linalg.{BlockedCv, ElasticNet, GroupElasticNet}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden tests for the coordinate-descent elastic net (SURVEY §5.2-2,
@@ -198,6 +198,19 @@ class LinalgSpec extends AnyFunSuite {
     assert(capped.maxIterHits > 0)
     val es = ElasticNet.fitPathCov(cov, y, 0.5, lams, earlyStop = true)
     assert(es.maxIterHits == 0)
+  }
+
+  test("GroupElasticNet maxIterHits counts the lambda steps that stop at maxIter") {
+    // Two responses sharing x's support: a group problem on LinalgSpec's
+    // design whose auto path converges well inside the default budget.
+    val y2 = DenseMatrix.horzcat(y.toDenseMatrix.t,
+      (x * DenseVector(0.5, 1.0, 0.0, -0.4, 0.0) + TestData.vector(60, seed = 8L) * 0.1)
+        .toDenseMatrix.t)
+    val lams = GroupElasticNet.autoLambdaSequence(x, y2, 0.5, 30)
+    val capped = GroupElasticNet.fitPath(x, y2, 0.5, lams, maxIter = 1)
+    assert(capped.maxIterHits > 0)
+    val converged = GroupElasticNet.fitPath(x, y2, 0.5, lams)
+    assert(converged.maxIterHits == 0)
   }
 
   test("early stopping never exits before mnlam=5 path points") {

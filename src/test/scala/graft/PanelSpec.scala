@@ -1,6 +1,10 @@
 package graft
 
+import graft.experiment.GoldenExperiment
 import graft.ingest.PanelIngest
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -41,6 +45,52 @@ class PanelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vals = g.orderBy(col("date")).select(col("GDP")).collect().map(_.getDouble(0))
     assert(math.abs(vals.head - 2976.629) < 1e-9)
     assert(math.abs(vals.last - 16813.328) < 1e-9)
+  }
+
+  test("collectByDate: shuffled rows come back date-ascending, as the ordered collect; a repeated date throws") {
+    val m = PanelIngest.loadMonthly(spark, s"$dir/monthly_panel.parquet")
+    val ordered = m.orderBy(col("date")).collect()
+    val shuffled = spark.createDataFrame(
+      java.util.Arrays.asList(new scala.util.Random(7).shuffle(ordered.toSeq): _*), m.schema)
+    assert(!shuffled.collect().sameElements(ordered), "the input must arrive out of order")
+    val got = PanelIngest.collectByDate(shuffled)
+    assert(got.sameElements(ordered))
+    assert(got.map(_.getDate(0).toLocalDate).sliding(2).forall(p => p(0).isBefore(p(1))))
+
+    val g = PanelIngest.loadGdp(spark, s"$dir/gdp_quarterly.parquet")
+    val repeated = g.union(g.orderBy(col("date").desc).limit(1))
+    val e = intercept[IllegalArgumentException](PanelIngest.collectByDate(repeated))
+    assert(e.getMessage.contains("strictly increase"), e.getMessage)
+  }
+
+  test("GoldenExperiment.prepare runs exactly 2 Spark jobs (one plain collect per table)") {
+    val sc = spark.sparkContext
+    val prepareJobs = new AtomicInteger
+    val sentinelDone = new CountDownLatch(1)
+    def group(props: java.util.Properties): String =
+      Option(props).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        group(j.properties) match {
+          case "prepare" => prepareJobs.incrementAndGet()
+          case "sentinel" => sentinelDone.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("prepare", "GoldenExperiment.prepare")
+      GoldenExperiment.prepare(spark)
+      // The listener bus delivers events in order: once the sentinel job's
+      // start has arrived, every job prepare started has been counted.
+      sc.setJobGroup("sentinel", "listener drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelDone.await(60, TimeUnit.SECONDS))
+      assert(prepareJobs.get == 2)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("W1+A1: quarterly diffed panel is 231×147 spanning 1959Q2..2016Q4") {

@@ -148,6 +148,74 @@ class TuneSpec extends AnyFunSuite {
     assert(sel.head == "gdp")
   }
 
+  /** The breeze-γ spelling of [[Selection.partialCrossTarget]]: each Γ_k
+    * sums the row-wise outer products c(tt + k, ::)ᵀ·c(tt, ::) into a
+    * breeze matrix, then divides by T. Kept as the oracle of the
+    * primitive-array Γ_k; the Whittle recursion below it is unchanged.
+    */
+  private def partialCrossTargetBreeze(pair: DenseMatrix[Double], lagMax: Int): DenseVector[Double] = {
+    import breeze.linalg.{cholesky, inv}
+    def symmetrize(m: DenseMatrix[Double]): DenseMatrix[Double] = (m + m.t) / 2.0
+    val t = pair.rows
+    val d = pair.cols
+    val c = pair.copy
+    for (j <- 0 until d) {
+      val m = breeze.linalg.sum(c(::, j)) / t.toDouble
+      c(::, j) :-= m
+    }
+    def gamma(k: Int): DenseMatrix[Double] = {
+      val g = DenseMatrix.zeros[Double](d, d)
+      var tt = 0
+      while (tt < t - k) { g += c(tt + k, ::).t * c(tt, ::); tt += 1 }
+      g / t.toDouble
+    }
+    val gam = (0 to lagMax).map(gamma)
+    var phi = IndexedSeq.empty[DenseMatrix[Double]]
+    var psi = IndexedSeq.empty[DenseMatrix[Double]]
+    var vf = gam(0).copy
+    var vb = gam(0).copy
+    val out = DenseVector.zeros[Double](lagMax)
+    for (k <- 1 to lagMax) {
+      val delta = gam(k) - phi.zipWithIndex.map { case (f, i) =>
+        f * gam(k - i - 1)
+      }.foldLeft(DenseMatrix.zeros[Double](d, d))(_ + _)
+      val lf = cholesky(symmetrize(vf))
+      val lb = cholesky(symmetrize(vb))
+      val pk = inv(lf) * delta * inv(lb).t
+      out(k - 1) = pk(0, 1)
+      val a = delta * inv(vb)
+      val b = delta.t * inv(vf)
+      val phiNew = (phi.zipWithIndex.map { case (f, i) => f - a * psi(k - 2 - i) } :+ a).toIndexedSeq
+      val psiNew = (psi.zipWithIndex.map { case (g, i) => g - b * phi(k - 2 - i) } :+ b).toIndexedSeq
+      vf = symmetrize(vf - a * delta.t)
+      vb = symmetrize(vb - b * delta)
+      phi = phiNew
+      psi = psiNew
+    }
+    out
+  }
+
+  test("M13 partialCrossTarget equals the breeze-γ spelling, bit for bit") {
+    var compared = 0
+    for (seed <- Seq(41L, 42L, 43L); t <- Seq(30, 160, 500)) {
+      val y = predictivePanel(t, seed)
+      val g = new TestData.Lcg(seed + 100)
+      // A near-constant column: a level of 5 with 1e-7 wiggles.
+      val flat = DenseVector.tabulate(t)(_ => 5.0 + 1e-7 * g.gaussian())
+      val xs = Seq(y(::, 1).copy, y(::, 2).copy, flat)
+      for (x <- xs; lagMax <- 1 to 8) {
+        val pair = DenseMatrix.horzcat(y(::, 0).toDenseMatrix.t, x.toDenseMatrix.t)
+        val got = Selection.partialCrossTarget(pair, lagMax).toArray
+        val want = partialCrossTargetBreeze(pair, lagMax).toArray
+        assert(got.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+          want.map(java.lang.Double.doubleToRawLongBits).toSeq,
+          s"seed=$seed T=$t lagMax=$lagMax: ${got.toSeq} vs ${want.toSeq}")
+        compared += got.length
+      }
+    }
+    assert(compared == 3 * 3 * 3 * (1 to 8).sum)
+  }
+
   test("M14 lasso-path ranking: signed vs magnitude ranking flag") {
     val g = new TestData.Lcg(29L)
     val z = DenseMatrix.tabulate(120, 3)((_, _) => g.gaussian())
