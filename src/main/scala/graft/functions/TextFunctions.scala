@@ -52,7 +52,7 @@ object TextFunctions {
     out.result()
   }
 
-  /** d24's content-defined anchor windows — the task-local winnowing
+  /** d22/d23/d24's content-defined anchor windows — the task-local winnowing
     * kernel (k = 8, w = 32, window = 64 chars), replacing the r19
     * interpreted-HOF expression spelling (packed array_min over slices,
     * ~6 s of single-task expression compute at sf0.1) with one O(n)

@@ -1328,6 +1328,13 @@ object TextPipeline {
     * executor on a boilerplate-heavy 100 TB corpus. Per-doc rollup: span
     * count, duplicated-occurrence count, distinct duplicated spans.
     * Exact string arithmetic end-to-end — oracle-exact either path.
+    * d12 keeps the fixed grid while the extent kernels (d22/d23/d24)
+    * seed on winnowing anchors: its output is DEFINED on grid cells —
+    * n_spans is the doc's cell count and a duplicated span is a cell
+    * that recurs verbatim — so content-defined windows would change
+    * what the columns count, not how well they are found. A repeat's
+    * true extent at any alignment is [[maximalRepeatSpansAnchored]]'s
+    * job.
     */
   private[graft] def spanDedup(
       docs0: DataFrame,
@@ -1363,172 +1370,20 @@ object TextPipeline {
         coalesce(col("n_dup_distinct"), lit(0L)).as("n_dup_distinct"))
   }
 
-  /** The d21 kernel — VARIABLE-LENGTH maximal repeated spans, the
-    * boundary-straddling shape [[spanDedup]] structurally under-reports
-    * (VERDICT r16 #5): d12's fixed 64-char grid windows can only say
-    * "this grid cell recurs"; a 150-char repeated passage whose ends
-    * straddle window boundaries surfaces as its interior cells, losing
-    * up to stride−1 = 31 chars at EACH end and never reporting the
-    * repeat's true extent (Lee et al. 2022 use suffix arrays for exactly
-    * this). Relational two-round spelling:
-    *
-    *  1. SEED on colliding grid windows (d12's 64-at-stride-32 spans),
-    *     occupancy-gated: a span participates only with document
-    *     frequency in [2, maxDf] AND ≤ 2·maxDf total occurrences — the
-    *     d3/d16 cap discipline (boilerplate 64-grams shared by thousands
-    *     of docs are d12-counting territory, not pairwise-extent
-    *     territory; an ungated self-join is Σ occ² on the most-repeated
-    *     span in a 100 TB corpus). Cross-doc seed pairs are then
-    *     ≤ maxDf²-bounded per span.
-    *  2. CHAIN maximal runs per (doc_a, doc_b, delta = ob − oa): two
-    *     seeds at consecutive grid offsets under one alignment delta
-    *     overlap by 32 chars, so their union matches verbatim —
-    *     gaps-and-islands (si − row_number) finds each maximal
-    *     consecutive run, covering [sa, ea+64) in doc_a.
-    *  3. EXTEND each run's ends into the straddled boundary windows by
-    *     direct in-row comparison: the longest common suffix of the
-    *     ≤ 31 chars left of the run (reverse + first-mismatch over a
-    *     sequence — codegen'd, no UDF) and the longest common prefix of
-    *     the ≤ 31 chars right of it. 31 suffices BY CONSTRUCTION: a
-    *     32-char extension would make the adjacent grid-window pair
-    *     match and join the run itself (both neighbors sit on their
-    *     docs' grids since delta is seed-derived) — except across a
-    *     gated-out boilerplate window, where the repeat reports as two
-    *     runs (the documented cap semantics, replayed by the oracle).
-    *
-    * Output: one row per maximal span occurrence pair — doc_a, doc_b,
-    * start_a, start_b (1-based), span_len (true extent, ≥ 64),
-    * n_windows (seed windows chained). Exact string arithmetic
-    * end-to-end, so the DuckDB oracle replays seed, chain, and extend.
-    *
-    * RECALL PRECONDITION (phase alignment): a repeat is DETECTED only
-    * when its two occurrences sit at grid-phase-equal offsets (delta ≡
-    * 0 mod 32) — otherwise no grid window of doc_a matches any grid
-    * window of doc_b and the repeat produces no seed at all; of the 32
-    * possible alignments, only the phase-equal one collides. Suffix
-    * arrays (Lee et al.) do not share this gap; the grid kernel trades
-    * that recall for one bounded relational pass. The "true extent"
-    * guarantee is therefore conditional: FOR phase-aligned repeats the
-    * reported span is maximal by construction. [[spanScrub]] (d22) and
-    * the intra-document kernel (d23) inherit the same precondition.
-    * Scale: one explode (2× chars), one Zipf-bounded span aggregate,
-    * a per-span bounded self-join, and per-run O(31) in-row character
-    * compares — no corpus² anywhere.
-    */
-  private[graft] def maximalRepeatSpans(docs0: DataFrame,
-      maxDf: Int = 32): DataFrame = {
-    val docs = docs0.filter(length(col("text")) >= 64)
-    // r19: spans has three downstream references (occupancy gate + both
-    // sides of the pair join) and Spark re-executes the corpus-sized
-    // window explode per reference — one localCheckpoint pins it to one
-    // pass (the d24 kernel's discipline). Identical rows.
-    // Fault-tolerance/storage trade-off, stated once for the whole
-    // span/shingle checkpoint family (ADVICE r19 #3): localCheckpoint
-    // pins blocks to executor storage with NO lineage recovery — an
-    // executor loss mid-query fails the job instead of recomputing, and
-    // the materialization competes for executor memory/disk. That is
-    // the right trade in the local bench and for fault-rare batch; a
-    // long-lived 1000-node deployment would flip these to reliable
-    // checkpoint() against a checkpoint dir (same cadence, same rows) —
-    // the cost model, not the kernel shape, picks the flavor.
-    val spans = gridWindowSpans(docs).localCheckpoint()
-    val gatedSpans = spans.groupBy(col("span"))
-      .agg(countDistinct(col("doc_id")).as("df"), count(lit(1)).as("occ"))
-      .filter(col("df") > 1 && col("df") <= maxDf &&
-        col("occ") <= maxDf * 2)
-      .select(col("span"))
-    val gs = spans.join(gatedSpans, "span")
-    val seeds = gs.select(col("span"), col("doc_id").as("doc_a"),
-        col("off").as("oa"))
-      .join(gs.select(col("span"), col("doc_id").as("doc_b"),
-        col("off").as("ob")), "span")
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("oa"),
-        (col("ob") - col("oa")).as("delta"))
-    chainExtendSpans(docs, seeds)
-  }
-
-  /** The d23 kernel — INTRA-document maximal repeated spans (VERDICT
-    * r17 #4): [[maximalRepeatSpans]]'s doc_a < doc_b pairing
-    * structurally skips a passage repeated WITHIN one document
-    * (boilerplate pasted twice into the same page survives d22's
-    * scrub untouched). Same seed-chain-extend machinery with the
-    * pairing turned inward: seeds are same-document window collisions
-    * at ob > oa (so delta ≥ 32 > 0 — the trivial self-match is
-    * excluded by construction, and delta ≡ 0 mod 32 automatically
-    * since both offsets sit on the grid: intra-doc repeats carry the
-    * phase-alignment precondition exactly when their occurrence gap
-    * is a stride multiple). The occupancy gate keeps only the
-    * boilerplate cap (occ ≤ 2·maxDf — seeds per span stay
-    * occ²-bounded); the df ≥ 2 half is dropped because an intra-doc
-    * repeat needs no second document. OVERLAPPING occurrences
-    * (delta < span_len, periodic text) are legal: the chain/extend
-    * arithmetic compares the text against itself shifted by delta,
-    * which is well-defined on overlapping ranges, and the scrub's
-    * interval merge collapses the resulting overlapping removals —
-    * the same "keep one period" behavior a suffix-array scrub gives.
-    * Output: doc_id, start_a, start_b (1-based, start_a < start_b),
-    * span_len, n_windows.
-    */
-  private[graft] def maximalRepeatSpansIntra(docs0: DataFrame,
-      maxDf: Int = 32): DataFrame = {
-    val docs = docs0.filter(length(col("text")) >= 64)
-    // r19: same one-materialization as [[maximalRepeatSpans]] — three
-    // readers of the corpus-sized window explode. Identical rows.
-    val spans = gridWindowSpans(docs).localCheckpoint()
-    val gatedSpans = spans.groupBy(col("span"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") >= 2 && col("occ") <= maxDf * 2)
-      .select(col("span"))
-    val gs = spans.join(gatedSpans, "span")
-    val seeds = gs.select(col("span"), col("doc_id"),
-        col("off").as("oa"))
-      .join(gs.select(col("span"), col("doc_id"), col("off").as("ob")),
-        Seq("span", "doc_id"))
-      .filter(col("ob") > col("oa"))
-      .select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
-        col("oa"), (col("ob") - col("oa")).as("delta"))
-    chainExtendSpans(docs, seeds)
-      .select(col("doc_a").as("doc_id"), col("start_a"), col("start_b"),
-        col("span_len"), col("n_windows"))
-  }
-
-  /** The d12/d21/d23 shared grid decomposition: every document's
-    * 64-char windows at stride 32 — (doc_id, si, off, span).
-    */
-  // No spreadSmallScan here (r20 A/B): the stride-32 window explode is
-  // ~n/32 rows per doc — too cheap to amortize the extra exchange +
-  // multi-block checkpoint (d21/d22/d23 read 1.3/2.1/1.0 s unspread vs
-  // 1.9/2.8/1.8 s spread at 7 passes). The per-POSITION explodes
-  // (shingles, x43 bigrams, x40 trigrams) are where the spread pays.
-  private def gridWindowSpans(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), col("text"),
-        explode(sequence(lit(1),
-          (floor((length(col("text")) - 64) / 32) + 1).cast("int"))).as("si"))
-      .select(col("doc_id"), col("si"),
-        ((col("si") - 1) * 32 + 1).as("off"),
-        expr("substring(text, (si - 1) * 32 + 1, 64)").as("span"))
-
-  /** d24's CONTENT-DEFINED window decomposition — winnowing anchors
-    * (Schleimer et al. 2003, the x3 fingerprint law at k = 8) instead
-    * of d21's fixed grid: per position the Horner polynomial hash of
-    * the 8-gram (base 1000003 mod 1e9+7 — x3's exact recurrence), and
-    * an anchor at every rightmost-minimum of a w = 32-position sliding
-    * window (the `<=` fold = ORDER BY h ASC, i DESC rn=1, x3's pick
-    * rule). Each anchor that fits emits the 64-char window STARTING at
-    * it. Because anchors are chosen by the text content, two
-    * occurrences of one passage anchor at the same content-relative
-    * positions REGARDLESS of their grid alignment — the recall gap the
-    * grid family documents (only delta ≡ 0 mod 32 seeds) does not
-    * exist here. All three stages are in-row array expressions (char
-    * codes once via split, O(n·8) hashes, O(n·32) window folds — no
-    * per-position explode, no UDF): the shuffle carries only the
-    * ~2/(w+1)-density anchors, so at 100 TB the exploded row count is
-    * ~16× SMALLER than the per-position alternative; a monotone-deque
-    * kernel would make the fold O(n) but leaves the codegen'd
-    * expression path, and w = 32 ops/char is not the bottleneck
-    * against the downstream shuffle.
+  /** The span kernels' CONTENT-DEFINED window decomposition — winnowing
+    * anchors (Schleimer et al. 2003, the x3 fingerprint law at k = 8):
+    * per position the Horner polynomial hash of the 8-gram (base
+    * 1000003 mod 1e9+7 — x3's exact recurrence), and an anchor at every
+    * rightmost-minimum of a w = 32-position sliding window (the `<=`
+    * fold = ORDER BY h ASC, i DESC rn=1, x3's pick rule). Each anchor
+    * that fits emits the 64-char window STARTING at it. Because anchors
+    * are chosen by the text content, two occurrences of one passage
+    * anchor at the same content-relative positions REGARDLESS of their
+    * alignment — a fixed 64-at-stride-32 grid would seed only repeats
+    * whose occurrence gap is ≡ 0 (mod 32), 1 alignment in 32. The
+    * shuffle carries only the ~2/(w+1)-density anchors, so at 100 TB
+    * the exploded row count is ~16× SMALLER than a per-position
+    * explode.
     */
   private def winnowAnchorSpans(docs: DataFrame): DataFrame = {
     // Task-local winnowing kernel (r20, guide §1.2 per-task work): the
@@ -1561,15 +1416,29 @@ object TextPipeline {
       .toDF("doc_id", "off", "span")
   }
 
-  /** The d24 kernel — ALIGNMENT-FREE maximal repeated spans (VERDICT
-    * r18 #1), closing the grid family's documented recall gap: d21/d22/
-    * d23 seed only repeats whose occurrence gap is ≡ 0 (mod 32), so 31
-    * of 32 alignments of a repeated passage produce no seed at all.
-    * Same seed–chain–extend shape with [[winnowAnchorSpans]]'s
-    * content-defined anchors replacing the grid: anchors inside a
-    * shared passage sit at the same content positions in both
-    * occurrences, so the 64-char anchored windows collide at ANY
-    * alignment. Guarantees (w = 32, k = 8):
+  /** The d24 kernel — VARIABLE-LENGTH, ALIGNMENT-FREE maximal repeated
+    * spans, the boundary-straddling shape [[spanDedup]] structurally
+    * under-reports (VERDICT r16 #5, r18 #1): d12's fixed grid cells can
+    * only say "this cell recurs"; a 150-char repeated passage whose ends
+    * straddle cell boundaries surfaces as its interior cells and never
+    * reports its true extent (Lee et al. 2022 use suffix arrays for
+    * exactly this). Relational seed–chain–extend spelling, shared with
+    * the intra-document kernel [[maximalRepeatSpansIntra]] through
+    * [[anchoredRepeatSpans]]:
+    *
+    *  1. SEED on colliding [[winnowAnchorSpans]] windows, occupancy-
+    *     gated: a window participates only with document frequency in
+    *     [2, maxDf] AND ≤ 2·maxDf total occurrences — the d3/d16 cap
+    *     discipline (boilerplate 64-grams shared by thousands of docs
+    *     are d12-counting territory, not pairwise-extent territory; an
+    *     ungated self-join is Σ occ² on the most-repeated span in a
+    *     100 TB corpus). Cross-doc seed pairs (doc_a < doc_b) are then
+    *     ≤ maxDf²-bounded per span.
+    *  2. CHAIN maximal runs per (doc_a, doc_b, delta = ob − oa) with
+    *     [[chainExtendSpans]]'s gaps-and-islands.
+    *  3. EXTEND each run's ends ≤ 31 chars by direct in-row comparison.
+    *
+    * Guarantees (w = 32, k = 8):
     *
     *  - every winnowing window of 32 positions fully inside a repeat
     *    picks the same content-relative anchor in both occurrences, so
@@ -1578,28 +1447,65 @@ object TextPipeline {
     *  - a shared anchor seeds when its 64-window fits inside the
     *    repeat, so any repeat of length ≥ 64 + 31 = 95 seeds at EVERY
     *    alignment (shorter repeats are best-effort — found iff an
-    *    anchor lands close enough to the start, vs the grid family's
-    *    1-in-32 phase lottery even for long repeats);
+    *    anchor lands close enough to the start);
     *  - consecutive seeds in a run are ≤ 32 apart (< the 64-char
-    *    abutment bound, so [[chainExtendSpans]] with maxGap = 64
-    *    chains them verbatim-soundly), and the ≤ 31-char boundary
-    *    extension is maximal by construction: a repeat extending ≥ 32
-    *    past the run would contain another fully-interior winnowing
-    *    window whose shared anchor seeds and chains, contradicting run
-    *    maximality — the anchored analogue of the grid's stride-1
-    *    argument, except across a gated-out boilerplate anchor, where
-    *    the repeat reports as two runs (the d21 cap semantics).
+    *    abutment bound, so the chain is verbatim-sound), and the
+    *    ≤ 31-char boundary extension is maximal by construction: a
+    *    repeat extending ≥ 32 past the run would contain another
+    *    fully-interior winnowing window whose shared anchor seeds and
+    *    chains, contradicting run maximality — except across a
+    *    gated-out boilerplate anchor, where the repeat reports as two
+    *    runs (the documented cap semantics, replayed by the oracle).
     *
-    * Occupancy gate, pairing, output schema (doc_a, doc_b, start_a,
-    * start_b, span_len, n_windows — n_windows now counts chained
-    * ANCHORS), and the no-corpus²-anywhere scale posture are d21's;
-    * the only new cost is the in-row anchor selection. Suffix-array
-    * dedup (Lee et al. 2022) achieves the same alignment freedom with
-    * a global sort; winnowing gets it with one bounded pass and no
-    * cross-document state, which is the 100 TB-friendly trade.
+    * Output: one row per maximal span occurrence pair — doc_a, doc_b,
+    * start_a, start_b (1-based), span_len (true extent, ≥ 64),
+    * n_windows (chained anchors). Exact string arithmetic end-to-end,
+    * so the DuckDB oracle replays anchor selection, seed, chain, and
+    * extend. Suffix-array dedup (Lee et al. 2022) achieves the same
+    * alignment freedom with a global sort; winnowing gets it with one
+    * bounded pass and no cross-document state, which is the 100 TB-
+    * friendly trade. Scale: the in-row anchor pass, one Zipf-bounded
+    * span aggregate, a per-span bounded self-join, and per-run O(31)
+    * in-row character compares — no corpus² anywhere.
     */
   private[graft] def maximalRepeatSpansAnchored(docs0: DataFrame,
-      maxDf: Int = 32): DataFrame = {
+      maxDf: Int = 32): DataFrame =
+    anchoredRepeatSpans(docs0, maxDf, intra = false)
+
+  /** The d23 kernel — INTRA-document maximal repeated spans (VERDICT
+    * r17 #4): [[maximalRepeatSpansAnchored]]'s doc_a < doc_b pairing
+    * structurally skips a passage repeated WITHIN one document
+    * (boilerplate pasted twice into the same page survives d22's
+    * scrub untouched). Same anchored seed-chain-extend machinery with
+    * the pairing turned inward: seeds are same-document anchor-window
+    * collisions at ob > oa (so delta > 0 — the trivial self-match is
+    * excluded by construction; anchors are content-defined, so the
+    * occurrence gap needs no particular phase). The occupancy gate
+    * keeps only the boilerplate cap (occ ≤ 2·maxDf — seeds per span
+    * stay occ²-bounded); the df ≥ 2 half is dropped because an
+    * intra-doc repeat needs no second document. OVERLAPPING
+    * occurrences (delta < span_len, periodic text) are legal: the
+    * chain/extend arithmetic compares the text against itself shifted
+    * by delta, which is well-defined on overlapping ranges, and the
+    * scrub's interval merge collapses the resulting overlapping
+    * removals — the same "keep one period" behavior a suffix-array
+    * scrub gives. Output: doc_id, start_a, start_b (1-based, start_a <
+    * start_b), span_len, n_windows.
+    */
+  private[graft] def maximalRepeatSpansIntra(docs0: DataFrame,
+      maxDf: Int = 32): DataFrame =
+    anchoredRepeatSpans(docs0, maxDf, intra = true)
+      .select(col("doc_a").as("doc_id"), col("start_a"), col("start_b"),
+        col("span_len"), col("n_windows"))
+
+  /** The one span seeding behind d22, d23 and d24: [[winnowAnchorSpans]]
+    * → occupancy gate → pairing → [[chainExtendSpans]]. Cross-document
+    * (`intra` false): df ∈ [2, maxDf] and occ ≤ 2·maxDf, pairs doc_a <
+    * doc_b. Intra-document: occ ∈ [2, 2·maxDf], pairs within one doc at
+    * ob > oa (doc_a = doc_b in the output).
+    */
+  private def anchoredRepeatSpans(docs0: DataFrame, maxDf: Int,
+      intra: Boolean): DataFrame = {
     val docs = docs0.filter(length(col("text")) >= 64)
     // Three downstream references (gate + both sides of the pair
     // join); materialize ONCE so the anchor-selection pass runs once,
@@ -1609,54 +1515,69 @@ object TextPipeline {
     // the first one's cache — cross-pass reuse the bench must not see.
     // The checkpoint lives inside this query's own construction, so
     // each pass pays the full anchor pass in its own timing.
+    // Fault-tolerance/storage trade-off, stated once for the whole
+    // span/shingle checkpoint family (ADVICE r19 #3): localCheckpoint
+    // pins blocks to executor storage with NO lineage recovery — an
+    // executor loss mid-query fails the job instead of recomputing, and
+    // the materialization competes for executor memory/disk. That is
+    // the right trade in the local bench and for fault-rare batch; a
+    // long-lived 1000-node deployment would flip these to reliable
+    // checkpoint() against a checkpoint dir (same cadence, same rows) —
+    // the cost model, not the kernel shape, picks the flavor.
     val spans = winnowAnchorSpans(docs).localCheckpoint()
-    val gatedSpans = spans.groupBy(col("span"))
-      .agg(countDistinct(col("doc_id")).as("df"), count(lit(1)).as("occ"))
-      .filter(col("df") > 1 && col("df") <= maxDf &&
-        col("occ") <= maxDf * 2)
-      .select(col("span"))
+    val gatedSpans =
+      if (intra) spans.groupBy(col("span"))
+        .agg(count(lit(1)).as("occ"))
+        .filter(col("occ") >= 2 && col("occ") <= maxDf * 2)
+        .select(col("span"))
+      else spans.groupBy(col("span"))
+        .agg(countDistinct(col("doc_id")).as("df"), count(lit(1)).as("occ"))
+        .filter(col("df") > 1 && col("df") <= maxDf &&
+          col("occ") <= maxDf * 2)
+        .select(col("span"))
     val gs = spans.join(gatedSpans, "span")
-    val seeds = gs.select(col("span"), col("doc_id").as("doc_a"),
-        col("off").as("oa"))
-      .join(gs.select(col("span"), col("doc_id").as("doc_b"),
-        col("off").as("ob")), "span")
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("oa"),
-        (col("ob") - col("oa")).as("delta"))
-    chainExtendSpans(docs, seeds, maxGap = 64)
+    val pairs =
+      if (intra) gs.select(col("span"), col("doc_id"), col("off").as("oa"))
+        .join(gs.select(col("span"), col("doc_id"), col("off").as("ob")),
+          Seq("span", "doc_id"))
+        .filter(col("ob") > col("oa"))
+        .select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
+          col("oa"), col("ob"))
+      else gs.select(col("span"), col("doc_id").as("doc_a"),
+          col("off").as("oa"))
+        .join(gs.select(col("span"), col("doc_id").as("doc_b"),
+          col("off").as("ob")), "span")
+        .filter(col("doc_a") < col("doc_b"))
+    chainExtendSpans(docs, pairs.select(col("doc_a"), col("doc_b"),
+      col("oa"), (col("ob") - col("oa")).as("delta")))
   }
 
-  /** The CHAIN + EXTEND halves shared by the cross-document (d21),
-    * intra-document (d23), and content-anchored (d24) kernels: seeds
-    * (doc_a, doc_b, oa, delta) chain into maximal runs per (doc_a,
-    * doc_b, delta) via conditional gaps-and-islands — a run breaks
-    * when consecutive seed offsets under one alignment delta are more
-    * than `maxGap` apart. Soundness: any two equal 64-char windows
-    * under one delta whose starts differ by ≤ 64 cover a contiguous
-    * matched range (overlap or abutment), so the island's union
-    * matches verbatim. For the 32-stride grid callers maxGap = 32 is
-    * EXACTLY the old consecutive-grid-index rule (grid offsets differ
-    * by multiples of 32, so gap ≤ 32 ⇔ adjacent windows — d21/d23
-    * results are byte-identical under the refactor); the anchored
-    * caller (d24) passes maxGap = 64, the abutment bound, because its
-    * winnowing anchors land at content-defined (non-grid) offsets
-    * ≤ 32 apart inside a shared passage. Each run's ends then extend
-    * ≤ 31 chars by direct in-row comparison — maximal by construction
-    * for both families (grid: a 32-char extension would have seeded
-    * the adjacent window pair; anchored: a w = 32 winnowing window
-    * fully inside the repeat guarantees a shared anchor within w − 1
-    * = 31 of the true boundary — see [[maximalRepeatSpansAnchored]]).
-    * doc_a = doc_b is legal: both text joins resolve to the same
-    * document and the comparisons read the text against itself
-    * shifted by delta.
+  /** The CHAIN + EXTEND halves of [[anchoredRepeatSpans]]: seeds (doc_a,
+    * doc_b, oa, delta) chain into maximal runs per (doc_a, doc_b, delta)
+    * via conditional gaps-and-islands — a run breaks when consecutive
+    * seed offsets under one alignment delta are more than 64 apart.
+    * Soundness: any two equal 64-char windows under one delta whose
+    * starts differ by ≤ 64 cover a contiguous matched range (overlap or
+    * abutment), so the island's union matches verbatim; winnowing
+    * anchors inside a shared passage land ≤ 32 apart, well inside the
+    * bound. Each run's ends then extend ≤ 31 chars by direct in-row
+    * comparison — maximal by construction, because a w = 32 winnowing
+    * window fully inside the repeat guarantees a shared anchor within
+    * w − 1 = 31 of the true boundary (see
+    * [[maximalRepeatSpansAnchored]]). The compares are codegen'd: the
+    * longest common suffix of the ≤ 31 chars left of the run (reverse +
+    * first-mismatch over a sequence) and the longest common prefix of
+    * the ≤ 31 chars right of it, no UDF. doc_a = doc_b is legal: both
+    * text joins resolve to the same document and the comparisons read
+    * the text against itself shifted by delta.
     */
-  private def chainExtendSpans(docs: DataFrame, seeds: DataFrame,
-      maxGap: Int = 32): DataFrame = {
+  private def chainExtendSpans(docs: DataFrame, seeds: DataFrame)
+      : DataFrame = {
     val w = Window.partitionBy(col("doc_a"), col("doc_b"), col("delta"))
       .orderBy(col("oa"))
     val runs = seeds
       .withColumn("brk", when(
-        col("oa") - lag(col("oa"), 1).over(w) > maxGap, 1).otherwise(0))
+        col("oa") - lag(col("oa"), 1).over(w) > 64, 1).otherwise(0))
       .withColumn("isl",
         sum(col("brk")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
       .groupBy(col("doc_a"), col("doc_b"), col("delta"), col("isl"))
@@ -1696,7 +1617,7 @@ object TextPipeline {
   }
 
   /** The d22 kernel — SPAN SCRUB, the removal step Lee et al. 2022 run
-    * after finding repeated passages (d21 reports them; this rewrites
+    * after finding repeated passages (d24 reports them; this rewrites
     * the corpus with them removed): every maximal-span occurrence on
     * the doc_b side (doc_a < doc_b, so the LOWEST-doc occurrence always
     * survives — one canonical copy per repeat) becomes a removal
@@ -1707,18 +1628,17 @@ object TextPipeline {
     * one row per ORIGINAL document: merged-interval count, chars
     * removed, scrubbed length, and the md5 of the scrubbed text (the
     * lean exact witness; an exact duplicate pair scrubs its higher doc
-    * to the empty string). Inherits [[maximalRepeatSpans]]'s
-    * phase-alignment precondition: only delta ≡ 0 (mod 32) repeats are
-    * found, so "remove repeated passages" means phase-aligned ones —
-    * a suffix-array scrub does not share that recall gap. Scale: d21's bounded machinery + one
-    * per-doc window over its own (few) intervals + a segment
-    * concatenation — no new joins against the corpus beyond the text
-    * lookup.
+    * to the empty string). Seeds come from
+    * [[maximalRepeatSpansAnchored]], so a repeated passage of ≥ 95
+    * chars is removed at any alignment of its copies. Scale: d24's
+    * bounded machinery + one per-doc window over its own (few)
+    * intervals + a segment concatenation — no new joins against the
+    * corpus beyond the text lookup.
     */
   private[graft] def spanScrub(docs0: DataFrame, maxDf: Int = 32)
       : DataFrame =
     scrubByIntervals(docs0,
-      maximalRepeatSpans(docs0, maxDf)
+      maximalRepeatSpansAnchored(docs0, maxDf)
         .select(col("doc_b").as("doc_id"), col("start_b").as("s"),
           (col("start_b") + col("span_len")).as("e"))
         .distinct())
@@ -3724,84 +3644,28 @@ object TextPipeline {
       "hnsw" -> (() => hnswRows))
   }
 
-  /** d21's seed-chain-extend CTE graph (ends at ex21d: doc pair, run
-    * bounds, extensions) — shared by d21's span report and d22's span
-    * SCRUB, which removes the doc_b-side occurrences.
-    */
-  private lazy val d21OracleCtes: String =
-    """dd21 AS (
-           SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-         sp21 AS (
-           SELECT doc_id, si, (si - 1) * 32 + 1 AS off,
-                  substr(text, (si - 1) * 32 + 1, 64) AS span
-           FROM (SELECT doc_id, text,
-                        unnest(generate_series(1,
-                          cast(floor((length(text) - 64) / 32.0) AS int) + 1))
-                          AS si
-                 FROM dd21)),
-         g21 AS (SELECT span FROM sp21 GROUP BY 1
-                 HAVING count(DISTINCT doc_id) BETWEEN 2 AND 32
-                    AND count(*) <= 64),
-         gs21 AS MATERIALIZED (
-           SELECT s.* FROM sp21 s JOIN g21 g ON g.span = s.span),
-         sd21 AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.si AS sia,
-                  a.off AS oa, b.off - a.off AS delta
-           FROM gs21 a JOIN gs21 b
-             ON b.span = a.span AND a.doc_id < b.doc_id),
-         rn21 AS (
-           SELECT doc_a, doc_b, delta, oa,
-                  sia - row_number() OVER (PARTITION BY doc_a, doc_b, delta
-                                           ORDER BY oa) AS isl
-           FROM sd21),
-         il21 AS (
-           SELECT doc_a, doc_b, delta, isl, min(oa) AS sa, max(oa) AS ea,
-                  count(*) AS n_windows
-           FROM rn21 GROUP BY 1, 2, 3, 4),
-         ex21 AS (
-           SELECT i.doc_a, i.doc_b, i.sa, i.ea, i.n_windows,
-                  i.sa + i.delta AS sb, i.ea + i.delta AS eb,
-                  ta.text AS text_a, tb.text AS text_b,
-                  least(31, i.sa - 1, i.sa + i.delta - 1) AS ln,
-                  least(31, length(ta.text) - i.ea - 63,
-                        length(tb.text) - (i.ea + i.delta) - 63) AS rext
-           FROM il21 i JOIN dd21 ta ON ta.doc_id = i.doc_a
-           JOIN dd21 tb ON tb.doc_id = i.doc_b),
-         ex21b AS (
-           SELECT *, reverse(substr(text_a, sa - ln, ln)) AS rva,
-                  reverse(substr(text_b, sb - ln, ln)) AS rvb,
-                  substr(text_a, ea + 64, rext) AS fa,
-                  substr(text_b, eb + 64, rext) AS fb
-           FROM ex21),
-         ex21c AS (
-           SELECT doc_a, doc_b, sa, ea, sb, n_windows, rext, fa, fb,
-                  CASE WHEN ln <= 0 THEN 0 ELSE
-                    coalesce(list_min(list_filter(generate_series(1, ln),
-                      i -> substr(rva, i, 1) <> substr(rvb, i, 1))) - 1, ln)
-                  END AS left_ext
-           FROM ex21b),
-         ex21d AS (
-           SELECT doc_a, doc_b, sa, ea, sb, n_windows, left_ext,
-                  CASE WHEN rext <= 0 THEN 0 ELSE
-                    coalesce(list_min(list_filter(generate_series(1, rext),
-                      i -> substr(fa, i, 1) <> substr(fb, i, 1))) - 1, rext)
-                  END AS right_ext
-           FROM ex21c)"""
-
-  /** d24's anchor-seed-chain-extend CTE graph (ends at ex24d — the
-    * same terminal shape as d21's ex21d, so a future anchored scrub
-    * composes the d22 removal CTEs unchanged). Anchor selection is
-    * x3's window-enumeration spelling at k = 8, w = 32: per-position
+  /** The anchor-seed-chain-extend CTE graph behind d22, d23 and d24
+    * (ends at ex24d: doc pair, run bounds, extensions). Anchor selection
+    * is x3's window-enumeration spelling at k = 8, w = 32: per-position
     * Horner hashes, rightmost-min per 32-position window (ORDER BY h
     * ASC, i DESC), DISTINCT picks; chaining is the conditional
-    * gaps-and-islands (break at oa gap > 64) mirroring the Spark
-    * side's maxGap = 64.
+    * gaps-and-islands (break at oa gap > 64) mirroring
+    * [[chainExtendSpans]]. `intra` swaps the gate and the pairing as
+    * [[anchoredRepeatSpans]] does: the occurrence cap alone, and
+    * same-document pairs at b.off > a.off (doc_a = doc_b).
     */
-  private lazy val d24OracleCtes: String = {
+  private def anchoredSpanCtes(intra: Boolean): String = {
     val horner8 = (1 until 8).foldLeft(
       "cast(ascii(substr(text, i, 1)) AS bigint)") { (acc, j) =>
       s"(($acc * 1000003 + ascii(substr(text, i + $j, 1))) % 1000000007)"
     }
+    val gate =
+      if (intra) "count(*) BETWEEN 2 AND 64"
+      else """count(DISTINCT doc_id) BETWEEN 2 AND 32
+                    AND count(*) <= 64"""
+    val pair =
+      if (intra) "b.doc_id = a.doc_id AND b.off > a.off"
+      else "a.doc_id < b.doc_id"
     s"""dd24 AS (
            SELECT doc_id, text FROM documents WHERE length(text) >= 64),
          hs24 AS MATERIALIZED (
@@ -3824,15 +3688,14 @@ object TextPipeline {
            FROM anc24 a JOIN dd24 d ON d.doc_id = a.doc_id
            WHERE a.i + 63 <= length(d.text)),
          g24 AS (SELECT span FROM sp24 GROUP BY 1
-                 HAVING count(DISTINCT doc_id) BETWEEN 2 AND 32
-                    AND count(*) <= 64),
+                 HAVING $gate),
          gs24 AS MATERIALIZED (
            SELECT s.* FROM sp24 s JOIN g24 g ON g.span = s.span),
          sd24 AS (
            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.off AS oa,
                   b.off - a.off AS delta
            FROM gs24 a JOIN gs24 b
-             ON b.span = a.span AND a.doc_id < b.doc_id),
+             ON b.span = a.span AND $pair),
          brk24 AS (
            SELECT doc_a, doc_b, delta, oa,
                   CASE WHEN oa - lag(oa) OVER (PARTITION BY doc_a, doc_b,
@@ -3877,6 +3740,62 @@ object TextPipeline {
                   END AS right_ext
            FROM ex24c)"""
   }
+
+  /** The d22/d23 oracle: [[anchoredSpanCtes]] plus the removal graph
+    * [[scrubByIntervals]] replays — each doc_b-side occurrence becomes a
+    * removal interval, intervals merge per doc (running-max
+    * gaps-and-islands), the document rewrites as its complement
+    * segments, and one ledger row per original document.
+    */
+  private def spanScrubOracle(intra: Boolean): String =
+    s"""WITH ${anchoredSpanCtes(intra)},
+         rem AS (SELECT DISTINCT doc_b AS doc_id, sb - left_ext AS s,
+                        sb - left_ext
+                          + (ea + 64 - sa + left_ext + right_ext) AS e
+                 FROM ex24d),
+         mrk AS (SELECT doc_id, s, e,
+                        CASE WHEN s > coalesce(max(e) OVER (
+                               PARTITION BY doc_id ORDER BY s, e
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                               AND 1 PRECEDING), 0)
+                        THEN 1 ELSE 0 END AS ni
+                 FROM rem),
+         isl AS (SELECT doc_id, s, e,
+                        sum(ni) OVER (PARTITION BY doc_id ORDER BY s, e
+                          ROWS UNBOUNDED PRECEDING) AS g
+                 FROM mrk),
+         mrg AS (SELECT doc_id, g, min(s) AS s, max(e) AS e
+                 FROM isl GROUP BY 1, 2),
+         tl AS (SELECT mx.doc_id, mx.f, length(d.text) + 1 AS t
+                FROM (SELECT doc_id, max(e) AS f FROM mrg GROUP BY 1) mx
+                JOIN dd24 d ON d.doc_id = mx.doc_id),
+         seg AS (SELECT doc_id,
+                        coalesce(lag(e) OVER (PARTITION BY doc_id
+                          ORDER BY s), 1) AS f,
+                        s AS t
+                 FROM mrg
+                 UNION ALL SELECT doc_id, f, t FROM tl),
+         cat AS (SELECT s2.doc_id,
+                        string_agg(substr(d.text, s2.f, s2.t - s2.f), ''
+                          ORDER BY s2.f) AS nt
+                 FROM seg s2 JOIN dd24 d ON d.doc_id = s2.doc_id
+                 WHERE s2.t > s2.f GROUP BY 1),
+         sc AS (SELECT m.doc_id, coalesce(cat.nt, '') AS nt
+                FROM (SELECT DISTINCT doc_id FROM mrg) m
+                LEFT JOIN cat ON cat.doc_id = m.doc_id),
+         cn AS (SELECT doc_id, cast(count(*) AS bigint) AS n,
+                       cast(sum(e - s) AS bigint) AS removed
+                FROM mrg GROUP BY 1)
+         SELECT d.doc_id,
+                coalesce(cn.n, 0) AS n_spans_removed,
+                coalesce(cn.removed, 0) AS n_chars_removed,
+                cast(length(coalesce(sc.nt, d.text)) AS bigint)
+                  AS scrubbed_len,
+                md5(coalesce(sc.nt, d.text)) AS scrubbed_md5
+         FROM documents d
+         LEFT JOIN cn ON cn.doc_id = d.doc_id
+         LEFT JOIN sc ON sc.doc_id = d.doc_id
+         ORDER BY d.doc_id"""
 
   val entries: Seq[(String, Q, Option[String])] = Seq(
 
@@ -5348,237 +5267,59 @@ object TextPipeline {
          FROM per p LEFT JOIN dd ON dd.doc_id = p.doc_id
          ORDER BY p.doc_id""")),
 
-    ("d21_maximal_spans", (s: SparkSession, d: String) => {
-      // Variable-length maximal repeated spans (VERDICT r16 #5) — the
-      // TRUE-EXTENT report d12 cannot give: seed on colliding 64-char
-      // grid windows (occupancy-gated), chain consecutive seeds per
-      // (doc pair, alignment delta) into maximal runs, then extend both
-      // ends into the straddled boundary windows by exact in-row
-      // character comparison (≤ 31 chars each side by construction —
-      // a 32-char extension would have seeded the adjacent window
-      // pair). One row per maximal span occurrence pair with its full
-      // length; exact string arithmetic throughout, so the oracle
-      // replays seed, chain, and extend. See [[maximalRepeatSpans]]
-      // for the scale posture (Zipf-bounded aggregate, per-span
-      // ≤ maxDf²-bounded self-join, O(31) boundary compares).
-      maximalRepeatSpans(Tables.documents(s, d))
-        .orderBy(col("doc_a"), col("doc_b"), col("start_a"),
-          col("start_b"), col("span_len"))
-    }, Some(
-      s"""WITH $d21OracleCtes
-         SELECT doc_a, doc_b,
-                cast(sa - left_ext AS bigint) AS start_a,
-                cast(sb - left_ext AS bigint) AS start_b,
-                cast(ea + 64 - sa + left_ext + right_ext AS bigint)
-                  AS span_len,
-                cast(n_windows AS bigint) AS n_windows
-         FROM ex21d
-         ORDER BY doc_a, doc_b, start_a, start_b, span_len""")),
-
     ("d22_span_scrub", (s: SparkSession, d: String) => {
-      // The REMOVAL step over d21's report (Lee et al.'s actual
+      // The REMOVAL step over d24's report (Lee et al.'s actual
       // operation): scrub every repeated-span occurrence except the
       // lowest-doc one, merge overlapping removal intervals per doc,
       // rewrite each document as its complement segments, and emit the
       // per-doc ledger (merged spans, chars removed, scrubbed length,
       // md5 of the scrubbed text — the exact witness; an exact-dup
-      // pair's higher doc scrubs to the empty string). See [[spanScrub]].
+      // pair's higher doc scrubs to the empty string). Seeds are d24's
+      // winnowing anchors, so a repeat of ≥ 95 chars scrubs at any
+      // alignment of its copies. See [[spanScrub]].
       spanScrub(Tables.documents(s, d)).orderBy(col("doc_id"))
-    }, Some(
-      s"""WITH $d21OracleCtes,
-         rem22 AS (SELECT DISTINCT doc_b AS doc_id, sb - left_ext AS s,
-                          sb - left_ext
-                            + (ea + 64 - sa + left_ext + right_ext) AS e
-                   FROM ex21d),
-         mrk22 AS (SELECT doc_id, s, e,
-                          CASE WHEN s > coalesce(max(e) OVER (
-                                 PARTITION BY doc_id ORDER BY s, e
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING), 0)
-                          THEN 1 ELSE 0 END AS ni
-                   FROM rem22),
-         isl22 AS (SELECT doc_id, s, e,
-                          sum(ni) OVER (PARTITION BY doc_id ORDER BY s, e
-                            ROWS UNBOUNDED PRECEDING) AS g
-                   FROM mrk22),
-         mrg22 AS (SELECT doc_id, g, min(s) AS s, max(e) AS e
-                   FROM isl22 GROUP BY 1, 2),
-         tl22 AS (SELECT mx.doc_id, mx.f, length(d.text) + 1 AS t
-                  FROM (SELECT doc_id, max(e) AS f FROM mrg22
-                        GROUP BY 1) mx
-                  JOIN dd21 d ON d.doc_id = mx.doc_id),
-         seg22 AS (SELECT doc_id,
-                          coalesce(lag(e) OVER (PARTITION BY doc_id
-                            ORDER BY s), 1) AS f,
-                          s AS t
-                   FROM mrg22
-                   UNION ALL SELECT doc_id, f, t FROM tl22),
-         sa22 AS (SELECT s2.doc_id,
-                         string_agg(substr(d.text, s2.f, s2.t - s2.f), ''
-                           ORDER BY s2.f) AS nt
-                  FROM seg22 s2 JOIN dd21 d ON d.doc_id = s2.doc_id
-                  WHERE s2.t > s2.f GROUP BY 1),
-         sc22 AS (SELECT m.doc_id, coalesce(sa22.nt, '') AS nt
-                  FROM (SELECT DISTINCT doc_id FROM mrg22) m
-                  LEFT JOIN sa22 ON sa22.doc_id = m.doc_id),
-         cn22 AS (SELECT doc_id, cast(count(*) AS bigint) AS n,
-                         cast(sum(e - s) AS bigint) AS removed
-                  FROM mrg22 GROUP BY 1)
-         SELECT d.doc_id,
-                coalesce(cn22.n, 0) AS n_spans_removed,
-                coalesce(cn22.removed, 0) AS n_chars_removed,
-                cast(length(coalesce(sc22.nt, d.text)) AS bigint)
-                  AS scrubbed_len,
-                md5(coalesce(sc22.nt, d.text)) AS scrubbed_md5
-         FROM documents d
-         LEFT JOIN cn22 ON cn22.doc_id = d.doc_id
-         LEFT JOIN sc22 ON sc22.doc_id = d.doc_id
-         ORDER BY d.doc_id""")),
+    }, Some(spanScrubOracle(intra = false))),
 
     ("d23_intra_scrub", (s: SparkSession, d: String) => {
       // INTRA-document span scrub (VERDICT r17 #4) — the repeat class
-      // d21/d22 structurally skip: their doc_a < doc_b pairing never
-      // pairs a document with itself, so a passage pasted twice INTO
-      // ONE document survives d22 untouched (the planted PipelineSpec
-      // case proves it). Same seed-chain-extend machinery turned
-      // inward (same-doc window collisions at ob > oa — delta ≥ 32
-      // excludes the trivial self-match; overlapping periodic
-      // occurrences are legal and their removal intervals merge), then
-      // d22's removal semantics: every later occurrence scrubs, the
-      // earliest copy survives, one ledger row per document. See
-      // [[maximalRepeatSpansIntra]]/[[spanScrubIntra]] for the gate
-      // (occ-cap only — an intra repeat needs no second document) and
-      // the scale posture (occ²-bounded seeds, no corpus² anywhere).
+      // d22's doc_a < doc_b pairing structurally skips: it never pairs
+      // a document with itself, so a passage pasted twice INTO ONE
+      // document survives d22 untouched (the planted PipelineSpec case
+      // proves it). The same anchored seed-chain-extend machinery
+      // turned inward (same-doc anchor-window collisions at ob > oa —
+      // delta > 0 excludes the trivial self-match; overlapping
+      // periodic occurrences are legal and their removal intervals
+      // merge), then d22's removal semantics: every later occurrence
+      // scrubs, the earliest copy survives, one ledger row per
+      // document. See [[maximalRepeatSpansIntra]]/[[spanScrubIntra]]
+      // for the gate (occ-cap only — an intra repeat needs no second
+      // document) and the scale posture (occ²-bounded seeds, no
+      // corpus² anywhere).
       spanScrubIntra(Tables.documents(s, d)).orderBy(col("doc_id"))
-    }, Some(
-      """WITH dd23 AS (
-           SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-         sp23 AS (
-           SELECT doc_id, si, (si - 1) * 32 + 1 AS off,
-                  substr(text, (si - 1) * 32 + 1, 64) AS span
-           FROM (SELECT doc_id, text,
-                        unnest(generate_series(1,
-                          cast(floor((length(text) - 64) / 32.0) AS int) + 1))
-                          AS si
-                 FROM dd23)),
-         g23 AS (SELECT span FROM sp23 GROUP BY 1
-                 HAVING count(*) BETWEEN 2 AND 64),
-         gs23 AS MATERIALIZED (
-           SELECT s.* FROM sp23 s JOIN g23 g ON g.span = s.span),
-         sd23 AS (
-           SELECT a.doc_id, a.si AS sia, a.off AS oa,
-                  b.off - a.off AS delta
-           FROM gs23 a JOIN gs23 b
-             ON b.span = a.span AND b.doc_id = a.doc_id
-            AND b.off > a.off),
-         rn23 AS (
-           SELECT doc_id, delta, oa,
-                  sia - row_number() OVER (PARTITION BY doc_id, delta
-                                           ORDER BY oa) AS isl
-           FROM sd23),
-         il23 AS (
-           SELECT doc_id, delta, isl, min(oa) AS sa, max(oa) AS ea,
-                  count(*) AS n_windows
-           FROM rn23 GROUP BY 1, 2, 3),
-         ex23 AS (
-           SELECT i.doc_id, i.sa, i.ea, i.n_windows,
-                  i.sa + i.delta AS sb, i.ea + i.delta AS eb,
-                  t.text,
-                  least(31, i.sa - 1, i.sa + i.delta - 1) AS ln,
-                  least(31, length(t.text) - i.ea - 63,
-                        length(t.text) - (i.ea + i.delta) - 63) AS rext
-           FROM il23 i JOIN dd23 t ON t.doc_id = i.doc_id),
-         ex23b AS (
-           SELECT *, reverse(substr(text, sa - ln, ln)) AS rva,
-                  reverse(substr(text, sb - ln, ln)) AS rvb,
-                  substr(text, ea + 64, rext) AS fa,
-                  substr(text, eb + 64, rext) AS fb
-           FROM ex23),
-         ex23c AS (
-           SELECT doc_id, sa, ea, sb, n_windows, rext, fa, fb,
-                  CASE WHEN ln <= 0 THEN 0 ELSE
-                    coalesce(list_min(list_filter(generate_series(1, ln),
-                      i -> substr(rva, i, 1) <> substr(rvb, i, 1))) - 1, ln)
-                  END AS left_ext
-           FROM ex23b),
-         ex23d AS (
-           SELECT doc_id, sa, ea, sb, n_windows, left_ext,
-                  CASE WHEN rext <= 0 THEN 0 ELSE
-                    coalesce(list_min(list_filter(generate_series(1, rext),
-                      i -> substr(fa, i, 1) <> substr(fb, i, 1))) - 1, rext)
-                  END AS right_ext
-           FROM ex23c),
-         rem23 AS (SELECT DISTINCT doc_id, sb - left_ext AS s,
-                          sb - left_ext
-                            + (ea + 64 - sa + left_ext + right_ext) AS e
-                   FROM ex23d),
-         mrk23 AS (SELECT doc_id, s, e,
-                          CASE WHEN s > coalesce(max(e) OVER (
-                                 PARTITION BY doc_id ORDER BY s, e
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING), 0)
-                          THEN 1 ELSE 0 END AS ni
-                   FROM rem23),
-         ism23 AS (SELECT doc_id, s, e,
-                          sum(ni) OVER (PARTITION BY doc_id ORDER BY s, e
-                            ROWS UNBOUNDED PRECEDING) AS g
-                   FROM mrk23),
-         mrg23 AS (SELECT doc_id, g, min(s) AS s, max(e) AS e
-                   FROM ism23 GROUP BY 1, 2),
-         tl23 AS (SELECT mx.doc_id, mx.f, length(d.text) + 1 AS t
-                  FROM (SELECT doc_id, max(e) AS f FROM mrg23
-                        GROUP BY 1) mx
-                  JOIN dd23 d ON d.doc_id = mx.doc_id),
-         seg23 AS (SELECT doc_id,
-                          coalesce(lag(e) OVER (PARTITION BY doc_id
-                            ORDER BY s), 1) AS f,
-                          s AS t
-                   FROM mrg23
-                   UNION ALL SELECT doc_id, f, t FROM tl23),
-         sa23 AS (SELECT s2.doc_id,
-                         string_agg(substr(d.text, s2.f, s2.t - s2.f), ''
-                           ORDER BY s2.f) AS nt
-                  FROM seg23 s2 JOIN dd23 d ON d.doc_id = s2.doc_id
-                  WHERE s2.t > s2.f GROUP BY 1),
-         sc23 AS (SELECT m.doc_id, coalesce(sa23.nt, '') AS nt
-                  FROM (SELECT DISTINCT doc_id FROM mrg23) m
-                  LEFT JOIN sa23 ON sa23.doc_id = m.doc_id),
-         cn23 AS (SELECT doc_id, cast(count(*) AS bigint) AS n,
-                         cast(sum(e - s) AS bigint) AS removed
-                  FROM mrg23 GROUP BY 1)
-         SELECT d.doc_id,
-                coalesce(cn23.n, 0) AS n_spans_removed,
-                coalesce(cn23.removed, 0) AS n_chars_removed,
-                cast(length(coalesce(sc23.nt, d.text)) AS bigint)
-                  AS scrubbed_len,
-                md5(coalesce(sc23.nt, d.text)) AS scrubbed_md5
-         FROM documents d
-         LEFT JOIN cn23 ON cn23.doc_id = d.doc_id
-         LEFT JOIN sc23 ON sc23.doc_id = d.doc_id
-         ORDER BY d.doc_id""")),
+    }, Some(spanScrubOracle(intra = true))),
 
     ("d24_anchored_spans", (s: SparkSession, d: String) => {
-      // ALIGNMENT-FREE maximal repeated spans (VERDICT r18 #1): d21's
-      // grid kernel seeds only repeats at delta ≡ 0 (mod 32) — 31 of
-      // 32 alignments of a repeated passage are invisible to it.
-      // Winnowing anchors (x3's rolling-hash fingerprint law, k = 8,
-      // w = 32) seed windows at positions the TEXT chooses, so both
-      // occurrences of a passage anchor at the same content-relative
-      // offsets regardless of alignment: any repeat ≥ 95 chars seeds
-      // at EVERY alignment. Chain (maxGap = 64, the window-abutment
-      // bound) and ≤ 31-char boundary extension reuse the shared
-      // chainExtendSpans machinery; the oracle replays anchor
-      // selection, seed, chain, and extend. The planted PipelineSpec
-      // case: a 150-char passage at delta ≡ 16 (mod 32) that d21
-      // provably reports as EMPTY surfaces here at true extent. See
-      // [[maximalRepeatSpansAnchored]] for the guarantee derivation
-      // and scale posture (in-row anchor arrays, anchors-only shuffle,
-      // no corpus² anywhere).
+      // Variable-length, ALIGNMENT-FREE maximal repeated spans (VERDICT
+      // r16 #5, r18 #1) — the TRUE-EXTENT report d12's grid counts
+      // cannot give. Winnowing anchors (x3's rolling-hash fingerprint
+      // law, k = 8, w = 32) seed windows at positions the TEXT
+      // chooses, so both occurrences of a passage anchor at the same
+      // content-relative offsets regardless of alignment: any repeat
+      // ≥ 95 chars seeds at EVERY alignment. Seeds are occupancy-gated,
+      // chained per (doc pair, alignment delta) into maximal runs, and
+      // both ends extend ≤ 31 chars by exact in-row character
+      // comparison; the oracle replays anchor selection, seed, chain,
+      // and extend. The planted PipelineSpec cases: a 150-char passage
+      // at all 32 alignment classes reports at true extent, and a
+      // 150-char repeat straddling d12's grid reports whole where d12
+      // sees 2 cells. See [[maximalRepeatSpansAnchored]] for the
+      // guarantee derivation and scale posture (anchors-only shuffle,
+      // per-span ≤ maxDf²-bounded self-join, no corpus² anywhere).
       maximalRepeatSpansAnchored(Tables.documents(s, d))
         .orderBy(col("doc_a"), col("doc_b"), col("start_a"),
           col("start_b"), col("span_len"))
     }, Some(
-      s"""WITH $d24OracleCtes
+      s"""WITH ${anchoredSpanCtes(intra = false)}
          SELECT doc_a, doc_b,
                 cast(sa - left_ext AS bigint) AS start_a,
                 cast(sb - left_ext AS bigint) AS start_b,

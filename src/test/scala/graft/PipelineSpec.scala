@@ -1896,14 +1896,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(3L) == ((0, 1, "<NUM>")))
   }
 
-  test("maximalRepeatSpans: a boundary-straddling 150-char repeat reports whole; d12 provably under-reports it") {
+  test("maximalRepeatSpansAnchored: a boundary-straddling 150-char repeat reports whole; d12 provably under-reports it") {
     // Planted per VERDICT r16 #5: a 150-char passage P shared by two docs
-    // at grid-phase-equal but unequal offsets (41 in A, 73 in B — both
-    // ≡ 9 mod 32, delta 32), with ends straddling the 64-at-32 grid.
-    // Only TWO grid windows (offsets 65, 97 in A) sit fully inside P, so
-    // d12 sees 96 covered chars and no extent; d21 must chain the two
-    // seeds, extend 24 left and 30 right by exact comparison, and report
-    // the repeat WHOLE: (start_a 41, start_b 73, span_len 150).
+    // at unequal offsets (41 in A, 73 in B), with ends straddling d12's
+    // 64-at-32 grid. Only TWO grid windows (offsets 65, 97 in A) sit
+    // fully inside P, so d12 sees 96 covered chars and no extent; d24
+    // must chain P's shared anchors, extend by exact comparison, and
+    // report the repeat WHOLE: (start_a 41, start_b 73, span_len 150).
     val s = spark
     import s.implicits._
     val p = (0 until 150).map(i =>
@@ -1912,34 +1911,31 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docA = ("1" * 40) + p + ("2" * 70)
     val docB = ("3" * 72) + p + ("4" * 38)
     val docs = Seq((1L, docA), (2L, docB)).toDF("doc_id", "text")
-    val d21 = TextPipeline.maximalRepeatSpans(docs).collect()
-    assert(d21.length == 1, s"expected one maximal span, got ${d21.toSeq}")
-    val r = d21.head
+    val d24 = TextPipeline.maximalRepeatSpansAnchored(docs).collect()
+    assert(d24.length == 1, s"expected one maximal span, got ${d24.toSeq}")
+    val r = d24.head
     assert((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)) ==
-      ((41L, 73L, 150L, 2L)), s"d21 row: $r")
+      ((41L, 73L, 150L, 4L)), s"d24 row: $r")
     // d12 on the same docs: 2 duplicated grid spans per doc = 96 covered
-    // chars < 150 — the structural under-report d21 exists to fix.
+    // chars < 150 — the structural under-report d24 exists to fix.
     val d12 = TextPipeline.spanDedup(docs).collect()
       .map(x => x.getLong(0) -> x.getLong(2)).toMap
     assert(d12 == Map(1L -> 2L, 2L -> 2L), s"d12 per-doc dup spans: $d12")
   }
 
-  test("maximalRepeatSpans: exact duplicate docs report one full-length span with zero extension; text-start/end caps hold") {
-    // Delta-0 pair at the text boundary: extension has no room on either
-    // side (sa = 1, run reaches text end), so the report is exactly the
-    // grid-covered extent = the whole (grid-aligned) text.
+  test("maximalRepeatSpansAnchored: exact duplicate docs report one full-length span; text-start/end caps hold") {
+    // Delta-0 pair: the extension stops at the text start and end (the
+    // ln/rn caps), so the report is exactly the whole text.
     val s = spark
     import s.implicits._
     val t = (0 until 160).map(i =>
       ('a' + (i * 11 + (i / 17) * 7 + 5) % 26).toChar).mkString
     val docs = Seq((1L, t), (2L, t)).toDF("doc_id", "text")
-    val out = TextPipeline.maximalRepeatSpans(docs).collect()
+    val out = TextPipeline.maximalRepeatSpansAnchored(docs).collect()
     assert(out.length == 1, s"${out.toSeq}")
     val r = out.head
-    // 160 chars -> grid windows at 1, 33, 65, 97 (97+63 = 160): 4 seeds,
-    // covered [1, 160], no extension possible.
     assert((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)) ==
-      ((1L, 1L, 160L, 4L)), s"row: $r")
+      ((1L, 1L, 160L, 5L)), s"row: $r")
   }
 
   test("unigramViterbi: picks max-score segmentation; ties break fewer-tokens then longer-last-piece") {
@@ -2114,7 +2110,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until n).map(i => (base + (i * a + (i / div) * c + off) % 26).toChar).mkString
     val f1 = gen(100, 'a', 5, 11, 3, 1)
     val p = gen(150, 'a', 3, 19, 9, 0)
-    val f2 = gen(74, 'A', 7, 13, 5, 2)   // 150 + 74 = 224 ≡ 0 (mod 32)
+    val f2 = gen(74, 'A', 7, 13, 5, 2)   // copy gap 150 + 74 = 224
     val f3 = gen(50, 'a', 11, 17, 7, 4)
     val doc1 = f1 + p + f2 + p + f3
     val doc2 = gen(120, 'A', 9, 23, 11, 6)
@@ -2138,32 +2134,34 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(2L)._1 == 0L && got(2L)._3 == 120L, s"doc2: ${got(2L)}")
   }
 
-  test("maximalRepeatSpansAnchored: a 150-char repeat reports at true extent at EVERY alignment; d21 finds only the phase-aligned 1-in-32") {
+  // Mixed-hash char generators for planted span fixtures (linear-
+  // congruential passages Caesar-collide across pairs — measured):
+  // aperiodic lowercase passages, aperiodic uppercase fillers. Sentinel
+  // digits at passage borders pin a repeat's true extent (a 1-in-26
+  // filler coincidence otherwise extends the common string by a char).
+  private def mix(x0: Long): Long = {
+    var x = x0 & 0xffffffffL
+    x = ((x ^ (x >> 16)) * 0x45d9f3bL) & 0xffffffffL
+    x = ((x ^ (x >> 16)) * 0x45d9f3bL) & 0xffffffffL
+    x ^ (x >> 16)
+  }
+  private def pstr(salt: Int, n: Int): String = (0 until n).map(i =>
+    ('a' + (mix(salt.toLong * 100003 + i.toLong * 7919 + 1) % 26).toInt)
+      .toChar).mkString
+  private def fstr(salt: Int, n: Int): String = (0 until n).map(i =>
+    ('A' + (mix(salt.toLong * 99991 + i.toLong * 104729 + 5) % 26).toInt)
+      .toChar).mkString
+
+  test("maximalRepeatSpansAnchored: a 150-char repeat reports at true extent at EVERY alignment") {
     // The VERDICT r18 #1 planted proof. 32 independent doc pairs; pair c
     // plants a distinct aperiodic 150-char passage at offset 41 in doc A
     // and 41 + c in doc B — every alignment class delta mod 32 exactly
-    // once, fillers aperiodic uppercase (passages lowercase) so the only
-    // duplicated 64-char windows in the whole corpus are the planted
-    // passages' own, each appearing exactly twice (asserted below —
-    // hence no spurious seeds are even possible).
+    // once (a 64-at-32 grid would seed only c = 0), fillers aperiodic
+    // uppercase so the only duplicated 64-char windows in the whole
+    // corpus are the planted passages' own, each appearing exactly twice
+    // (asserted below — hence no spurious seeds are even possible).
     val s = spark
     import s.implicits._
-    // Mixed-hash char generators (linear-congruential passages Caesar-
-    // collide across pairs — measured); sentinel digits at the passage
-    // borders pin the true extent at exactly 150 (a 1-in-26 filler
-    // coincidence otherwise extends the real common string to 151).
-    def mix(x0: Long): Long = {
-      var x = x0 & 0xffffffffL
-      x = ((x ^ (x >> 16)) * 0x45d9f3bL) & 0xffffffffL
-      x = ((x ^ (x >> 16)) * 0x45d9f3bL) & 0xffffffffL
-      x ^ (x >> 16)
-    }
-    def pstr(salt: Int, n: Int): String = (0 until n).map(i =>
-      ('a' + (mix(salt.toLong * 100003 + i.toLong * 7919 + 1) % 26).toInt)
-        .toChar).mkString
-    def fstr(salt: Int, n: Int): String = (0 until n).map(i =>
-      ('A' + (mix(salt.toLong * 99991 + i.toLong * 104729 + 5) % 26).toInt)
-        .toChar).mkString
     val docs0 = (0 until 32).flatMap { c =>
       val p = pstr(c, 150)
       val docA = fstr(2 * c, 39) + "1" + p + "0" + fstr(2 * c + 1, 59)
@@ -2176,13 +2174,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     require(winCounts.max == 2 && winCounts.count(_ == 2) == 32 * 87,
       "corpus invariant: duplicated windows are exactly the planted ones")
     val docs = docs0.toDF("doc_id", "text")
-    // d21 (grid family): only the delta ≡ 0 (mod 32) pair seeds — the
-    // 31 other alignments produce NO seed at all (the documented gap).
-    val d21 = TextPipeline.maximalRepeatSpans(docs).collect()
-    assert(d21.length == 1, s"d21 should see only pair 0: ${d21.toSeq}")
-    assert((d21.head.getLong(0), d21.head.getLong(1), d21.head.getLong(2),
-      d21.head.getLong(3), d21.head.getLong(4)) ==
-      ((100L, 200L, 41L, 41L, 150L)), s"d21 row: ${d21.head}")
     // d24 (winnowing anchors): all 32 alignments, each at true extent —
     // start_a 41, start_b 41 + c, span_len 150 (boundary extension stops
     // exactly at the uppercase filler mismatch on both sides).
@@ -2197,6 +2188,50 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert((sa, sb, len) == ((41L, (41L + c), 150L)) && nw >= 1L,
         s"pair $c: ($sa, $sb, $len, $nw)")
     }
+  }
+
+  test("spanScrub and spanScrubIntra: a 150-char repeat whose copies sit 7 (mod 32) apart scrubs to one copy") {
+    // Planted misaligned repeats: P1 at offset 41 in doc 1 and 48 in
+    // doc 2 (delta 7), and P2 twice in doc 3 at offsets 41 and 240
+    // (delta 199 ≡ 7 mod 32). A 64-at-32 grid seeds neither; anchored
+    // seeds catch both. Sentinel digits pin each extent at exactly 150.
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{lit, md5 => smd5}
+    val p1 = pstr(7, 150)
+    val p2 = pstr(8, 150)
+    val doc1 = fstr(1, 39) + "1" + p1 + "0" + fstr(2, 59)
+    val doc2 = fstr(3, 46) + "8" + p1 + "9" + fstr(4, 49)
+    val doc3 = fstr(5, 39) + "1" + p2 + "0" + fstr(6, 47) + "8" + p2 +
+      "9" + fstr(7, 40)
+    require(doc2.indexOf(p1) - doc1.indexOf(p1) == 7 &&
+      doc3.lastIndexOf(p2) - doc3.indexOf(p2) == 199)
+    val winCounts = Seq(doc1, doc2, doc3).flatMap(_.sliding(64).toSeq)
+      .groupBy(identity).map(_._2.size)
+    require(winCounts.max == 2 && winCounts.count(_ == 2) == 2 * 87,
+      "corpus invariant: duplicated windows are exactly the planted ones")
+    val docs = Seq((1L, doc1), (2L, doc2), (3L, doc3)).toDF("doc_id", "text")
+    def md5Of(t: String): String =
+      spark.range(1).select(smd5(lit(t))).first().getString(0)
+    def ledger(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))).toMap
+    def untouched(t: String) = ((0L, 0L, t.length.toLong, md5Of(t)))
+    // d22: doc 2 loses its copy of P1; docs 1 and 3 stay whole
+    val exp2 = fstr(3, 46) + "8" + "9" + fstr(4, 49)
+    val d22 = ledger(TextPipeline.spanScrub(docs))
+    assert(d22(1L) == untouched(doc1), s"d22 doc1: ${d22(1L)}")
+    assert(d22(2L) == ((1L, 150L, exp2.length.toLong, md5Of(exp2))),
+      s"d22 doc2: ${d22(2L)}")
+    assert(d22(3L) == untouched(doc3), s"d22 doc3: ${d22(3L)}")
+    // d23: doc 3 keeps its first copy of P2 only; docs 1 and 2 stay whole
+    val exp3 = fstr(5, 39) + "1" + p2 + "0" + fstr(6, 47) + "8" + "9" +
+      fstr(7, 40)
+    val d23 = ledger(TextPipeline.spanScrubIntra(docs))
+    assert(d23(3L) == ((1L, 150L, exp3.length.toLong, md5Of(exp3))),
+      s"d23 doc3: ${d23(3L)}")
+    assert(d23(1L) == untouched(doc1), s"d23 doc1: ${d23(1L)}")
+    assert(d23(2L) == untouched(doc2), s"d23 doc2: ${d23(2L)}")
   }
 
   test("compactHnsw: tombstoned nodes vanish from levels, every edge list, and entries; survivor recall holds") {
