@@ -32,9 +32,6 @@ object GoldenExperiment {
     "CE16OV", "UNRATE", "UEMPMEAN", "UEMPLT5", "UEMP5TO14", "UEMP15OV",
     "UEMP15T26", "UEMP27OV", "PAYEMS", "USPRIV", "CES1021000001", "FEDFUNDS")
 
-  /** Diagnostic access for CvProbe. */
-  def quarterSumsForProbe(diffs: Array[Double]): DenseVector[Double] = quarterSums(diffs)
-
   /** Quarter sum of a monthly diff series with R NA semantics (A1): the
     * first quarter is dropped, a quarter with any NaN diff is NaN.
     */
@@ -60,7 +57,10 @@ object GoldenExperiment {
   /** The prepared golden panel: the 230×30 na.omit'ed ezlasso design and
     * the start.pred row (2000 Q1).
     */
-  final case class Panel(y: DenseMatrix[Double], startPredIdx: Int)
+  final case class Panel(y: DenseMatrix[Double], startPredIdx: Int) {
+    /** The training span: the rows before start.pred. */
+    lazy val trainY: DenseMatrix[Double] = y(0 until startPredIdx, ::).toDenseMatrix
+  }
 
   /** Repaired columns + GDP log-diffs — the prep state that does NOT
     * depend on the model's column set, so multi-model workloads run it
@@ -69,7 +69,18 @@ object GoldenExperiment {
   final case class Prepared(
       gdpLd: DenseVector[Double],
       repaired: ListMap[String, DenseVector[Double]],
-      ledger: Seq[Stationarity.LedgerEntry])
+      ledger: Seq[Stationarity.LedgerEntry],
+      converged: Boolean)
+
+  /** The repair's summary lines for the mains to print: whether it
+    * converged and how many transforms it made, then the column count per
+    * transform kind.
+    */
+  def repairSummary(prep: Prepared): Seq[String] =
+    s"[golden] repair: converged=${prep.converged} transforms=${prep.ledger.size}" +:
+      prep.ledger.groupBy(_.transform).toSeq.map { case (t, es) =>
+        s"[golden]   $t: ${es.map(_.column).distinct.size} columns"
+      }
 
   /** na.omit over `panelCols` of the prepared frame → the model panel and
     * its start.pred row.
@@ -97,6 +108,7 @@ object GoldenExperiment {
     */
   def buildPanel(spark: SparkSession, panelCols: Seq[String] = EzlassoAll): Panel = {
     val prep = prepare(spark)
+    repairSummary(prep).foreach(println)
     val ez = panelCols.toSet
     val ezLedger = prep.ledger.filter(e => ez.contains(e.column))
     println(s"[golden]   panel-relevant transforms: " +
@@ -119,7 +131,7 @@ object GoldenExperiment {
     * driver-side ingest of the monthly panel (P9 collect, sorted on the
     * driver by [[PanelIngest.collectByDate]]).
     */
-  def monthlyRows(spark: SparkSession): Array[Row] =
+  private def monthlyRows(spark: SparkSession): Array[Row] =
     PanelIngest.collectByDate(
       PanelIngest.loadMonthly(spark, s"$panelDir/monthly_panel.parquet"))
 
@@ -132,26 +144,19 @@ object GoldenExperiment {
     * job per table, where a Spark `orderBy` ran three (range-bound sample,
     * shuffle map, result) only to send every row to the driver. The
     * collect also checks that dates strictly increase.
-    *
-    * @param exclude series dropped from the working set BEFORE repair —
-    *                Main.R:93's own "NONBORRES should probably be exluded"
-    *                note; exclusion can change OTHER columns' transforms
-    *                because the repair loop's iteration count and stuck
-    *                condition depend on the whole non-stationary set.
     */
-  def prepare(spark: SparkSession, exclude: Set[String] = Set.empty): Prepared = {
+  def prepare(spark: SparkSession): Prepared = {
     // Collect the monthly panel column-wise (696×146 — P9 dematerialize).
     val mRows = monthlyRows(spark)
     val monthly: Map[String, Array[Double]] = PanelIngest.seriesNames.zipWithIndex
-      .collect { case (n, j) if !exclude.contains(n) =>
+      .map { case (n, j) =>
         n -> mRows.map(r => if (r.isNullAt(j + 1)) Double.NaN else r.getDouble(j + 1))
       }.toMap
-    val names = PanelIngest.seriesNames.filterNot(exclude.contains)
 
     // W1+A1: quarterly sums of monthly first differences.
     def diffs(xs: Array[Double]): Array[Double] =
       Array.tabulate(xs.length)(i => if (i == 0) Double.NaN else xs(i) - xs(i - 1))
-    val quarterly = ListMap.from(names.map { n =>
+    val quarterly = ListMap.from(PanelIngest.seriesNames.map { n =>
       n -> quarterSums(diffs(monthly(n)))
     })
 
@@ -168,22 +173,16 @@ object GoldenExperiment {
     // from Testing.R:43-96: adf lag fixed at 7, crit 0.05 inclusive, the
     // two-range currency pool, currency names never consumed (its pool-
     // depletion line is a no-op), loop breaks when stuck.
-    val t0 = System.nanoTime()
     val repaired = Stationarity.repair(
       quarterly, logDiffQuarterly, PanelIngest.currencyNamesTesting.toSet,
       crit = 0.05, adfK = 7, gteCrit = true, consumeCurrency = false)
-    println(f"[golden] repair: converged=${repaired.converged} " +
-      f"transforms=${repaired.ledger.size} (${(System.nanoTime() - t0) / 1e9}%.1f s)")
-    repaired.ledger.groupBy(_.transform).foreach { case (t, es) =>
-      println(s"[golden]   $t: ${es.map(_.column).distinct.size} columns")
-    }
 
     // GDP log-diffs (232 → 231 quarters, aligned 1959Q2..2016Q4).
     val gdpLevels = PanelIngest.collectByDate(
       PanelIngest.loadGdp(spark, s"$panelDir/gdp_quarterly.parquet")).map(_.getDouble(1))
     val gdpLd = DenseVector.tabulate(gdpLevels.length - 1)(i =>
       math.log(gdpLevels(i + 1)) - math.log(gdpLevels(i)))
-    Prepared(gdpLd, repaired.columns, repaired.ledger)
+    Prepared(gdpLd, repaired.columns, repaired.ledger, repaired.converged)
   }
 
   /** Testing.R:254 — the 3-variable econ.vars.2 set of the 0.01482406
@@ -216,14 +215,12 @@ object GoldenExperiment {
       cvFoldPaths = cvFoldPaths)
     val wall = (System.nanoTime() - t1) / 1e9
     val msfes = Seq(1, 2, 4, 8).map(h => h -> res.byHorizon(h).msfe)
-    val total = msfes.map(_._2).sum
     msfes.foreach { case (h, m) => println(f"[golden] msfe h$h%d = $m%.12f") }
-    println(f"[golden] MSFE SUM = $total%.12f  (lag=$lag alpha=$alpha, $wall%.0f s)")
-    // The reference's recorded "mse sum" comments are the RAW squared-error
-    // sums u_1 (Σ_h Σ_origins e², enetVAR.R:475-478) — i.e. msfe × h.ind.len
-    // summed over horizons; report both normalizations.
-    val hLen = res.byHorizon(1).errors.length
-    println(f"[golden] RAW ERR SUM (msfe × $hLen, summed) = ${total * hLen}%.12f")
+    println(f"[golden] MSFE SUM = ${msfes.map(_._2).sum}%.12f  (lag=$lag alpha=$alpha, $wall%.0f s)")
+    // The reference's recorded "mse sum" comments are the raw squared-error
+    // sums (ModelTrain.Result.rawErrSum); report both normalizations.
+    println(f"[golden] RAW ERR SUM (msfe × ${res.byHorizon(1).errors.length}, summed) = " +
+      f"${res.rawErrSum}%.12f")
     println("[golden] reference goldens: lag5/a0.4 CV = 0.00907175092168175 | " +
       "lag1 = 0.0107635485836803 | lag5/a0.5 = 0.009076151")
     Seq(1, 2, 4, 8).foreach { h =>

@@ -42,9 +42,7 @@ object GoldenTune {
 
     // Tune on the training span (rows before start.pred, 2000 Q1) or the
     // full series (the reference's visible shape).
-    val yTrain =
-      if (span == "full") panel.y
-      else panel.y(0 until panel.startPredIdx, ::).toDenseMatrix
+    val yTrain = if (span == "full") panel.y else panel.trainY
     println(s"[tune] tuning span ${yTrain.rows}×${yTrain.cols} ($span), lag=$lag, " +
       s"grid=19α×200λ, initWindow=$initWindow, horizon=$horizon, " +
       s"mode=${if (caretMode) "caret-submodels" else "direct-grid"}")
@@ -70,9 +68,7 @@ object GoldenTune {
       alphas = alphas, lambdas = lambdas, lag = lag, const = true,
       spark = Some(spark))
     val wall = (System.nanoTime() - t1) / 1e9
-    val total = Seq(1, 2, 4, 8).map(h => res.byHorizon(h).msfe).sum
-    val hLen = res.byHorizon(1).errors.length
-    println(f"[tune] TUNED RAW ERR SUM = ${total * hLen}%.9f  (lag=$lag, $wall%.0f s)")
+    println(f"[tune] TUNED RAW ERR SUM = ${res.rawErrSum}%.9f  (lag=$lag, $wall%.0f s)")
     println("[tune] reference tuned golden = 0.009757152; untuned import = 0.015914531")
     spark.stop()
   }

@@ -39,7 +39,16 @@ object ModelTrain {
   final case class Result(
       byHorizon: Map[Int, HorizonResult],
       residuals: DenseMatrix[Double],
-      lastModel: graft.varmodel.FittedVar)
+      lastModel: graft.varmodel.FittedVar) {
+
+    /** The reference's raw squared-error sum, the figure its "mse sum"
+      * comments record: Σ over horizons and origins of e² (u_1,
+      * enetVAR.R:475-478), i.e. Σ_h MSFE_h × the shared horizon length
+      * h.ind.len. Horizons are summed in ascending order.
+      */
+    def rawErrSum: Double =
+      byHorizon.keys.toSeq.sorted.map(byHorizon(_).msfe).sum * byHorizon(1).errors.length
+  }
 
   def run(
       data: DenseMatrix[Double],

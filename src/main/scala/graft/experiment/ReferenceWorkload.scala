@@ -3,14 +3,13 @@ package graft.experiment
 import graft.linalg.BlockedCv
 import graft.tune.RollingOriginTuner
 import graft.varmodel.LagSelect
+import org.apache.spark.sql.SparkSession
 
 /** The reference's headline "~6 hour" workload (readme.txt:31, Main.R:
   * 185-227), end-to-end: for each of the 5 hardcoded enet-preselected model
   * sets (Main.R:150-180), IC-based lag selection on the training span (M9,
-  * FPE excluded), then for lag.min and lag.max: the full 19α × 200λ
-  * rolling-origin tune (M15, init.window=40, horizon=8) on the training
-  * span and a tuned `modeltrain` (M17, const=FALSE) on the full span —
-  * every stage Spark-distributed. One number to compare against the
+  * FPE excluded), then [[tunedCase]] at lag.min and lag.max — every stage
+  * Spark-distributed. One number to compare against the
   * reference's ~6 h on a `detectCores()-1` PSOCK machine.
   *
   * Usage: runMain graft.experiment.ReferenceWorkload
@@ -32,21 +31,50 @@ object ReferenceWorkload {
     "enet.selc.20" -> EnetSelc25.take(20),
     "enet.selc.25" -> EnetSelc25)
 
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Session.build()
+  /** One tuned case's forecast result and its two stage times. */
+  final case class Tuned(result: ModelTrain.Result, tuneSeconds: Double, trainSeconds: Double)
+
+  /** One (model set, lag) case of both reference runs: the full 19α × 200λ
+    * rolling-origin tune (M15, init.window=40, horizon=8) on the panel's
+    * training span, then a tuned `modeltrain` (M17, const=FALSE) on the
+    * full span, both at [[BlockedCv.GlmnetEquivTol]].
+    *
+    * The tune runs in caret-submodels mode: what train(method = "glmnet")
+    * actually executes per resample (auto path + grid interpolation). The
+    * reference burned its hours here not for want of this trick (caret uses
+    * it too) but on per-fit R overhead. Measured after the round-6 solveAt
+    * JIT fix (solo runs): caret 194 s vs direct-grid 314 s end-to-end on
+    * the ~12 h run.
+    */
+  def tunedCase(
+      spark: SparkSession, panel: GoldenExperiment.Panel, names: IndexedSeq[String],
+      lag: Int): Tuned = {
     val tol = BlockedCv.GlmnetEquivTol
     val t0 = System.nanoTime()
+    val best = RollingOriginTuner.tune(panel.trainY, lag, initWindow = 40,
+      horizon = 8, RollingOriginTuner.referenceGrid(), names,
+      spark = Some(spark), tol = tol, caretSubmodels = true)
+    val t1 = System.nanoTime()
+    val res = ModelTrain.run(panel.y, names, panel.startPredIdx, h = 8,
+      alphas = best.map(_.alpha), lambdas = best.map(_.lambda), lag = lag,
+      const = false, spark = Some(spark), solverTol = tol)
+    Tuned(res, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = graft.Session.build()
+    val t0 = System.nanoTime()
     val prep = GoldenExperiment.prepare(spark)
+    GoldenExperiment.repairSummary(prep).foreach(println)
 
     for ((label, cols) <- ModelSets) {
       val tm = System.nanoTime()
       val panel = GoldenExperiment.assemble(prep, cols)
       val names = cols.toIndexedSeq
-      val trainY = panel.y(0 until panel.startPredIdx, ::).toDenseMatrix
 
       // M9 on the training span; FPE (index 0) excluded like Main.R:202.
-      val sel = LagSelect.select(trainY, maxLag = 30, alpha = 0.25,
-        intercept = false, names = names, solverTol = tol,
+      val sel = LagSelect.select(panel.trainY, maxLag = 30, alpha = 0.25,
+        intercept = false, names = names, solverTol = BlockedCv.GlmnetEquivTol,
         spark = Some(spark))
       val icLags = Seq("AIC", "HQ", "SC").map(sel.icLag)
       val lags = Seq(icLags.min, icLags.max).distinct
@@ -54,26 +82,9 @@ object ReferenceWorkload {
         s"${icLags.mkString("/")} -> testing lags ${lags.mkString(",")}")
 
       for (lag <- lags) {
-        val t1 = System.nanoTime()
-        // caret-submodels mode: what train(method = "glmnet") actually
-        // executes per resample (auto path + grid interpolation) — and the
-        // reason the reference burned ~6 h here is NOT this trick's absence
-        // (caret uses it too) but its per-fit R overhead.
-        val best = RollingOriginTuner.tune(trainY, lag, initWindow = 40,
-          horizon = 8, RollingOriginTuner.referenceGrid(), names,
-          spark = Some(spark), tol = tol, caretSubmodels = true)
-        val alphas = best.map(_.alpha)
-        val lambdas = best.map(_.lambda)
-        val tuneWall = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        val res = ModelTrain.run(panel.y, names, panel.startPredIdx, h = 8,
-          alphas = alphas, lambdas = lambdas, lag = lag, const = false,
-          spark = Some(spark), solverTol = tol)
-        val trainWall = (System.nanoTime() - t2) / 1e9
-        val total = Seq(1, 2, 4, 8).map(h => res.byHorizon(h).msfe).sum
-        val hLen = res.byHorizon(1).errors.length
-        println(f"[workload] $label lag=$lag: raw err sum = ${total * hLen}%.9f " +
-          f"(tune ${tuneWall}%.0f s + modeltrain ${trainWall}%.0f s)")
+        val t = tunedCase(spark, panel, names, lag)
+        println(f"[workload] $label lag=$lag: raw err sum = ${t.result.rawErrSum}%.9f " +
+          f"(tune ${t.tuneSeconds}%.0f s + modeltrain ${t.trainSeconds}%.0f s)")
       }
       println(f"[workload] $label done in ${(System.nanoTime() - tm) / 1e9}%.0f s")
     }

@@ -1,18 +1,16 @@
 package graft.experiment
 
 import graft.ingest.PanelIngest
-import graft.linalg.BlockedCv
-import graft.tune.{RollingOriginTuner, Selection}
+import graft.tune.Selection
 
 /** The reference's "~12 hour" workload (readme.txt:39, Main.R:232-274):
   * 15 model sets — the 5 hardcoded econ.vars lists (Main.R:115-125), 5
   * ACF-diversity selections (M12, lag 20, Main.R:129-135) and 5 PACF
   * selections (M13, lag 8, Main.R:139-145), all selected on the training
   * span of the FULL 147-column frame — each tested at the two heuristic
-  * lags lag.min = ⌊24/K^(2/3)⌋, lag.max = ⌈24/K^(2/3)+1⌉ with the full
-  * 19α × 200λ tune (init.window=40, horizon=8) and a tuned `modeltrain`
-  * (const=FALSE). Data prep runs ONCE (GoldenExperiment.prepare);
-  * everything downstream is Spark-distributed.
+  * lags lag.min = ⌊24/K^(2/3)⌋, lag.max = ⌈24/K^(2/3)+1⌉ through
+  * [[ReferenceWorkload.tunedCase]]. Data prep runs ONCE
+  * (GoldenExperiment.prepare); everything downstream is Spark-distributed.
   *
   * Usage: runMain graft.experiment.ReferenceWorkloadLarge
   */
@@ -30,15 +28,14 @@ object ReferenceWorkloadLarge {
 
   def main(args: Array[String]): Unit = {
     val spark = graft.Session.build()
-    val tol = BlockedCv.GlmnetEquivTol
     val t0 = System.nanoTime()
     val prep = GoldenExperiment.prepare(spark)
+    GoldenExperiment.repairSummary(prep).foreach(println)
 
     // ACF/PACF selections on the training span of the full 147-col frame
     // (na.omit inside, like the reference's selection helpers).
     val allCols = "GDP" +: PanelIngest.seriesNames
-    val fullPanel = GoldenExperiment.assemble(prep, allCols)
-    val trainAll = fullPanel.y(0 until fullPanel.startPredIdx, ::).toDenseMatrix
+    val trainAll = GoldenExperiment.assemble(prep, allCols).trainY
     println(s"[workload12] full-frame train span after na.omit: " +
       s"${trainAll.rows}×${trainAll.cols}")
     val sizes = Seq(5, 10, 15, 20, 25)
@@ -54,34 +51,16 @@ object ReferenceWorkloadLarge {
 
     for ((label, cols) <- EconVars ++ acfSets ++ pacfSets) {
       val tm = System.nanoTime()
-      val names = cols.toIndexedSeq
       val panel = GoldenExperiment.assemble(prep, cols)
-      val trainY = panel.y(0 until panel.startPredIdx, ::).toDenseMatrix
       val k = cols.size
       val base = 24.0 / math.pow(k.toDouble, 2.0 / 3.0)
       val lags = Seq(math.floor(base).toInt.max(1), math.ceil(base + 1).toInt).distinct
         // guard: the lag embedding must leave rows for the tuner's windows
-        .filter(l => trainY.rows - l > 60)
+        .filter(l => panel.trainY.rows - l > 60)
       for (lag <- lags) {
-        val t1 = System.nanoTime()
-        // caret-submodels tuning — what train(method = "glmnet") actually
-        // executes per resample. Measured AFTER the round-6 solveAt JIT
-        // fix (solo runs): caret 194 s vs direct-grid 314 s end-to-end
-        // here; pre-fix A/B numbers were confounded by the regression,
-        // which penalized the auto-path fits hardest.
-        val best = RollingOriginTuner.tune(trainY, lag, initWindow = 40,
-          horizon = 8, RollingOriginTuner.referenceGrid(), names,
-          spark = Some(spark), tol = tol, caretSubmodels = true)
-        val tuneWall = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        val res = ModelTrain.run(panel.y, names, panel.startPredIdx, h = 8,
-          alphas = best.map(_.alpha), lambdas = best.map(_.lambda), lag = lag,
-          const = false, spark = Some(spark), solverTol = tol)
-        val trainWall = (System.nanoTime() - t2) / 1e9
-        val total = Seq(1, 2, 4, 8).map(h => res.byHorizon(h).msfe).sum
-        val hLen = res.byHorizon(1).errors.length
+        val t = ReferenceWorkload.tunedCase(spark, panel, cols.toIndexedSeq, lag)
         println(f"[workload12] $label (${k} vars) lag=$lag: raw err sum = " +
-          f"${total * hLen}%.9f (tune ${tuneWall}%.0f s + modeltrain ${trainWall}%.0f s)")
+          f"${t.result.rawErrSum}%.9f (tune ${t.tuneSeconds}%.0f s + modeltrain ${t.trainSeconds}%.0f s)")
       }
       println(f"[workload12] $label done in ${(System.nanoTime() - tm) / 1e9}%.0f s")
     }

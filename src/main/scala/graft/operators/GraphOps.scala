@@ -100,7 +100,10 @@ object GraphOps {
   // past ~10⁵ nodes that serial build dominates the whole fixpoint —
   // measured on the ×64 on-disk graph (379k nodes, 457k edges, 4 BFS
   // rounds): broadcast 9.6–18 s vs shuffle-hash 3.2 s vs sort-merge
-  // 5.9 s (r14 DiskScaleProbe A/B). Hence TWO gates: broadcast while
+  // 5.9 s (r14 DiskScaleProbe A/B; the probe main was deleted after
+  // commit cb822c6, and
+  // `git show cb822c6:src/main/scala/graft/experiment/DiskScaleProbe.scala`
+  // recovers it). Hence TWO gates: broadcast while
   // n ≤ min(budget, 2¹⁷); past it PIN shuffle-hash — the node-sized
   // build side fits per-partition memory by construction, and it
   // skips the per-round sorts sort-merge pays. The hint is pinned

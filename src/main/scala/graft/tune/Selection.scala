@@ -27,9 +27,8 @@ object Selection {
     val sq = Acf.squaredVsLaggedTarget(y, lag)
     // A constant series (sd = 0) has NaN correlations (the reference's
     // acf() refuses constant input outright); define its score as 0 so it
-    // ranks LAST deterministically — and identically in the distributed
-    // spelling (acfSelectionDistributed), where Spark's desc sort would
-    // otherwise put NaN FIRST while Scala's TotalOrdering puts it last.
+    // ranks LAST by its value, not by a sort's NaN convention: Scala's
+    // TotalOrdering puts NaN last, but Spark SQL's desc sort puts it first.
     val meanSq = (0 until y.cols).map { j =>
       val v = (0 until lag).map(k => sq(k, j)).sum / lag
       if (v.isNaN) 0.0 else v

@@ -1,7 +1,5 @@
 package graft
 
-import graft.operators.Estimation
-import graft.sources.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -25,27 +23,6 @@ class EstimationSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
-
-  test("the distributed ACF selection is row-identical to the m11 driver-matrix query") {
-    // The scale path for the one driver-matrix query whose input could
-    // plausibly outgrow the driver (r9 judge nit): same ranks, same
-    // series, same e9-quantized scores — the fp headroom argument is the
-    // oracle's own (sum-order wobble ~1e-13 relative against the 0.5e-9
-    // rounding margin), here exercised Spark-vs-Breeze instead of
-    // DuckDB-vs-Breeze.
-    for (sfDir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-      val fromMatrix = Estimation.queries("m11_acf_selection")(spark, sfDir)
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-      val daily = Tables.events(spark, sfDir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sum(col("value")).as("v"))
-      val distributed = Estimation
-        .acfSelectionDistributed(daily, "click", lag = 5, maxNrVar = 4)
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-      assert(distributed == fromMatrix,
-        s"$sfDir: distributed=$distributed matrix=$fromMatrix")
-    }
-  }
 
   test("t22 bhFdr: the step-up rejects a rank that fails its own threshold (planted battery)") {
     // BH's distinguishing behavior vs per-test thresholding, planted

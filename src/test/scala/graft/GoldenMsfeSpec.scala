@@ -1,6 +1,6 @@
 package graft
 
-import graft.experiment.{GoldenExperiment, ModelTrain}
+import graft.experiment.{GoldenExperiment, ModelTrain, ReferenceWorkload, ReferenceWorkloadLarge}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,9 +19,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * Guards: every test cancels when the converted panel fixture
   * (tools/convert_panel.py → data/panel) is absent. The two lag-5 anchors
   * cost ~150 s each, so they additionally require SPARK_GRAFT_FULL_GOLDEN
-  * in the environment (the per-round suite stays fast); the lag-1 and
-  * econ.vars.2 anchors (~10 s total, sharing one prepare pass) always run
-  * and exercise the identical prep → repair → assemble → modeltrain chain.
+  * in the environment (the per-round suite stays fast). The lag-1 and
+  * econ.vars.2 anchors always run and exercise the identical prep → repair
+  * → assemble → modeltrain chain; the two tuned anchors add the
+  * rolling-origin tune in front of modeltrain. The four share one prepare
+  * pass and took 64 s together on 4 cores: 60 s for the lag-1 anchor,
+  * which carries the prepare and the JVM warm-up, 1.1 s for econ.vars.2
+  * and 3.0 s for the two tuned anchors.
   */
 class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -45,25 +49,30 @@ class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
   // shared by every anchor — the column-set-independent half of the run.
   private lazy val prep = GoldenExperiment.prepare(spark)
 
-  private def rawErrSum(panelCols: Seq[String], lag: Int, alpha: Double): Double = {
+  /** The Testing.R golden runs: per-origin blocked-CV λ at one α. */
+  private def cvRawErrSum(panelCols: Seq[String], lag: Int, alpha: Double): Double = {
     val panel = GoldenExperiment.assemble(prep, panelCols)
-    val res = ModelTrain.run(panel.y, panelCols.toIndexedSeq, panel.startPredIdx,
+    ModelTrain.run(panel.y, panelCols.toIndexedSeq, panel.startPredIdx,
       h = 8, alphas = Seq(alpha), lambdas = Seq.empty, lag = lag,
       const = true, spark = Some(spark),
-      solverTol = graft.linalg.BlockedCv.GlmnetEquivTol)
-    val hLen = res.byHorizon(1).errors.length
-    Seq(1, 2, 4, 8).map(h => res.byHorizon(h).msfe).sum * hLen
+      solverTol = graft.linalg.BlockedCv.GlmnetEquivTol).rawErrSum
   }
 
-  private def anchor(
-      name: String, cols: Seq[String], lag: Int, alpha: Double,
-      expected: Double, heavy: Boolean = false): Unit =
+  /** The tuned path both reference runs take. */
+  private def tunedRawErrSum(set: String, lag: Int): Double = {
+    val cols = (ReferenceWorkload.ModelSets ++ ReferenceWorkloadLarge.EconVars).toMap.apply(set)
+    ReferenceWorkload.tunedCase(spark, GoldenExperiment.assemble(prep, cols),
+      cols.toIndexedSeq, lag).result.rawErrSum
+  }
+
+  private def anchor(name: String, expected: Double, heavy: Boolean = false)(
+      rawErrSum: => Double): Unit =
     test(s"golden anchor in-band: $name") {
       assume(panelFile.exists,
         s"panel fixture absent (${panelFile.getPath}) — run tools/convert_panel.py")
       assume(!heavy || runHeavy,
         "lag-5 anchors run only with SPARK_GRAFT_FULL_GOLDEN set (~150 s each)")
-      val got = rawErrSum(cols, lag, alpha)
+      val got = rawErrSum
       val rel = math.abs(got - expected) / expected
       assert(rel < 1e-6,
         f"$name drifted: raw err sum $got%.12f vs recorded $expected%.12f " +
@@ -72,18 +81,27 @@ class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
   anchor("ezlasso-30 lag=1 alpha=0.4 (golden 0.0107635485836803)",
-    GoldenExperiment.EzlassoAll, lag = 1, alpha = 0.4,
-    expected = 0.012403281922)
+    expected = 0.012403281922)(cvRawErrSum(GoldenExperiment.EzlassoAll, lag = 1, alpha = 0.4))
 
   anchor("econ.vars.2 lag=4 alpha=0.95 (golden 0.01482406, engine beats it)",
-    GoldenExperiment.EconVars2, lag = 4, alpha = 0.95,
-    expected = 0.012260948726)
+    expected = 0.012260948726)(cvRawErrSum(GoldenExperiment.EconVars2, lag = 4, alpha = 0.95))
+
+  // Two tuned cases that perfbench/pins.tsv holds: the ~12 h run's
+  // econ.vars.1 at its lower heuristic lag, and the ~6 h run's enet.selc.5
+  // at its lower IC lag. Only the second tunes to different (α, λ) under
+  // direct-grid scoring than under caret submodels (raw err sum
+  // 0.0131027386, 7.7e-5 away), so it is the one that pins the tune mode.
+  anchor("econ.vars.1 lag=15 tuned (ReferenceWorkload.tunedCase)",
+    expected = 0.011036311750415107)(tunedRawErrSum("econ.vars.1", lag = 15))
+
+  anchor("enet.selc.5 lag=1 tuned (ReferenceWorkload.tunedCase)",
+    expected = 0.013101724456950882)(tunedRawErrSum("enet.selc.5", lag = 1))
 
   anchor("ezlasso-30 lag=5 alpha=0.4 (golden 0.00907175092168175)",
-    GoldenExperiment.EzlassoAll, lag = 5, alpha = 0.4,
-    expected = 0.012269265289, heavy = true)
+    expected = 0.012269265289, heavy = true)(
+    cvRawErrSum(GoldenExperiment.EzlassoAll, lag = 5, alpha = 0.4))
 
   anchor("ezlasso-30 lag=5 alpha=0.5 (golden 0.009076151)",
-    GoldenExperiment.EzlassoAll, lag = 5, alpha = 0.5,
-    expected = 0.012295378707, heavy = true)
+    expected = 0.012295378707, heavy = true)(
+    cvRawErrSum(GoldenExperiment.EzlassoAll, lag = 5, alpha = 0.5))
 }
