@@ -13,12 +13,12 @@ import org.apache.spark.sql.SparkSession
   * walk, and Theil's U vs an AR(1) benchmark (M16).
   *
   * Distribution (SURVEY §3.2): the ~100 per-origin refits are independent,
-  * so with a SparkSession they run as ONE Spark job — the panel matrix is
-  * broadcast once (≤231×K doubles) and each task fits its origin's K
-  * equations locally with the warm-started solver; only 4 forecast values
-  * per origin return to the driver. Metrics are a driver-side fold over the
-  * tiny (4 × origins) result matrix. Without a session it degrades to a
-  * sequential loop (tests).
+  * so they run through [[graft.FanOut]], one task per core — the panel
+  * matrix is broadcast once (≤231×K doubles) and each task fits its
+  * origins' K equations locally with the warm-started solver; only 4
+  * forecast values per origin return to the driver. Metrics are a
+  * driver-side fold over the tiny (4 × origins) result matrix. Without a
+  * session the same refits run as one part on the calling thread.
   *
   * Quirk preserved (flag `rwQuirkOffByOne`, default true = reference
   * behavior): the reference seeds its random-walk error matrix with a
@@ -98,21 +98,8 @@ object ModelTrain {
     }
 
     val fitted: IndexedSeq[(Array[Double], Option[graft.varmodel.FittedVar])] =
-      spark match {
-        case Some(s) =>
-          val bc = s.sparkContext.broadcast((data.toArray, data.rows, data.cols))
-          val slices = math.min(origins.length, s.sparkContext.defaultParallelism)
-          val collected = s.sparkContext
-            .parallelize(origins, slices)
-            .map { i =>
-              val (arr, r, c) = bc.value
-              i -> fitOrigin(new DenseMatrix(r, c, arr), i)
-            }
-            .collect()
-          bc.destroy()
-          collected.sortBy(_._1).map(_._2).toIndexedSeq
-        case None =>
-          origins.map(i => fitOrigin(data, i))
+      graft.FanOut(spark, origins.length, perCore = 1, data) { (d, share) =>
+        share.map(c => fitOrigin(d, origins(c)))
       }
     val predCols: IndexedSeq[Array[Double]] = fitted.map(_._1)
 
@@ -162,8 +149,8 @@ object ModelTrain {
     // The reference's modeltrain returns the LAST refit's residuals/model
     // (enetVAR.R:488-489) — method-consistent: genet runs hand back the
     // group fit, not a fresh per-equation one. The model comes out of the
-    // distributed pass itself (fitOrigin keeps origins.last's fit), not a
-    // duplicate driver-side refit.
+    // fan-out itself (fitOrigin keeps origins.last's fit), not a duplicate
+    // driver-side refit.
     val lastModel: graft.varmodel.FittedVar = fitted.last._2.getOrElse(
       sys.error("last origin's task returned no model"))
     Result(byHorizon, lastModel.residuals, lastModel)

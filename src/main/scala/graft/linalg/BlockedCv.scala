@@ -204,21 +204,6 @@ object BlockedCv {
     out
   }
 
-  /** Single-equation convenience: builds the designs fresh (prefer
-    * [[designs]] + [[cvFitDesigns]] when several equations / grid points
-    * share the same X).
-    */
-  def cvFit(
-      x: DenseMatrix[Double],
-      y: DenseVector[Double],
-      alpha: Double,
-      foldid: Array[Int],
-      intercept: Boolean = false,
-      standardize: Boolean = true,
-      nLambda: Int = 100,
-      tol: Double = 1e-9): CvResult =
-    cvFitDesigns(designs(x, foldid, intercept, standardize), y, alpha, nLambda, tol)
-
   /** The reference's default CV call shape (enetVAR.R:27-36): blocked
     * foldids over the design's rows. `tol` is the solver stopping level —
     * the tight default suits golden tests; pass [[GlmnetEquivTol]] for
@@ -233,7 +218,7 @@ object BlockedCv {
       alpha: Double,
       intercept: Boolean = false,
       tol: Double = 1e-9): CvResult =
-    cvFit(x, y, alpha, foldIds(x.rows), intercept, tol = tol)
+    cvFitDesigns(designs(x, foldIds(x.rows), intercept), y, alpha, tol = tol)
 
   /** Stopping level equivalent to glmnet's default `thresh = 1e-7`. */
   val GlmnetEquivTol: Double = 3.16e-4

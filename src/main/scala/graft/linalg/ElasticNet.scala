@@ -368,21 +368,10 @@ object ElasticNet {
     */
   val GlmnetMnLam: Int = 5
 
-  /** Single-λ convenience: fits the reference's 10-point warm-up grid
-    * `seq(2λ, λ/2, length.out = 10)` (enetVAR.R:24) and returns the exact-λ
-    * fit (λ itself is the 7th grid point, so no interpolation happens).
-    */
-  def fit(
-      x: DenseMatrix[Double],
-      y: DenseVector[Double],
-      alpha: Double,
-      lambda: Double,
-      intercept: Boolean = false,
-      standardize: Boolean = true): Fit =
-    fitPath(x, y, alpha, referenceLambdaGrid(lambda), intercept, standardize).at(lambda)
-
   /** The reference's per-fit λ grid: 10 evenly spaced values from 2λ down to
-    * λ/2 (enetVAR.R:24) — descending, so warm starts walk toward λ.
+    * λ/2 (enetVAR.R:24) — descending, so warm starts walk toward λ (λ
+    * itself is the 7th grid point, so reading the path at λ needs no
+    * interpolation).
     */
   def referenceLambdaGrid(lambda: Double): IndexedSeq[Double] =
     DenseVector.rangeD(0, 10).toArray.toIndexedSeq

@@ -25,11 +25,12 @@ import org.apache.spark.sql.SparkSession
   * once, fits each of its segments' warm-started λ paths on it — each path
   * scoring ALL λs in a single pass (glmnet's trick) — and adds the RMSE
   * array into the segment's running sum. Summing origin-ascending in one
-  * place is what makes the distributed and sequential paths agree bit for
-  * bit (a reduceByKey would sum in shuffle-arrival order); there is no
-  * shuffle, and the driver collects K·|α| summed arrays. The sequential
-  * path runs the same fold over all segments, and SparkParitySpec pins the
-  * two bit-identical.
+  * place is what makes every task count agree bit for bit (a reduceByKey
+  * would sum in shuffle-arrival order); there is no shuffle, and the driver
+  * collects K·|α| summed arrays. The tasks are a [[graft.FanOut]] over the
+  * segments (which cost alike; origins do not), 4 per core; without a
+  * session the same fold runs over all segments as one part, and
+  * SparkParitySpec pins the two bit-identical.
   */
 object RollingOriginTuner {
 
@@ -154,7 +155,7 @@ object RollingOriginTuner {
     // one λ path per segment, its RMSE array added into the segment's sum,
     // so every sum is taken in origin order.
     def foldSegments(za: Array[Double], ya: Array[Double], segs: IndexedSeq[Int])
-        : Seq[(Int, Array[Double])] = {
+        : Seq[Array[Double]] = {
       val z = new DenseMatrix(zRows, zCols, za)
       val sums = new Array[Array[Double]](segs.length)
       for (o <- origins) {
@@ -180,31 +181,13 @@ object RollingOriginTuner {
           i += 1
         }
       }
-      segs.zip(sums)
+      sums.toSeq
     }
 
-    val za = design.z.toArray
-    val ya = design.yP.toArray
-    val folded: Seq[(Int, Array[Double])] = spark match {
-      case Some(s) =>
-        val bc = s.sparkContext.broadcast((za, ya))
-        // Up to 4 tasks per core; task t folds segments t, t + tasks, …
-        // (round robin: segments cost alike, origins do not).
-        val tasks = math.min(nSeg, s.sparkContext.defaultParallelism * 4)
-        val out = s.sparkContext.parallelize(0 until tasks, tasks)
-          .flatMap { t =>
-            val (zb, yb) = bc.value
-            foldSegments(zb, yb, t until nSeg by tasks)
-          }
-          .collect().toSeq
-        bc.destroy()
-        out
-      case None => foldSegments(za, ya, 0 until nSeg)
+    val perSeg = graft.FanOut(spark, nSeg, perCore = 4,
+      (design.z.toArray, design.yP.toArray)) { case ((za, ya), segs) =>
+      foldSegments(za, ya, segs)
     }
-    val perSeg = new Array[Array[Double]](nSeg)
-    folded.foreach { case (s, sums) => perSeg(s) = sums }
-    require(perSeg.forall(_ != null),
-      s"tuner fold lost segments: ${perSeg.count(_ != null)} of $nSeg")
 
     val nOrigins = origins.length.toDouble
     (0 until design.n).map { j =>

@@ -199,8 +199,9 @@ object Selection {
   /** M10 — greedy forward IC preselection (enetVAR.R:235-254): start from
     * {target}, repeatedly add the candidate minimizing the SC criterion of
     * a jointly-fitted enet-VAR. The per-round candidate sweep is
-    * embarrassingly parallel — with a session it runs as one Spark job per
-    * round over the broadcast panel.
+    * embarrassingly parallel — a [[graft.FanOut]] per round, one task per
+    * core over the broadcast panel, one part on the calling thread without
+    * a session.
     */
   def greedyIcPreselection(
       y: DenseMatrix[Double],
@@ -217,22 +218,11 @@ object Selection {
       InfCrit(model).sc
     }
     while (target.length < maxNrVar && candidates.nonEmpty) {
-      val scores: Vector[(Int, Double)] = spark match {
-        case Some(s) =>
-          val bc = s.sparkContext.broadcast((y.toArray, y.rows, y.cols, target))
-          val res = s.sparkContext
-            .parallelize(candidates, math.min(candidates.length, s.sparkContext.defaultParallelism))
-            .map { cand =>
-              val (arr, r, c, tgt) = bc.value
-              cand -> scOf(new DenseMatrix(r, c, arr), tgt :+ cand)
-            }
-            .collect().toVector
-          bc.destroy()
-          res
-        case None =>
-          candidates.map(cand => cand -> scOf(y, target :+ cand))
+      val cands = candidates
+      val scores = graft.FanOut(spark, cands.length, perCore = 1, (y, target)) {
+        case ((yy, tgt), share) => share.map(c => scOf(yy, tgt :+ cands(c)))
       }
-      val best = scores.minBy(_._2)._1
+      val best = cands(scores.indices.minBy(scores))
       target :+= best
       candidates = candidates.filterNot(_ == best)
     }

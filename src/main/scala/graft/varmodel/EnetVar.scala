@@ -1,6 +1,6 @@
 package graft.varmodel
 
-import breeze.linalg.{DenseMatrix, DenseVector}
+import breeze.linalg.DenseMatrix
 import graft.linalg.{BlockedCv, ElasticNet}
 
 /** Per-equation elastic-net VAR — SURVEY §2.6 M3 (fit), M4 (coefficients),
@@ -69,13 +69,13 @@ object EnetVar {
     *
     * @param alphas  one α per equation, or a single value used for all
     * @param lambdas one λ per equation / single value; empty → blocked CV
-    * @param spark   when set, the K independent per-equation fits run as a
-    *                Spark job, one task per equation, each rebuilding the
-    *                (deterministic) designs task-locally — bit-identical to
-    *                the sequential path (SparkParitySpec) since equations
-    *                never read each other's state. Leave None inside
-    *                already-distributed callers (e.g. ModelTrain's
-    *                per-origin tasks).
+    * @param spark   the session the K independent per-equation fits fan
+    *                out over ([[graft.FanOut]], one task per core on the
+    *                broadcast design, each task building its CovDesign /
+    *                CvDesigns once); equations never read each other's
+    *                state, so every part count gives the same fits
+    *                (SparkParitySpec). Leave None inside already-distributed
+    *                callers (e.g. ModelTrain's per-origin tasks).
     */
   def fit(
       y: DenseMatrix[Double],
@@ -87,52 +87,33 @@ object EnetVar {
       solverTol: Double = 1e-9,
       cvFoldPaths: Option[String] = None,
       spark: Option[org.apache.spark.sql.SparkSession] = None): EnetVarModel = {
+    val kk = y.cols
+    require(alphas.length == 1 || alphas.length == kk,
+      s"alphas has length ${alphas.length}; EnetVar.fit needs 1 or K = $kk")
+    require(lambdas.length <= 1 || lambdas.length == kk,
+      s"lambdas has length ${lambdas.length}; EnetVar.fit needs 0 (CV), 1 or K = $kk")
     val design = VarDesign.build(y, p, names, intercept)
-    val kk = design.n
     def alphaOf(j: Int) = if (alphas.length == 1) alphas.head else alphas(j)
 
-    // One equation's fit against shared designs (standardization, fold
-    // splits, lazily-cached Gram rows — built once per process/task and
-    // reused across that scope's equations and λ paths).
-    def fitOne(
-        covZ: => graft.linalg.CovDesign,
-        cvDs: => BlockedCv.CvDesigns,
-        yj: DenseVector[Double],
-        j: Int): ElasticNet.Fit =
-      if (lambdas.nonEmpty) {
-        val lam = if (lambdas.length == 1) lambdas.head else lambdas(j)
-        ElasticNet.fitPathCov(covZ, yj, alphaOf(j),
-          ElasticNet.referenceLambdaGrid(lam), tol = solverTol).at(lam)
-      } else {
-        val cv = BlockedCv.cvFitDesigns(cvDs, yj, alphaOf(j), tol = solverTol,
-          foldPaths = cvFoldPaths)
-        cv.path.at(cv.lambdaMin)
-      }
-
-    val fits: IndexedSeq[ElasticNet.Fit] = spark match {
-      case Some(s) if kk > 1 =>
-        val bc = s.sparkContext.broadcast((y.toArray, y.rows, y.cols))
-        val slices = math.min(kk, s.sparkContext.defaultParallelism)
-        val collected = s.sparkContext.parallelize(0 until kk, slices)
-          .mapPartitions { it =>
-            val (ya, yr, yc) = bc.value
-            val d = VarDesign.build(new DenseMatrix(yr, yc, ya), p,
-              names, intercept)
-            lazy val covZ = new graft.linalg.CovDesign(d.z, intercept, true)
-            lazy val cvDs = BlockedCv.designs(d.z,
-              BlockedCv.foldIds(d.z.rows), intercept)
-            it.map(j => j -> fitOne(covZ, cvDs, d.response(j), j))
+    // Each part fits its equations against designs it builds once
+    // (standardization, fold splits, lazily-cached Gram rows, reused
+    // across the part's equations and λ paths).
+    val fits: IndexedSeq[ElasticNet.Fit] =
+      graft.FanOut(spark, kk, perCore = 1, design) { (d, share) =>
+        lazy val covZ = new graft.linalg.CovDesign(d.z, intercept, true)
+        lazy val cvDs = BlockedCv.designs(d.z, BlockedCv.foldIds(d.z.rows), intercept)
+        share.map { j =>
+          if (lambdas.nonEmpty) {
+            val lam = if (lambdas.length == 1) lambdas.head else lambdas(j)
+            ElasticNet.fitPathCov(covZ, d.response(j), alphaOf(j),
+              ElasticNet.referenceLambdaGrid(lam), tol = solverTol).at(lam)
+          } else {
+            val cv = BlockedCv.cvFitDesigns(cvDs, d.response(j), alphaOf(j),
+              tol = solverTol, foldPaths = cvFoldPaths)
+            cv.path.at(cv.lambdaMin)
           }
-          .collect()
-        bc.destroy()
-        val byEq = collected.toMap
-        IndexedSeq.tabulate(kk)(byEq)
-      case _ =>
-        lazy val covZ = new graft.linalg.CovDesign(design.z, intercept, true)
-        lazy val cvDs = BlockedCv.designs(design.z,
-          BlockedCv.foldIds(design.z.rows), intercept)
-        IndexedSeq.tabulate(kk)(j => fitOne(covZ, cvDs, design.response(j), j))
-    }
+        }
+      }
     // With heterogeneous per-equation alphas the model records their MEAN
     // for InfCrit's scalar ridge term — the same convention the reference
     // applies to the per-equation λs (enetVAR.R:181 takes mean(lambda.min));

@@ -3,43 +3,55 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
-/** Keeps main sources on one session factory and one session-cache type:
-  * a main builds its session through [[Session]], and a per-session cache
-  * is a [[SessionCache]], so neither decision is restated elsewhere.
+/** Keeps main sources on one session factory, one session-cache type and
+  * one fan-out: a main builds its session through [[Session]], a
+  * per-session cache is a [[SessionCache]], and independent items go to
+  * Spark tasks through [[FanOut]], so none of these decisions is restated
+  * elsewhere.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
 
-  /** (file, line number) of every line under src/main/scala containing
-    * `pattern`, outside the file that owns it.
+  /** (file, line number) of every match of `pattern` under src/main/scala,
+    * outside the file that owns it. A match may span lines (a call chain
+    * broken before `.method`); it is reported at the line it starts on.
     */
-  private def hits(pattern: String, owner: Path): Seq[String] = {
+  private def hits(pattern: Regex, owner: Path): Seq[String] = {
     val walk = Files.walk(root)
     try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && p != root.resolve(owner))
       .toSeq
       .flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains(pattern) => s"$p:${i + 1}"
-        }
+        val text = Files.readString(p)
+        pattern.findAllMatchIn(text)
+          .map(m => s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}")
       }
     finally walk.close()
   }
 
+  private def literal(s: String): Regex = Regex.quote(s).r
+
   test("src/main exists where the guard looks") {
     assert(Files.isRegularFile(root.resolve("graft/Session.scala")))
     assert(Files.isRegularFile(root.resolve("graft/SessionCache.scala")))
+    assert(Files.isRegularFile(root.resolve("graft/FanOut.scala")))
   }
 
   test("SparkSession.builder appears only in graft/Session.scala") {
-    val found = hits("SparkSession.builder", Paths.get("graft/Session.scala"))
+    val found = hits(literal("SparkSession.builder"), Paths.get("graft/Session.scala"))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 
   test("WeakHashMap[SparkSession appears only in graft/SessionCache.scala") {
-    val found = hits("WeakHashMap[SparkSession", Paths.get("graft/SessionCache.scala"))
+    val found = hits(literal("WeakHashMap[SparkSession"), Paths.get("graft/SessionCache.scala"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("sparkContext.parallelize appears only in graft/FanOut.scala") {
+    val found = hits("""sparkContext\s*\.parallelize""".r, Paths.get("graft/FanOut.scala"))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -41,18 +41,40 @@ class SparkParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     y
   }
 
-  test("M17 modeltrain: Spark-distributed origins == sequential loop, exactly") {
-    val y = panel(80, seed = 41L)
-    val names = IndexedSeq("a", "b")
-    val local = ModelTrain.run(y, names, startPredIdx = 60, lambdas = Seq(0.0))
-    val dist = ModelTrain.run(y, names, startPredIdx = 60, lambdas = Seq(0.0),
-      spark = Some(spark))
+  /** One ModelTrain configuration on 27 origins of an 80-row panel, run
+    * without a session and on the 4-core one, compared exactly.
+    */
+  private def assertModelTrainParity(
+      run: Option[SparkSession] => ModelTrain.Result): Unit = {
+    val local = run(None)
+    val dist = run(Some(spark))
     for (h <- Seq(1, 2, 4, 8)) {
       assert(local.byHorizon(h).msfe == dist.byHorizon(h).msfe, s"h=$h msfe")
       assert(local.byHorizon(h).errors == dist.byHorizon(h).errors, s"h=$h errors")
       assert(local.byHorizon(h).theilsURw == dist.byHorizon(h).theilsURw)
       assert(local.byHorizon(h).theilsUAr1 == dist.byHorizon(h).theilsUAr1)
     }
+    assert(local.lastModel.coefMatrix == dist.lastModel.coefMatrix)
+  }
+
+  private val mtPanel = panel(80, seed = 41L)
+  private val mtNames = IndexedSeq("a", "b")
+
+  test("M17 modeltrain: Spark-distributed origins == sequential loop, exactly") {
+    assertModelTrainParity(s =>
+      ModelTrain.run(mtPanel, mtNames, startPredIdx = 60, lambdas = Seq(0.0), spark = s))
+  }
+
+  test("M17 modeltrain, per-origin blocked CV with const: Spark == sequential, exactly") {
+    // lambdas empty: every origin CV-selects its λ, the oos_cv and
+    // GoldenExperiment path.
+    assertModelTrainParity(s =>
+      ModelTrain.run(mtPanel, mtNames, startPredIdx = 60, const = true, spark = s))
+  }
+
+  test("M17 modeltrain, method = genet: Spark == sequential, exactly") {
+    assertModelTrainParity(s =>
+      ModelTrain.run(mtPanel, mtNames, startPredIdx = 60, method = "genet", spark = s))
   }
 
   test("M15 tuner: Spark-distributed grid == sequential, exactly") {

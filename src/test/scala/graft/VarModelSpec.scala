@@ -114,4 +114,20 @@ class VarModelSpec extends AnyFunSuite {
     // SC penalizes dof harder than AIC at T=59 (log T > 2).
     assert(ic.sc > ic.aic)
   }
+
+  // A per-equation vector must have length 1 or K: a short one used to
+  // throw IndexOutOfBounds inside a task, a long one was cut to K silently.
+  for (what <- Seq("alphas", "lambdas"))
+    test(s"EnetVar.fit rejects $what of length neither 1 nor K, naming both lengths") {
+      val y = TestData.matrix(40, 3, seed = 19L)
+      for (len <- Seq(2, 4)) {
+        val v = Seq.fill(len)(0.1)
+        val e = intercept[IllegalArgumentException] {
+          if (what == "alphas") EnetVar.fit(y, p = 1, alphas = v, lambdas = Seq(0.1))
+          else EnetVar.fit(y, p = 1, alphas = Seq(0.4), lambdas = v)
+        }
+        assert(e.getMessage.contains(s"$what has length $len") &&
+          e.getMessage.contains("K = 3"), e.getMessage)
+      }
+    }
 }
