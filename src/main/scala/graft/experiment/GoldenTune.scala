@@ -54,7 +54,8 @@ object GoldenTune {
     best.take(6).foreach(b => println(
       f"[tune]   eq${b.equation}%2d (${names(b.equation)}%-16s) alpha=${b.alpha}%.2f " +
         f"lambda=${b.lambda}%.6g rmse=${b.meanRmse}%.6g"))
-    println(f"[tune] full grid tuned in $tuneWall%.0f s")
+    println(f"[tune] full grid tuned in $tuneWall%.0f s, " +
+      s"maxIter hits ${best.map(_.maxIterHits).sum}")
 
     // Round-trip the tuned values through the S4 tuning table — a
     // per-invocation directory, so concurrent GoldenTune runs (different

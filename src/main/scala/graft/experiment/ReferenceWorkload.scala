@@ -31,8 +31,11 @@ object ReferenceWorkload {
     "enet.selc.20" -> EnetSelc25.take(20),
     "enet.selc.25" -> EnetSelc25)
 
-  /** One tuned case's forecast result and its two stage times. */
-  final case class Tuned(result: ModelTrain.Result, tuneSeconds: Double, trainSeconds: Double)
+  /** One tuned case's forecast result, its two stage times and the tune's
+    * `maxIter` hits summed over the equations ([[RollingOriginTuner.Best]]).
+    */
+  final case class Tuned(
+      result: ModelTrain.Result, tuneSeconds: Double, trainSeconds: Double, tuneMaxIterHits: Int)
 
   /** One (model set, lag) case of both reference runs: the full 19α × 200λ
     * rolling-origin tune (M15, init.window=40, horizon=8) on the panel's
@@ -58,7 +61,7 @@ object ReferenceWorkload {
     val res = ModelTrain.run(panel.y, names, panel.startPredIdx, h = 8,
       alphas = best.map(_.alpha), lambdas = best.map(_.lambda), lag = lag,
       const = false, spark = Some(spark), solverTol = tol)
-    Tuned(res, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
+    Tuned(res, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9, best.map(_.maxIterHits).sum)
   }
 
   def main(args: Array[String]): Unit = {
@@ -84,7 +87,8 @@ object ReferenceWorkload {
       for (lag <- lags) {
         val t = tunedCase(spark, panel, names, lag)
         println(f"[workload] $label lag=$lag: raw err sum = ${t.result.rawErrSum}%.9f " +
-          f"(tune ${t.tuneSeconds}%.0f s + modeltrain ${t.trainSeconds}%.0f s)")
+          f"(tune ${t.tuneSeconds}%.0f s + modeltrain ${t.trainSeconds}%.0f s, " +
+          s"tune maxIter hits ${t.tuneMaxIterHits})")
       }
       println(f"[workload] $label done in ${(System.nanoTime() - tm) / 1e9}%.0f s")
     }

@@ -60,7 +60,8 @@ object ReferenceWorkloadLarge {
       for (lag <- lags) {
         val t = ReferenceWorkload.tunedCase(spark, panel, cols.toIndexedSeq, lag)
         println(f"[workload12] $label (${k} vars) lag=$lag: raw err sum = " +
-          f"${t.result.rawErrSum}%.9f (tune ${t.tuneSeconds}%.0f s + modeltrain ${t.trainSeconds}%.0f s)")
+          f"${t.result.rawErrSum}%.9f (tune ${t.tuneSeconds}%.0f s + modeltrain ${t.trainSeconds}%.0f s, " +
+          s"tune maxIter hits ${t.tuneMaxIterHits})")
       }
       println(f"[workload12] $label done in ${(System.nanoTime() - tm) / 1e9}%.0f s")
     }

@@ -19,6 +19,10 @@ import breeze.linalg.{DenseMatrix, DenseVector, sum}
   * cached; the ever-active union across equations/λ/α shares the cache.
   * Memory: k² doubles worst-case (151² ≈ 180 KB for the lag-5 panel).
   *
+  * The exact cᵢ refresh at each λ boundary, ⟨x̃ⱼ, r⟩/N for every j, is
+  * [[colDots]]: four columns per pass over the rows, each column's sum
+  * still taken alone and in row order, so it gives [[colDot]]'s bits.
+  *
   * Thread-safety: task-local by design — one CovDesign per executor task
   * (the distributed dimension is origins × grid points, SURVEY §3.2-3.3),
   * so the lazy fill needs no synchronization.
@@ -90,13 +94,51 @@ final class CovDesign(
     row
   }
 
-  /** ⟨x̃ⱼ, v⟩/N for a full-length primitive vector v. */
-  def colDot(j: Int, v: Array[Double]): Double = {
+  /** ⟨x̃ⱼ, v⟩/N, v the `nRows` values of a primitive vector from `v(vOff)`. */
+  def colDot(j: Int, v: Array[Double], vOff: Int = 0): Double = {
     val base = j * nRows
     var s = 0.0
     var i = 0
-    while (i < nRows) { s += xArr(base + i) * v(i); i += 1 }
+    while (i < nRows) { s += xArr(base + i) * v(vOff + i); i += 1 }
     s / n
+  }
+
+  /** [[colDot]] for every column at once: `out(outOff + j)` = ⟨x̃ⱼ, v⟩/N
+    * with v the `nRows` values from `v(vOff)`. Four columns share one pass
+    * over the rows. Each has its own accumulator, summed in row order and
+    * divided by N as `colDot` does, so every entry is `colDot`'s value bit
+    * for bit: four independent add chains per pass instead of one
+    * latency-bound chain per column. The last p mod 4 columns take
+    * `colDot`'s loop. No reassociation and no fused multiply-add: the
+    * solver's bit-identity with earlier releases rests on it.
+    */
+  def colDots(v: Array[Double], out: Array[Double], vOff: Int = 0, outOff: Int = 0): Unit = {
+    var j = 0
+    while (j + 4 <= p) {
+      val b0 = j * nRows
+      val b1 = b0 + nRows
+      val b2 = b1 + nRows
+      val b3 = b2 + nRows
+      var s0 = 0.0
+      var s1 = 0.0
+      var s2 = 0.0
+      var s3 = 0.0
+      var i = 0
+      while (i < nRows) {
+        val vi = v(vOff + i)
+        s0 += xArr(b0 + i) * vi
+        s1 += xArr(b1 + i) * vi
+        s2 += xArr(b2 + i) * vi
+        s3 += xArr(b3 + i) * vi
+        i += 1
+      }
+      out(outOff + j) = s0 / n
+      out(outOff + j + 1) = s1 / n
+      out(outOff + j + 2) = s2 / n
+      out(outOff + j + 3) = s3 / n
+      j += 4
+    }
+    while (j < p) { out(outOff + j) = colDot(j, v, vOff); j += 1 }
   }
 
   /** Original-scale coefficient from the standardized one. */

@@ -116,7 +116,14 @@ object ElasticNet {
     *  - cᵢ is refreshed exactly (O(T·k)) once per λ step, so incremental
     *    float drift never crosses a λ boundary; the residual behind it is
     *    computed once per λ boundary — with early stopping, the dev.ratio
-    *    check computes it and the next λ step reuses it.
+    *    check computes it and the next λ step reuses it. Both O(T·k)
+    *    passes are register-blocked kernels, four columns per pass over
+    *    the rows: [[residual]] subtracts four nonzero-β columns per pass
+    *    and [[CovDesign.colDots]] sums four columns' cᵢ per pass. Each
+    *    keeps every value's own operations in the order the one-column
+    *    loops used (ascending columns per r(i); rows in order per cᵢ), with
+    *    no reassociation or fused multiply-add, so the path is the same to
+    *    the last bit; they only run independent chains side by side.
     *
     * Per-sweep cost drops from O(T·k) to O(|A|·p) with |A| active features
     * (and to O(|A|) reads when nothing moves); Gram rows are cached on the
@@ -209,7 +216,9 @@ object ElasticNet {
     * 5 flattened it into fitPathCov's while loop, whose combined bytecode
     * exceeded the JIT's huge-method limit and silently demoted the whole
     * solver to C1/interpreter — ~1.8× on every tuner fit with
-    * bit-identical results. Do not inline it back.
+    * bit-identical results. Do not inline it back, nor the refresh
+    * kernels into it; JitGuardSpec fails when this method, fitPathCov or a
+    * kernel ends at bytecode offset 8000 or more.
     */
   private def solveAt(
       cov: CovDesign,
@@ -264,8 +273,7 @@ object ElasticNet {
 
     // Exact refresh of r and cᵢ at the λ boundary.
     if (!rFresh) residual(yw, xArr, beta, r, p, nRows)
-    var j = 0
-    while (j < p) { cv(j) = cov.colDot(j, r); j += 1 }
+    cov.colDots(r, cv)
 
     val l1 = lambda * alpha
     val l2 = lambda * (1.0 - alpha)
@@ -312,24 +320,60 @@ object ElasticNet {
     iter
   }
 
-  /** r = yw − Σ x̃ⱼβⱼ, the exact residual of the current coefficients. */
-  private def residual(
+  /** r = yw − Σ x̃ⱼβⱼ, the exact residual of the current coefficients,
+    * over the `nRows` values from `yw(rOff)` and `r(rOff)` and the `p`
+    * coefficients from `beta(bOff)` (the offsets serve
+    * [[GroupElasticNet]]'s column-major response slices).
+    *
+    * The nonzero-β columns are listed, then taken four per pass over `r`:
+    * `r(i) - x0·b0 - x1·b1 - x2·b2 - x3·b3`, evaluated left to right, is
+    * the same sequence of rounded subtractions that one pass per column
+    * makes, so each r(i) gets its subtractions in ascending column order
+    * and the result is the column-by-column loop's bit for bit. The last
+    * (nonzero count) mod 4 columns take one pass each. Do not regroup the
+    * products or fuse them: either changes the bits.
+    */
+  private[graft] def residual(
       yw: Array[Double],
       xArr: Array[Double],
       beta: Array[Double],
       r: Array[Double],
       p: Int,
-      nRows: Int): Unit = {
-    System.arraycopy(yw, 0, r, 0, nRows)
+      nRows: Int,
+      rOff: Int = 0,
+      bOff: Int = 0): Unit = {
+    System.arraycopy(yw, rOff, r, rOff, nRows)
+    val nz = new Array[Int](p)
+    var m = 0
     var j = 0
     while (j < p) {
-      val bj = beta(j)
-      if (bj != 0.0) {
-        val base = j * nRows
-        var i = 0
-        while (i < nRows) { r(i) -= xArr(base + i) * bj; i += 1 }
-      }
+      if (beta(bOff + j) != 0.0) { nz(m) = j; m += 1 }
       j += 1
+    }
+    var k = 0
+    while (k + 4 <= m) {
+      val x0 = nz(k) * nRows
+      val x1 = nz(k + 1) * nRows
+      val x2 = nz(k + 2) * nRows
+      val x3 = nz(k + 3) * nRows
+      val b0 = beta(bOff + nz(k))
+      val b1 = beta(bOff + nz(k + 1))
+      val b2 = beta(bOff + nz(k + 2))
+      val b3 = beta(bOff + nz(k + 3))
+      var i = 0
+      while (i < nRows) {
+        r(rOff + i) = r(rOff + i) - xArr(x0 + i) * b0 - xArr(x1 + i) * b1 -
+          xArr(x2 + i) * b2 - xArr(x3 + i) * b3
+        i += 1
+      }
+      k += 4
+    }
+    while (k < m) {
+      val base = nz(k) * nRows
+      val bj = beta(bOff + nz(k))
+      var i = 0
+      while (i < nRows) { r(rOff + i) -= xArr(base + i) * bj; i += 1 }
+      k += 1
     }
   }
 
@@ -426,10 +470,12 @@ object ElasticNet {
     val n = cov.n
     val yMean = if (cov.intercept) sum(y) / n else 0.0
     val yw = if (cov.intercept) (y - yMean).toArray else y.toArray
+    val dots = new Array[Double](cov.p)
+    cov.colDots(yw, dots)
     var lmax = 0.0
     var j = 0
     while (j < cov.p) {
-      val g = math.abs(cov.colDot(j, yw))
+      val g = math.abs(dots(j))
       if (g > lmax) lmax = g
       j += 1
     }

@@ -93,7 +93,6 @@ object GroupElasticNet {
     val nRows = cov.nRows
     val p = cov.p
     val kk = y.cols
-    val n = cov.n
     require(y.rows == nRows)
     val intercept = cov.intercept
 
@@ -130,36 +129,15 @@ object GroupElasticNet {
     var maxIterHits = 0
 
     for (lambda <- lambdas) {
-      // Exact refresh at the λ boundary: R = Yw − X·B, cᵢ = XᵀR/N.
-      System.arraycopy(ywArr, 0, r, 0, nRows * kk)
-      var j = 0
-      while (j < p) {
-        var cc = 0
-        while (cc < kk) {
-          val bjc = bArr(cc * p + j)
-          if (bjc != 0.0) {
-            val xBase = j * nRows
-            val rBase = cc * nRows
-            var i = 0
-            while (i < nRows) { r(rBase + i) -= xArr(xBase + i) * bjc; i += 1 }
-          }
-          cc += 1
-        }
-        j += 1
-      }
-      j = 0
-      while (j < p) {
-        val xBase = j * nRows
-        var cc = 0
-        while (cc < kk) {
-          val rBase = cc * nRows
-          var s = 0.0
-          var i = 0
-          while (i < nRows) { s += xArr(xBase + i) * r(rBase + i); i += 1 }
-          cvM(cc * p + j) = s / n
-          cc += 1
-        }
-        j += 1
+      // Exact refresh at the λ boundary: R = Yw − X·B, cᵢ = XᵀR/N, one
+      // response column at a time through the single-response kernels
+      // (bit for bit the per-(i, c) ascending-j subtractions and the
+      // row-order cᵢ sums).
+      var cc = 0
+      while (cc < kk) {
+        ElasticNet.residual(ywArr, xArr, bArr, r, p, nRows, rOff = cc * nRows, bOff = cc * p)
+        cov.colDots(r, cvM, vOff = cc * nRows, outOff = cc * p)
+        cc += 1
       }
 
       val l1 = lambda * alpha

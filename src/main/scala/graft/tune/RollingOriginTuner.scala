@@ -27,14 +27,21 @@ import org.apache.spark.sql.SparkSession
   * array into the segment's running sum. Summing origin-ascending in one
   * place is what makes every task count agree bit for bit (a reduceByKey
   * would sum in shuffle-arrival order); there is no shuffle, and the driver
-  * collects K·|α| summed arrays. The tasks are a [[graft.FanOut]] over the
-  * segments (which cost alike; origins do not), 4 per core; without a
-  * session the same fold runs over all segments as one part, and
-  * SparkParitySpec pins the two bit-identical.
+  * collects K·|α| summed arrays, each with its segment's maxIter hits. The
+  * tasks are a [[graft.FanOut]] over the segments (which cost alike;
+  * origins do not), 4 per core; without a session the same fold runs over
+  * all segments as one part, and SparkParitySpec pins the two
+  * bit-identical.
   */
 object RollingOriginTuner {
 
-  final case class Best(equation: Int, alpha: Double, lambda: Double, meanRmse: Double)
+  /** One equation's winning (α, λ) and its mean RMSE. `maxIterHits` sums
+    * [[ElasticNet.Path.maxIterHits]] over every path the equation's tune
+    * fitted (all α, all origins): λ steps that used their whole sweep
+    * budget and so may not have converged.
+    */
+  final case class Best(
+      equation: Int, alpha: Double, lambda: Double, meanRmse: Double, maxIterHits: Int)
 
   final case class Grid(alphas: Seq[Double], lambdas: Seq[Double])
 
@@ -153,11 +160,13 @@ object RollingOriginTuner {
     // s / |α|, α index s % |α|). Origins ascending: one prefix CovDesign
     // per origin (standardization and Gram rows shared by the segments),
     // one λ path per segment, its RMSE array added into the segment's sum,
-    // so every sum is taken in origin order.
+    // so every sum is taken in origin order. Each segment also counts its
+    // paths' maxIter hits.
     def foldSegments(za: Array[Double], ya: Array[Double], segs: IndexedSeq[Int])
-        : Seq[Array[Double]] = {
+        : Seq[(Array[Double], Int)] = {
       val z = new DenseMatrix(zRows, zCols, za)
       val sums = new Array[Array[Double]](segs.length)
+      val hits = new Array[Int](segs.length)
       for (o <- origins) {
         val cov = new graft.linalg.CovDesign(
           z(0 until o, ::).toDenseMatrix, intercept = false, standardize = true)
@@ -171,6 +180,7 @@ object RollingOriginTuner {
               val autoLams = ElasticNet.autoLambdaSequenceCov(cov, yTrain, a)
               ElasticNet.fitPathCov(cov, yTrain, a, autoLams, tol = tol, earlyStop = true)
             } else ElasticNet.fitPathCov(cov, yTrain, a, lambdas, tol = tol)
+          hits(i) += path.maxIterHits
           val rmse = rmseOnto(path, lambdas, za, zRows, ya, j * yRows, o, horizon)
           val acc = sums(i)
           if (acc == null) sums(i) = rmse
@@ -181,7 +191,7 @@ object RollingOriginTuner {
           i += 1
         }
       }
-      sums.toSeq
+      sums.toSeq.zip(hits)
     }
 
     val perSeg = graft.FanOut(spark, nSeg, perCore = 4,
@@ -193,11 +203,11 @@ object RollingOriginTuner {
     (0 until design.n).map { j =>
       val candidates = for {
         ai <- alphas.indices
-        sums = perSeg(j * nAlpha + ai)
+        sums = perSeg(j * nAlpha + ai)._1
         li <- lambdas.indices
       } yield (alphas(ai), lambdas(li), sums(li) / nOrigins)
       val (a, l, r) = candidates.minBy(_._3)
-      Best(j, a, l, r)
+      Best(j, a, l, r, alphas.indices.map(ai => perSeg(j * nAlpha + ai)._2).sum)
     }
   }
 }

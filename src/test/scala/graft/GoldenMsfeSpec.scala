@@ -58,11 +58,16 @@ class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
       solverTol = graft.linalg.BlockedCv.GlmnetEquivTol).rawErrSum
   }
 
-  /** The tuned path both reference runs take. */
+  /** The tuned path both reference runs take. No λ step of its tune may
+    * stop at maxIter: such a step may not have converged.
+    */
   private def tunedRawErrSum(set: String, lag: Int): Double = {
     val cols = (ReferenceWorkload.ModelSets ++ ReferenceWorkloadLarge.EconVars).toMap.apply(set)
-    ReferenceWorkload.tunedCase(spark, GoldenExperiment.assemble(prep, cols),
-      cols.toIndexedSeq, lag).result.rawErrSum
+    val t = ReferenceWorkload.tunedCase(spark, GoldenExperiment.assemble(prep, cols),
+      cols.toIndexedSeq, lag)
+    assert(t.tuneMaxIterHits == 0,
+      s"$set lag=$lag: ${t.tuneMaxIterHits} tuner λ steps stopped at maxIter")
+    t.result.rawErrSum
   }
 
   private def anchor(name: String, expected: Double, heavy: Boolean = false)(

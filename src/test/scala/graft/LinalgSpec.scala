@@ -259,4 +259,68 @@ class LinalgSpec extends AnyFunSuite {
       assert(maxAbsDiff(cv.path.at(cv.lambdaMin).beta, bOls) < 0.05, align)
     }
   }
+
+  // The λ-step kernels against the one-column loops they replace, raw bit
+  // for raw bit: every p mod 4 tail (p ∈ 1..5, 7, 8, 30, 34) at T ∈
+  // {1, 30, 146}, and through the offsets GroupElasticNet passes.
+  private val kernelPs = Seq(1, 2, 3, 4, 5, 7, 8, 30, 34)
+  private val kernelTs = Seq(1, 30, 146)
+  private def rawBits(a: Double): Long = java.lang.Double.doubleToRawLongBits(a)
+
+  test("CovDesign.colDots equals per-column colDot bit for bit, with and without offsets") {
+    for (t <- kernelTs; p <- kernelPs; intercept <- Seq(false, true)) {
+      val cov = new graft.linalg.CovDesign(TestData.matrix(t, p, seed = 1000L * p + t),
+        intercept, standardize = true)
+      val v = TestData.vector(t, seed = 31L * p + t).toArray
+      val out = new Array[Double](p)
+      cov.colDots(v, out)
+      // v and out embedded in longer arrays, as one response column of a
+      // column-major block; the padding must stay as it was.
+      val pad = 3
+      val vPad = Array.fill(pad)(Double.NaN) ++ v ++ Array.fill(pad)(Double.NaN)
+      val outPad = Array.fill(p + 2 * pad)(-1.0)
+      cov.colDots(vPad, outPad, vOff = pad, outOff = pad)
+      for (j <- 0 until p) {
+        val want = rawBits(cov.colDot(j, v))
+        assert(rawBits(out(j)) == want, s"t=$t p=$p intercept=$intercept j=$j")
+        assert(rawBits(outPad(pad + j)) == want, s"offset t=$t p=$p intercept=$intercept j=$j")
+      }
+      assert((outPad.take(pad) ++ outPad.takeRight(pad)).forall(_ == -1.0), s"t=$t p=$p")
+    }
+  }
+
+  test("jammed ElasticNet.residual equals the column-by-column loop bit for bit") {
+    // The loop it replaces: one pass over r per nonzero β, ascending j.
+    def columnLoop(yw: Array[Double], xArr: Array[Double], beta: Array[Double],
+        t: Int): Array[Double] = {
+      val r = yw.clone()
+      for (j <- beta.indices if beta(j) != 0.0; i <- 0 until t)
+        r(i) -= xArr(j * t + i) * beta(j)
+      r
+    }
+    for (t <- kernelTs; p <- kernelPs) {
+      val xArr = new graft.linalg.CovDesign(TestData.matrix(t, p, seed = 2000L * p + t),
+        intercept = false, standardize = true).xArr
+      val b = TestData.vector(p, seed = 17L * p + t).toArray
+      val betas = Seq(
+        "all-zero" -> Array.fill(p)(0.0),
+        "one-nonzero" -> Array.tabulate(p)(j => if (j == p / 2) b(j) else 0.0),
+        "alternating-zero" -> Array.tabulate(p)(j => if (j % 2 == 0) b(j) else 0.0),
+        "dense" -> b)
+      for ((label, beta) <- betas) {
+        val yw = TestData.vector(t, seed = 53L * p + t).toArray
+        val want = columnLoop(yw, xArr, beta, t).map(rawBits)
+        val r = new Array[Double](t)
+        ElasticNet.residual(yw, xArr, beta, r, p, t)
+        assert(r.map(rawBits).sameElements(want), s"t=$t p=$p $label")
+        // As GroupElasticNet calls it: response column 1 of 3, column-major.
+        val ywM = Array.fill(t)(7.0) ++ yw ++ Array.fill(t)(7.0)
+        val betaM = Array.fill(p)(1.0) ++ beta ++ Array.fill(p)(1.0)
+        val rM = Array.fill(3 * t)(-1.0)
+        ElasticNet.residual(ywM, xArr, betaM, rM, p, t, rOff = t, bOff = p)
+        assert(rM.slice(t, 2 * t).map(rawBits).sameElements(want), s"offset t=$t p=$p $label")
+        assert((rM.take(t) ++ rM.drop(2 * t)).forall(_ == -1.0), s"offset t=$t p=$p $label")
+      }
+    }
+  }
 }
