@@ -1,5 +1,6 @@
 package graft.experiment
 
+import graft.Scratch
 import graft.sources.TuningIO
 import graft.tune.RollingOriginTuner
 
@@ -59,8 +60,9 @@ object GoldenTune {
 
     // Round-trip the tuned values through the S4 tuning table — a
     // per-invocation directory, so concurrent GoldenTune runs (different
-    // lags) can never read each other's overwrite mid-round-trip.
-    val path = s"/tmp/graft_tuned_params_${java.util.UUID.randomUUID()}"
+    // lags) can never read each other's overwrite mid-round-trip; it is
+    // deleted with the scratch root at JVM exit.
+    val path = Scratch.path("tuned_params_")
     TuningIO.write(spark, path, best.map(b => (names(b.equation), b.alpha, b.lambda)))
     val (alphas, lambdas) = TuningIO.asVectors(spark, path, names)
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SessionCache
+import graft.{Scratch, SessionCache}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1544,32 +1544,6 @@ object AnnIndex {
   private val buildLogMap =
     scala.collection.concurrent.TrieMap.empty[String, Double]
 
-  /** Per-JVM scratch parent for every on-disk index artifact
-    * (saved/compacted/lifecycle generations) — one root, recursively
-    * deleted at JVM exit, so artifacts follow one write-once/cleanup
-    * lifecycle instead of accumulating in the system tmpdir across JVMs
-    * (r15 ADVICE: lifecycleIvfFor's generation + output dirs escaped
-    * the managed lifecycle).
-    */
-  private lazy val annScratchRoot: String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_ann_scratch_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root.toFile)
-    }))
-    root.toString
-  }
-
-  /** A fresh artifact directory under [[annScratchRoot]]. */
-  private def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Paths.get(annScratchRoot)
-      .resolve(s"$prefix${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.createDirectories(p)
-    p.toString
-  }
-
   def buildLog: Map[String, Double] = buildLogMap.toMap
 
   private[graft] def timedBuild[A](key: String)(build: => A): A = {
@@ -1671,20 +1645,19 @@ object AnnIndex {
         .select(col("src"), col("dst"))).toMap)
   }
 
-  /** Write-once-per-(path, params) saved-hierarchy directory — the
-    * savedIvfFor pattern for the HNSW family: first call trains (or
+  /** Write-once-per-(session, path, params) saved-hierarchy directory —
+    * the savedIvfFor pattern for the HNSW family: first call trains (or
     * reuses the session's cached hierarchy) and ships it to parquet;
     * later calls hand back the artifact.
     */
-  private val savedHnswCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val savedHnswCache = SessionCache[(String, Int, Int), String]()
   def savedHnswFor(s: SparkSession, path: String, e: => DataFrame,
       m0: Int = 8, tables: Int = 4): String =
-    savedHnswCache.getOrElseUpdate(s"$path|m0=$m0|tables=$tables", {
-      val dir = scratchDir("hnsw_index_")
+    savedHnswCache(s, (path, m0, tables)) {
+      val dir = Scratch.path("hnsw_index_")
       saveHnsw(hnswFor(s, path, e, m0, tables), dir)
       dir
-    })
+    }
 
   /** Fold streamed HNSW arrivals into a served hierarchy (e35, VERDICT
     * r17 #1's second half) — the consumer of
@@ -1804,7 +1777,7 @@ object AnnIndex {
       val (folded, corpusPlus) =
         foldedHnswFor(s, s"$path|e35", path, e, arrivals)
       val compacted = compactHnsw(folded, dead(corpusPlus))
-      val dir = scratchDir("hnsw_lc_")
+      val dir = Scratch.path("hnsw_lc_")
       saveHnsw(compacted, dir)
       val loaded = loadHnsw(s, dir)
       val persisted = loaded.copy(edges = loaded.edges +
@@ -1861,24 +1834,25 @@ object AnnIndex {
   /** Write-once tombstone+compaction of the shared saved artifact: the
     * first call persists the e6/e7 index (via [[savedIvfFor]]), writes
     * the tag's kill set, and compacts into a FRESH standalone directory
-    * (returned); later calls reuse it. Keyed by (path, nlist, iters,
-    * tag) — and because every evaluation writes its own temp dir, a
-    * racing duplicate build is wasted work, never a corrupted artifact
-    * (the r12 review's tag-collision finding, fixed structurally).
+    * (returned); later calls in the session reuse it. Keyed by (path,
+    * nlist, iters, tag) — and because every evaluation writes its own
+    * temp dir, a racing duplicate build is wasted work, never a corrupted
+    * artifact (the r12 review's tag-collision finding, fixed
+    * structurally).
     */
   private val compactedIvfCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    SessionCache.logged[(String, Int, Int, String), String] {
+      case (_, nlist, iters, tag) => s"ivf-compact:$nlist:$iters:$tag"
+    }
   def compactedIvfFor(s: SparkSession, path: String, e: => DataFrame,
       nlist: Int, iters: Int, dead: => DataFrame, tag: String): String =
-    compactedIvfCache.getOrElseUpdate(
-      s"$path|nlist=$nlist|iters=$iters|dead=$tag",
-      timedBuild(s"ivf-compact:$nlist:$iters:$tag") {
-        val dir = savedIvfFor(s, path, e, nlist, iters)
-        val out = scratchDir("ivf_compact_")
-        tombstoneIvf(s, dir, dead, tag)
-        compactIvf(s, dir, tag, out)
-        out
-      })
+    compactedIvfCache(s, (path, nlist, iters, tag)) {
+      val dir = savedIvfFor(s, path, e, nlist, iters)
+      val out = Scratch.path("ivf_compact_")
+      tombstoneIvf(s, dir, dead, tag)
+      compactIvf(s, dir, tag, out)
+      out
+    }
 
   /** The FULL index lifecycle composed end-to-end (e25, VERDICT r14 #4):
     * train on `base` → persist → LOAD the artifact → append `arrivals`
@@ -1888,50 +1862,51 @@ object AnnIndex {
     * is the same code path its own query serves (e15 persist/load, e14
     * append, e18 delete+compact) — so a recall measurement against the
     * returned artifact measures the COMPOSED lifecycle, not a shortcut.
-    * Write-once per (path, nlist, iters, tag), like [[compactedIvfFor]].
+    * Write-once per (session, path, nlist, iters, tag), like
+    * [[compactedIvfFor]].
     */
   private val lifecycleIvfCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    SessionCache.logged[(String, Int, Int, String), String] {
+      case (_, nlist, iters, tag) => s"ivf-lifecycle:$nlist:$iters:$tag"
+    }
   def lifecycleIvfFor(s: SparkSession, path: String, base: => DataFrame,
       arrivals: => DataFrame, dead: => DataFrame,
       nlist: Int, iters: Int, tag: String): String =
-    lifecycleIvfCache.getOrElseUpdate(
-      s"$path|nlist=$nlist|iters=$iters|tag=$tag",
-      timedBuild(s"ivf-lifecycle:$nlist:$iters:$tag") {
-        val baseDir = savedIvfFor(s, s"$path|$tag-base", base, nlist, iters)
-        val loaded = loadIvf(s, baseDir)
-        // ivfAssign's contract is (vec_id, cid, unit) — the serving
-        // lists also carry the raw embedding (probedScores ranks on it),
-        // so the appended generation rejoins it from the arrivals.
-        val arr = arrivals
-        val assigned = ivfAssign(loaded, arr)
-          .join(arr.select(col("vec_id"), col("embedding")), "vec_id")
-          .select(col("vec_id"), col("embedding"), col("unit"), col("cid"))
-        val merged = loaded.copy(lists = loaded.lists.unionByName(assigned))
-        val genDir = scratchDir("ivf_lc_gen_")
-        saveIvf(merged, genDir)
-        val out = scratchDir("ivf_lc_out_")
-        tombstoneIvf(s, genDir, dead, tag)
-        compactIvf(s, genDir, tag, out)
-        out
-      })
+    lifecycleIvfCache(s, (path, nlist, iters, tag)) {
+      val baseDir = savedIvfFor(s, s"$path|$tag-base", base, nlist, iters)
+      val loaded = loadIvf(s, baseDir)
+      // ivfAssign's contract is (vec_id, cid, unit) — the serving
+      // lists also carry the raw embedding (probedScores ranks on it),
+      // so the appended generation rejoins it from the arrivals.
+      val arr = arrivals
+      val assigned = ivfAssign(loaded, arr)
+        .join(arr.select(col("vec_id"), col("embedding")), "vec_id")
+        .select(col("vec_id"), col("embedding"), col("unit"), col("cid"))
+      val merged = loaded.copy(lists = loaded.lists.unionByName(assigned))
+      val genDir = Scratch.path("ivf_lc_gen_")
+      saveIvf(merged, genDir)
+      val out = Scratch.path("ivf_lc_out_")
+      tombstoneIvf(s, genDir, dead, tag)
+      compactIvf(s, genDir, tag, out)
+      out
+    }
 
-  /** Write-once-per-sfDir saved-index directory (the s13 asset-dir
-    * pattern): the first call trains (or reuses) the shared e6/e7 index
-    * and ships it to parquet; later calls hand back the same artifact.
+  /** Write-once-per-(session, path, params) saved-index directory (the
+    * asset-directory pattern): the first call trains (or reuses) the
+    * shared e6/e7 index and ships it to parquet; later calls hand back
+    * the same artifact.
     */
-  private val savedIvfCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val savedIvfCache = SessionCache[(String, Int, Int), String]()
   def savedIvfFor(s: SparkSession, path: String, e: => DataFrame,
       nlist: Int, iters: Int): String =
     // Keyed by (path, nlist, iters) to match ivfFor's cache contract
     // (ADVICE r11) — a later call with different training parameters
     // must train and persist its own artifact, not inherit the first.
-    savedIvfCache.getOrElseUpdate(s"$path|nlist=$nlist|iters=$iters", {
-      val dir = scratchDir("ivf_index_")
+    savedIvfCache(s, (path, nlist, iters)) {
+      val dir = Scratch.path("ivf_index_")
       saveIvf(ivfFor(s, path, e, nlist, iters), dir)
       dir
-    })
+    }
 
   /** The shared LSH bucket index for `path`'s embeddings in session `s`
     * (e4's search and e5's recall share one bucket table).

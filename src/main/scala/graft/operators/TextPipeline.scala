@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SessionCache
 import graft.functions.TextFunctions
-import graft.sources.Tables
+import graft.sources.{AssetKind, Assets, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -538,110 +538,6 @@ object TextPipeline {
       dupClusters(nearDupPairsFor(s, path, docs, minJaccard))
     }
 
-  /** Per-JVM scratch parent for the synthetic PPM asset corpus; removed
-    * at JVM exit (same discipline as Relational's csvScratchRoot).
-    */
-  private lazy val ppmScratchRoot: String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_ppm_assets_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root.toFile)
-    }))
-    root.toString
-  }
-
-  private val ppmAssetCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Per-(JVM, sfDir) directory of REAL image assets — one 16×16 P6 PPM
-    * per document ([[TextFunctions.renderPpm]]: a genuinely decodable
-    * raster, deterministic in (doc_id, text codepoints)), written ONCE
-    * task-side from a foreachPartition (executors write asset files in a
-    * real pipeline — the driver never sees payload bytes; s13's
-    * convention) and re-scanned through the binaryFile source on every
-    * subsequent call. The ingest-time cost a deployment pays once.
-    */
-  private[graft] def ppmAssetDir(s: SparkSession, d: String): String =
-    ppmAssetCache.getOrElseUpdate(d, {
-      import s.implicits._
-      val dir = s"$ppmScratchRoot/assets_${java.util.UUID.randomUUID()}"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      Tables.documents(s, d)
-        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-        .as[(Long, String)]
-        .foreachPartition { it: Iterator[(Long, String)] =>
-          it.foreach { case (id, t) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(dir, f"$id%08d.ppm"),
-              TextFunctions.renderPpm(id, t))
-          }
-        }
-      dir
-    })
-
-  private val ppmNearDupCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The mm9 asset corpus: every document's base PPM (asset_id =
-    * 2·doc_id) plus, for doc_id % 25 = 0, a PLANTED near-dup variant
-    * (asset_id = 2·doc_id + 1, [[TextFunctions.renderPpmPerturbed]] —
-    * the first row bumped by +25). Same
-    * executor-side foreachPartition writer discipline as
-    * [[ppmAssetDir]]; a separate directory because mm6's oracle replays
-    * the UNPERTURBED corpus and must not see the variants.
-    */
-  private[graft] def ppmNearDupAssetDir(s: SparkSession, d: String): String =
-    ppmNearDupCache.getOrElseUpdate(d, {
-      import s.implicits._
-      val dir = s"$ppmScratchRoot/neardup_${java.util.UUID.randomUUID()}"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      Tables.documents(s, d)
-        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-        .as[(Long, String)]
-        .foreachPartition { it: Iterator[(Long, String)] =>
-          it.foreach { case (id, t) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(dir, f"${2 * id}%08d.ppm"),
-              TextFunctions.renderPpm(id, t))
-            if (id % 25 == 0)
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(dir, f"${2 * id + 1}%08d.ppm"),
-                TextFunctions.renderPpmPerturbed(id, t))
-          }
-        }
-      dir
-    })
-
-  private val ppmCanonicalCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The d19 asset corpus: one CONTENT-ADDRESSED PPM per document
-    * ([[TextFunctions.renderPpmCanonical]] — no doc_id salt), named by
-    * doc_id. A separate directory from mm9's: that corpus exists to
-    * pair each doc with its OWN perturbed variant, this one to let two
-    * DIFFERENT documents with identical content produce identical
-    * rasters — the property cross-modal identity is measured on.
-    */
-  private[graft] def ppmCanonicalAssetDir(s: SparkSession, d: String): String =
-    ppmCanonicalCache.getOrElseUpdate(d, {
-      import s.implicits._
-      val dir = s"$ppmScratchRoot/canon_${java.util.UUID.randomUUID()}"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      Tables.documents(s, d)
-        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-        .as[(Long, String)]
-        .foreachPartition { it: Iterator[(Long, String)] =>
-          it.foreach { case (id, t) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(dir, f"$id%08d.ppm"),
-              TextFunctions.renderPpmCanonical(t))
-          }
-        }
-      dir
-    })
-
   /** binaryFile-ingest + decode + perceptual-hash of every PPM in a
     * directory (the mm9 ingest stage, shared with d19): one scan,
     * per-file O(pixels) kernel. Columns: asset_id (from the numeric
@@ -665,116 +561,6 @@ object TextPipeline {
       }
       .toDF("asset_id", "phash_hi", "phash_lo")
   }
-
-  private val wavNearDupCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The mm10 asset corpus: every document's base WAV (asset_id =
-    * 2·doc_id) plus, for doc_id % 25 = 0, a PLANTED near-dup variant
-    * (asset_id = 2·doc_id + 1, [[TextFunctions.renderWavPerturbed]] —
-    * the first fingerprint frame bumped by +100). ppmNearDupAssetDir's
-    * shape; a separate directory because mm7's oracle replays the
-    * UNPERTURBED corpus and must not see the variants.
-    */
-  private[graft] def wavNearDupAssetDir(s: SparkSession, d: String): String =
-    wavNearDupCache.getOrElseUpdate(d, {
-      import s.implicits._
-      val dir = s"$ppmScratchRoot/wavdup_${java.util.UUID.randomUUID()}"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      Tables.documents(s, d)
-        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-        .as[(Long, String)]
-        .foreachPartition { it: Iterator[(Long, String)] =>
-          it.foreach { case (id, t) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(dir, f"${2 * id}%08d.wav"),
-              TextFunctions.renderWav(id, t))
-            if (id % 25 == 0)
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(dir, f"${2 * id + 1}%08d.wav"),
-                TextFunctions.renderWavPerturbed(id, t))
-          }
-        }
-      dir
-    })
-
-  private val y4mNearDupCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The mm11 asset corpus: every document's base Y4M (asset_id =
-    * 2·doc_id) plus, for doc_id % 25 = 0, a PLANTED near-dup variant
-    * (asset_id = 2·doc_id + 1, [[TextFunctions.renderY4mPerturbed]]).
-    * Separate directory: mm8's oracle replays the unperturbed corpus.
-    */
-  private[graft] def y4mNearDupAssetDir(s: SparkSession, d: String): String =
-    y4mNearDupCache.getOrElseUpdate(d, {
-      import s.implicits._
-      val dir = s"$ppmScratchRoot/y4mdup_${java.util.UUID.randomUUID()}"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      Tables.documents(s, d)
-        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-        .as[(Long, String)]
-        .foreachPartition { it: Iterator[(Long, String)] =>
-          it.foreach { case (id, t) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(dir, f"${2 * id}%08d.y4m"),
-              TextFunctions.renderY4m(id, t))
-            if (id % 25 == 0)
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(dir, f"${2 * id + 1}%08d.y4m"),
-                TextFunctions.renderY4mPerturbed(id, t))
-          }
-        }
-      dir
-    })
-
-  private val y4mAssetCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** One real Y4M video per document (renderY4m), the mm8 lane —
-    * ppmAssetDir's shape, same scratch root + shutdown cleanup.
-    */
-  private[graft] def y4mAssetDir(s: SparkSession, d: String): String =
-    y4mAssetCache.getOrElseUpdate(d, {
-      import s.implicits._
-      val dir = s"$ppmScratchRoot/y4m_${java.util.UUID.randomUUID()}"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      Tables.documents(s, d)
-        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-        .as[(Long, String)]
-        .foreachPartition { it: Iterator[(Long, String)] =>
-          it.foreach { case (id, t) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(dir, f"$id%08d.y4m"),
-              TextFunctions.renderY4m(id, t))
-          }
-        }
-      dir
-    })
-
-  private val wavAssetCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** One real PCM16 WAV per document (renderWav), the mm7 audio asset
-    * lane — ppmAssetDir's shape, same scratch root + shutdown cleanup.
-    */
-  private[graft] def wavAssetDir(s: SparkSession, d: String): String =
-    wavAssetCache.getOrElseUpdate(d, {
-      import s.implicits._
-      val dir = s"$ppmScratchRoot/wav_${java.util.UUID.randomUUID()}"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      Tables.documents(s, d)
-        .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-        .as[(Long, String)]
-        .foreachPartition { it: Iterator[(Long, String)] =>
-          it.foreach { case (id, t) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(dir, f"$id%08d.wav"),
-              TextFunctions.renderWav(id, t))
-          }
-        }
-      dir
-    })
 
   /** The e24 kernel over any (vec_id, embedding) frame — vector ingest
     * hygiene audit; contract on the e24 entry. Spec-planted branches: a
@@ -4248,7 +4034,7 @@ object TextPipeline {
       // are one asset scan, verdict join is per-candidate-pair.
       crossModalAgreement(
         nearDupPairsFor(s, d, Tables.documents(s, d), minJaccard = 0.0),
-        ppmDirHashes(s, ppmCanonicalAssetDir(s, d))
+        ppmDirHashes(s, Assets.dir(s, d, AssetKind.PpmCanonical))
           .withColumnRenamed("asset_id", "doc_id"))
     }, Some(
       s"""WITH $d5OracleCtes,
@@ -10568,17 +10354,17 @@ object TextPipeline {
          ORDER BY 1""")),
 
     ("mm6_perceptual_hash", (s: SparkSession, d: String) => {
-      // Perceptual near-dup hashing over GENUINELY DECODED PIXELS —
-      // d4's SimHash analogue for the image side of the corpus, now the
-      // full asset lifecycle (r13 verdict #2): the ppmAssetDir writer
-      // emits one real 16×16 P6 PPM per document (renderPpm — any PPM
-      // reader opens it), the binaryFile source ingests the raw files
-      // (s13's edge), and the kernel PARSES the format — magic, header,
-      // RGB triples → truncating-mean grayscale (decodePpm), 8×8 box
-      // downsample, aHash (aHash8: bit i set iff 64·gᵢ > Σg, the
-      // integer test; two unsigned 32-bit halves so bit 63 never sits
-      // in int64's sign). Hamming-near hashes ≈ visually-near
-      // thumbnails — the primitive image-dedup pipelines bucket on.
+      // Perceptual near-dup hashing over GENUINELY DECODED PIXELS — d4's
+      // SimHash analogue for the image side of the corpus, now the full
+      // asset lifecycle (r13 verdict #2): the Assets.dir writer
+      // (AssetKind.Ppm) emits one real 16×16 P6 PPM per document (renderPpm
+      // — any PPM reader opens it), the binaryFile source ingests the raw
+      // files (s13's edge), and the kernel PARSES the format — magic,
+      // header, RGB triples → truncating-mean grayscale (decodePpm), 8×8
+      // box downsample, aHash (aHash8: bit i set iff 64·gᵢ > Σg, the
+      // integer test; two unsigned 32-bit halves so bit 63 never sits in
+      // int64's sign). Hamming-near hashes ≈ visually-near thumbnails — the
+      // primitive image-dedup pipelines bucket on.
       // The oracle recomputes the DECODE from the documents table: the
       // raster is deterministic in (doc_id, text codepoints), so the
       // SQL replays generator → gray → downsample → hash; any decoder
@@ -10590,7 +10376,7 @@ object TextPipeline {
       // parallel; the planted near-dup pair test lives in PipelineSpec
       // (decode + hamming across a 2-pixel perturbation).
       import s.implicits._
-      val dir = ppmAssetDir(s, d)
+      val dir = Assets.dir(s, d, AssetKind.Ppm)
       s.read.format("binaryFile").option("pathGlobFilter", "*.ppm")
         .load(dir)
         .select(
@@ -10650,8 +10436,9 @@ object TextPipeline {
 
     ("mm7_audio_features", (s: SparkSession, d: String) => {
       // AUDIO joins the multimodal lane with the same full-lifecycle
-      // discipline as mm6's image path: the wavAssetDir writer emits one
-      // REAL canonical PCM16 mono RIFF/WAVE per document (renderWav —
+      // discipline as mm6's image path: the Assets.dir writer
+      // (AssetKind.Wav) emits one REAL canonical PCM16 mono RIFF/WAVE
+      // per document (renderWav —
       // any audio reader opens it), binaryFile ingests the raw files,
       // and the kernel PARSES the container — RIFF/WAVE magic, the
       // chunk WALK (a real reader tolerates LIST/fact chunks; fmt must
@@ -10670,7 +10457,7 @@ object TextPipeline {
       // malformed-container tests (bad magic, data-before-fmt,
       // truncated chunk) live in PipelineSpec.
       import s.implicits._
-      val dir = wavAssetDir(s, d)
+      val dir = Assets.dir(s, d, AssetKind.Wav)
       s.read.format("binaryFile").option("pathGlobFilter", "*.wav")
         .load(dir)
         .select(
@@ -10722,13 +10509,13 @@ object TextPipeline {
     ("mm8_video_scene_hash", (s: SparkSession, d: String) => {
       // VIDEO completes the multimodal triad (image mm6 / audio mm7 /
       // video here) with the same full-lifecycle discipline: the
-      // y4mAssetDir writer emits one REAL 4-frame YUV4MPEG2 stream per
-      // document (renderY4m — any Y4M reader opens it), binaryFile
-      // ingests, the kernel PARSES the container (header tags walked
-      // tolerantly, FRAME markers, planar C444 strides — decodeY4m),
-      // and each decoded frame aHashes through the SAME aHash8 mm6
-      // uses (one perceptual kernel for stills and frames). The video
-      // question on top: SCENE CHANGE — hamming distance between
+      // Assets.dir writer (AssetKind.Y4m) emits one REAL 4-frame
+      // YUV4MPEG2 stream per document (renderY4m — any Y4M reader opens
+      // it), binaryFile ingests, the kernel PARSES the container (header
+      // tags walked tolerantly, FRAME markers, planar C444 strides —
+      // decodeY4m), and each decoded frame aHashes through the SAME
+      // aHash8 mm6 uses (one perceptual kernel for stills and frames).
+      // The video question on top: SCENE CHANGE — hamming distance between
       // consecutive frames' hashes, flagged at > 16 of 64 bits (the
       // shot-boundary primitive every video-dedup/sampling pipeline
       // starts from; frame sampling itself is mm2). Per-asset lag
@@ -10739,7 +10526,7 @@ object TextPipeline {
       // relationally). At 100 TB: one binaryFile scan + per-file
       // O(frames·pixels) kernel + a per-asset 4-row window.
       import s.implicits._
-      val dir = y4mAssetDir(s, d)
+      val dir = Assets.dir(s, d, AssetKind.Y4m)
       val wd = Window.partitionBy(col("asset_id")).orderBy(col("frame_idx"))
       s.read.format("binaryFile").option("pathGlobFilter", "*.y4m")
         .load(dir)
@@ -10911,7 +10698,7 @@ object TextPipeline {
       // fan out; the d16 df-gate posture), equi-join within buckets for
       // candidates, then verify by FULL hamming ≤ 3 (bit_count over the
       // XOR'd halves — exact integers). The asset corpus is the real
-      // lifecycle: ppmNearDupAssetDir writes every doc's base PPM plus
+      // lifecycle: AssetKind.PpmNearDup writes every doc's base PPM plus
       // a PLANTED first-row-perturbed variant for doc_id % 25 = 0
       // (renderPpmPerturbed), binaryFile ingests, decodePpm + aHash8
       // parse — so the reported pairs are (2k, 2k+1) planted near-dups
@@ -10923,7 +10710,7 @@ object TextPipeline {
       // r19: the decoded-hash table is read 5× (3 band-side reads + 2
       // verify joins) and each read re-ran the binaryFile scan + pixel
       // decode — checkpoint the per-asset hashes once. Identical rows.
-      val hashes = ppmDirHashes(s, ppmNearDupAssetDir(s, d))
+      val hashes = ppmDirHashes(s, Assets.dir(s, d, AssetKind.PpmNearDup))
         .localCheckpoint()
       val bands = hashes.select(col("asset_id"),
           explode(array(
@@ -11050,7 +10837,7 @@ object TextPipeline {
       // fingerprint where a light perturbation flips only the frames
       // it touches). Bucket-gated (occ ≤ 50) equi-join, full-hamming
       // ≤ 1 verify. The asset corpus is the real lifecycle:
-      // wavNearDupAssetDir writes every doc's base WAV plus a PLANTED
+      // AssetKind.WavNearDup writes every doc's base WAV plus a PLANTED
       // first-frame-perturbed variant for doc_id % 25 = 0
       // (renderWavPerturbed), binaryFile ingests, decodeWav parses the
       // RIFF chunk walk — so reported pairs genuinely decode as near
@@ -11059,7 +10846,7 @@ object TextPipeline {
       // binaryFile scan, per-file O(samples) kernel, 2 rows per asset
       // into a bucket-gated self-join — d3's scale shape.
       import s.implicits._
-      val dir = wavNearDupAssetDir(s, d)
+      val dir = Assets.dir(s, d, AssetKind.WavNearDup)
       val sigs = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.wav").load(dir)
         .select(
@@ -11185,13 +10972,13 @@ object TextPipeline {
       // (the mm9 threshold: the planted frame-0 first-row perturbation
       // lands 0–5, most pairs within — the honest miss behavior a
       // banded dedup has). Assets are the real lifecycle
-      // (y4mNearDupAssetDir → binaryFile → decodeY4m chunk walk);
+      // (AssetKind.Y4mNearDup → binaryFile → decodeY4m chunk walk);
       // oracle replays generator → per-frame hash → bands → gate →
       // frame-aligned verify. 100 TB: one binaryFile scan, per-file
       // O(frames·pixels) kernel, 16 rows per asset into a bucket-gated
       // join — d3's shape with a frame dimension.
       import s.implicits._
-      val dir = y4mNearDupAssetDir(s, d)
+      val dir = Assets.dir(s, d, AssetKind.Y4mNearDup)
       val hashes = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.y4m").load(dir)
         .select(

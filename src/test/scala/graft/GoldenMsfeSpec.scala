@@ -18,8 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Guards: every test cancels when the converted panel fixture
   * (tools/convert_panel.py → data/panel) is absent. The two lag-5 anchors
-  * cost ~150 s each, so they additionally require SPARK_GRAFT_FULL_GOLDEN
-  * in the environment (the per-round suite stays fast). The lag-1 and
+  * cost ~8 min each at local[4] on 4 cores, so they additionally require
+  * SPARK_GRAFT_FULL_GOLDEN in the environment (the per-round suite stays
+  * fast). The lag-1 and
   * econ.vars.2 anchors always run and exercise the identical prep → repair
   * → assemble → modeltrain chain; the two tuned anchors add the
   * rolling-origin tune in front of modeltrain. The four share one prepare
@@ -76,7 +77,7 @@ class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assume(panelFile.exists,
         s"panel fixture absent (${panelFile.getPath}) — run tools/convert_panel.py")
       assume(!heavy || runHeavy,
-        "lag-5 anchors run only with SPARK_GRAFT_FULL_GOLDEN set (~150 s each)")
+        "lag-5 anchors run only with SPARK_GRAFT_FULL_GOLDEN set (~8 min each at local[4] on 4 cores)")
       val got = rawErrSum
       val rel = math.abs(got - expected) / expected
       assert(rel < 1e-6,

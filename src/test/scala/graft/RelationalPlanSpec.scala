@@ -1722,4 +1722,54 @@ class RelationalPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(selected == 1,
       s"edges(0) reads $selected level directories, want 1")
   }
+
+  test("asset corpora: pinned bytes per kind, one directory per session, planted near-dups") {
+    // Every AssetKind renders through the one Assets.dir writer, so
+    // (sfDir, kind) must determine the directory's bytes: the pins are
+    // (file count, SHA-256 over each file's name, a 0 byte and its
+    // content, in name order) of the directories the per-kind writers
+    // produced before they were merged. A kind served another kind's
+    // renderer, extension or asset numbering fails its pin.
+    import graft.sources.{AssetKind, Assets, Tables}
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def files(dir: String): Seq[Path] = {
+      val list = Files.list(Paths.get(dir))
+      try list.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+      finally list.close()
+    }
+    def digest(dir: String): (Int, String) = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val fs = files(dir)
+      fs.foreach { p =>
+        md.update(p.getFileName.toString.getBytes("UTF-8"))
+        md.update(0.toByte)
+        md.update(Files.readAllBytes(p))
+      }
+      (fs.size, md.digest().map(b => f"$b%02x").mkString)
+    }
+    val pinned = Seq(
+      AssetKind.Ppm -> (500, "e68dbe586028a38e6056ab1452ac1900e45835096328d8d384e934dc7157f945"),
+      AssetKind.PpmNearDup -> (520, "835b65d11bf08f79c7a5158b213e4c89502a9e917cf39cbca095e2f6a5087f1c"),
+      AssetKind.PpmCanonical -> (500, "22618612ffd830834721d7f35d69ae01e71ca65b6ca3e7b27104c3fb7892faff"),
+      AssetKind.Wav -> (500, "c273627b557a2a20a8b457b02c2eb2f4a150b242d5859f684d504a75dc488212"),
+      AssetKind.WavNearDup -> (520, "9d8880bae1adc0856a4ab333b7bba20e96402fadbe5708208d479daae5729372"),
+      AssetKind.Y4m -> (500, "c46e17717512ac369de3e94108536608c9527d7d77b6a42d638ead9eb087e5cd"),
+      AssetKind.Y4mNearDup -> (520, "bfc1ff53001114db8e36bf386a3279c4ce966c8d4f151549a88770f3678986bb"),
+      AssetKind.Bin -> (500, "ead769b9dfc855eec27cfee2814d16665b59521a4131a5add243eff275c2455f"))
+    for ((kind, pin) <- pinned) {
+      val dir = Assets.dir(spark, sfDir, kind)
+      assert(Assets.dir(spark, sfDir, kind) == dir,
+        s"$kind: a second call in the session built a new directory")
+      assert(digest(dir) == pin, s"$kind: asset bytes differ from the pin")
+    }
+    val ids = Tables.documents(spark, sfDir).select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+    val planted = ids.map(2 * _) ++ ids.filter(_ % 25 == 0).map(2 * _ + 1)
+    for (kind <- Seq(AssetKind.PpmNearDup, AssetKind.WavNearDup, AssetKind.Y4mNearDup)) {
+      val assets = files(Assets.dir(spark, sfDir, kind))
+        .map(_.getFileName.toString.stripSuffix(s".${kind.ext}").toLong).toSet
+      assert(assets == planted, s"$kind: assets are not 2·id plus 2·id + 1 for id % 25 = 0")
+    }
+  }
 }

@@ -5,10 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-/** Keeps main sources on one session factory, one session-cache type and
-  * one fan-out: a main builds its session through [[Session]], a
-  * per-session cache is a [[SessionCache]], and independent items go to
-  * Spark tasks through [[FanOut]], so none of these decisions is restated
+/** Keeps main sources on one session factory, one session-cache type, one
+  * fan-out and one scratch root: a main builds its session through
+  * [[Session]], a write-once cache is a [[SessionCache]], independent items
+  * go to Spark tasks through [[FanOut]], and an on-disk artifact's path
+  * comes from [[Scratch]], so none of these decisions is restated
   * elsewhere.
   */
 class SessionGuardSpec extends AnyFunSuite {
@@ -38,6 +39,7 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(Files.isRegularFile(root.resolve("graft/Session.scala")))
     assert(Files.isRegularFile(root.resolve("graft/SessionCache.scala")))
     assert(Files.isRegularFile(root.resolve("graft/FanOut.scala")))
+    assert(Files.isRegularFile(root.resolve("graft/Scratch.scala")))
   }
 
   test("SparkSession.builder appears only in graft/Session.scala") {
@@ -52,6 +54,17 @@ class SessionGuardSpec extends AnyFunSuite {
 
   test("sparkContext.parallelize appears only in graft/FanOut.scala") {
     val found = hits("""sparkContext\s*\.parallelize""".r, Paths.get("graft/FanOut.scala"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("getOrElseUpdate( appears only in graft/SessionCache.scala") {
+    val found = hits(literal("getOrElseUpdate("), Paths.get("graft/SessionCache.scala"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("createTempDirectory, addShutdownHook and UUID.randomUUID appear only in graft/Scratch.scala") {
+    val found = Seq("createTempDirectory", "addShutdownHook", "UUID.randomUUID")
+      .flatMap(s => hits(literal(s), Paths.get("graft/Scratch.scala")))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }
