@@ -190,10 +190,8 @@ object GoldenExperiment {
     */
   val EconVars2: Seq[String] = Seq("GDP", "FEDFUNDS", "CPIAUCSL")
 
-  /** Usage: runMain graft.experiment.GoldenExperiment [lag] [alpha] [tol] [colset] [method] [cvmode]
-    * colset ∈ {ezlasso, econ2}; method ∈ {enet, genet}; cvmode ∈ {master
-    * (one λ grid for all folds), index, lambda (per-fold glmnet auto paths,
-    * aligned by path position / by λ value — see BlockedCv.cvFitDesigns)}.
+  /** Usage: runMain graft.experiment.GoldenExperiment [lag] [alpha] [tol] [colset] [method]
+    * colset ∈ {ezlasso, econ2}; method ∈ {enet, genet}.
     */
   def main(args: Array[String]): Unit = {
     val lag = if (args.nonEmpty) args(0).toInt else 5
@@ -202,7 +200,6 @@ object GoldenExperiment {
               else graft.linalg.BlockedCv.GlmnetEquivTol
     val panelCols = if (args.length > 3 && args(3) == "econ2") EconVars2 else EzlassoAll
     val method = if (args.length > 4) args(4) else "enet"
-    val cvFoldPaths = if (args.length > 5 && args(5) != "master") Some(args(5)) else None
     val spark = graft.Session.build()
     val panel = buildPanel(spark, panelCols)
     val y = panel.y
@@ -211,8 +208,7 @@ object GoldenExperiment {
     val t1 = System.nanoTime()
     val res = ModelTrain.run(y, panelCols.toIndexedSeq, startPredIdx,
       h = 8, alphas = Seq(alpha), lambdas = Seq.empty, lag = lag,
-      const = true, spark = Some(spark), solverTol = tol, method = method,
-      cvFoldPaths = cvFoldPaths)
+      const = true, spark = Some(spark), solverTol = tol, method = method)
     val wall = (System.nanoTime() - t1) / 1e9
     val msfes = Seq(1, 2, 4, 8).map(h => h -> res.byHorizon(h).msfe)
     msfes.foreach { case (h, m) => println(f"[golden] msfe h$h%d = $m%.12f") }
@@ -221,6 +217,7 @@ object GoldenExperiment {
     // sums (ModelTrain.Result.rawErrSum); report both normalizations.
     println(f"[golden] RAW ERR SUM (msfe × ${res.byHorizon(1).errors.length}, summed) = " +
       f"${res.rawErrSum}%.12f")
+    println(s"[golden] maxIter hits (CV paths, all origins) = ${res.maxIterHits}")
     println("[golden] reference goldens: lag5/a0.4 CV = 0.00907175092168175 | " +
       "lag1 = 0.0107635485836803 | lag5/a0.5 = 0.009076151")
     Seq(1, 2, 4, 8).foreach { h =>

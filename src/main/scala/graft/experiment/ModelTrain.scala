@@ -39,7 +39,8 @@ object ModelTrain {
   final case class Result(
       byHorizon: Map[Int, HorizonResult],
       residuals: DenseMatrix[Double],
-      lastModel: graft.varmodel.FittedVar) {
+      lastModel: graft.varmodel.FittedVar,
+      maxIterHits: Int) {       // summed over every origin's refit
 
     /** The reference's raw squared-error sum, the figure its "mse sum"
       * comments record: Σ over horizons and origins of e² (u_1,
@@ -63,8 +64,7 @@ object ModelTrain {
       spark: Option[SparkSession] = None,
       rwQuirkOffByOne: Boolean = true,
       solverTol: Double = 1e-9,
-      method: String = "enet",
-      cvFoldPaths: Option[String] = None): Result = {
+      method: String = "enet"): Result = {
     require(method == "enet" || method == "genet",
       s"method must be enet|genet (reference modeltrain signature), got $method")
     val n = data.rows
@@ -80,8 +80,9 @@ object ModelTrain {
     // model back (a coefficient matrix plus the small design state — tens
     // of KB): the reference's modeltrain returns the last refit's
     // model/residuals, and refitting it on the driver after the job would
-    // double that origin's work (for genet, a full joint CV).
-    def fitOrigin(data: DenseMatrix[Double], i: Int): (Array[Double], Option[graft.varmodel.FittedVar]) = {
+    // double that origin's work (for genet, a full joint CV). Every origin
+    // also ships its refit's maxIter hit count.
+    def fitOrigin(data: DenseMatrix[Double], i: Int): (Array[Double], Int, Option[graft.varmodel.FittedVar]) = {
       val train = data(0 until i, ::).toDenseMatrix
       val model: graft.varmodel.FittedVar =
         if (method == "genet")
@@ -90,14 +91,13 @@ object ModelTrain {
           graft.varmodel.GroupEnetVar.fit(train, lag, names, alphas.head, const,
             solverTol = solverTol)
         else
-          EnetVar.fit(train, lag, names, alphas, lambdas, const, solverTol,
-            cvFoldPaths)
+          EnetVar.fit(train, lag, names, alphas, lambdas, const, solverTol)
       val fc = model.forecast(h)
-      (predInd.map(pi => fc(pi - 1, 0)).toArray,
+      (predInd.map(pi => fc(pi - 1, 0)).toArray, model.maxIterHits,
         if (i == origins.last) Some(model) else None)
     }
 
-    val fitted: IndexedSeq[(Array[Double], Option[graft.varmodel.FittedVar])] =
+    val fitted: IndexedSeq[(Array[Double], Int, Option[graft.varmodel.FittedVar])] =
       graft.FanOut(spark, origins.length, perCore = 1, data) { (d, share) =>
         share.map(c => fitOrigin(d, origins(c)))
       }
@@ -151,8 +151,8 @@ object ModelTrain {
     // group fit, not a fresh per-equation one. The model comes out of the
     // fan-out itself (fitOrigin keeps origins.last's fit), not a duplicate
     // driver-side refit.
-    val lastModel: graft.varmodel.FittedVar = fitted.last._2.getOrElse(
+    val lastModel: graft.varmodel.FittedVar = fitted.last._3.getOrElse(
       sys.error("last origin's task returned no model"))
-    Result(byHorizon, lastModel.residuals, lastModel)
+    Result(byHorizon, lastModel.residuals, lastModel, fitted.map(_._2).sum)
   }
 }

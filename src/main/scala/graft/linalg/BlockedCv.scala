@@ -28,11 +28,15 @@ object BlockedCv {
     */
   def foldIds(n: Int): Array[Int] = Array.tabulate(n)(i => i / BlockSize + 1)
 
+  /** `maxIterHits` sums [[ElasticNet.Path.maxIterHits]] over the full-data
+    * path and every fold path the CV fit.
+    */
   final case class CvResult(
       lambdas: IndexedSeq[Double],
       cvm: IndexedSeq[Double],       // mean squared CV error per λ
       lambdaMin: Double,
-      path: ElasticNet.Path)         // full-data path over the same λs
+      path: ElasticNet.Path,         // full-data path over the same λs
+      maxIterHits: Int)
 
   /** One fold's precomputed solver state. */
   final case class FoldDesign(
@@ -53,155 +57,60 @@ object BlockedCv {
       full: CovDesign,
       folds: IndexedSeq[FoldDesign])
 
-  def designs(
-      x: DenseMatrix[Double],
-      foldid: Array[Int],
-      intercept: Boolean = false,
-      standardize: Boolean = true): CvDesigns = {
+  /** The blocked fold layout ([[foldIds]] over `x`'s rows) with
+    * standardized designs — the one fold split behind both solvers' CV
+    * (this object's and [[GroupElasticNet.cvFitBlocked]]). A design of at
+    * most [[BlockSize]] rows is one fold with an empty training split, so
+    * it is rejected here rather than surfacing as an empty argmin deep
+    * inside a lag-selection loop.
+    */
+  def designs(x: DenseMatrix[Double], intercept: Boolean = false): CvDesigns = {
     val n = x.rows
-    require(foldid.length == n, s"foldid length ${foldid.length} != $n rows")
-    val folds = foldid.distinct.sorted.toIndexedSeq.flatMap { f =>
+    require(n > BlockSize,
+      s"blocked CV needs more than $BlockSize rows, got $n (no non-empty training fold)")
+    val foldid = foldIds(n)
+    val folds = (1 to foldid.last).map { f =>
       val trainIdx = (0 until n).filter(foldid(_) != f)
       val testIdx = (0 until n).filter(foldid(_) == f)
-      if (trainIdx.nonEmpty && testIdx.nonEmpty)
-        Some(FoldDesign(
-          new CovDesign(x(trainIdx, ::).toDenseMatrix, intercept, standardize),
-          trainIdx, testIdx))
-      else None
+      FoldDesign(new CovDesign(x(trainIdx, ::).toDenseMatrix, intercept, true), trainIdx, testIdx)
     }
-    CvDesigns(x, new CovDesign(x, intercept, standardize), folds)
+    CvDesigns(x, new CovDesign(x, intercept, true), folds)
   }
 
-  /** cv.glmnet-style CV over precomputed designs.
-    *
-    * Default mode (`foldPaths = None`): the λ sequence is computed once on
-    * the FULL data, each fold refits the whole warm-started path on its
-    * training block-complement AT those master λs, held-out squared errors
-    * are pooled per observation, and `lambda.min` is the pooled-MSE argmin.
-    *
-    * Per-fold-path mode (`foldPaths = Some(align)`) reproduces what
-    * `cv.glmnet(x, y, foldid)` with NO user λ actually does (the reference
-    * call, enetVAR.R:27-36): the master sequence is the full-data AUTO path
-    * with glmnet's early stopping (fdev/devmax — so the master grid ends
-    * where glmnet's would); each fold then fits its OWN auto path — own
-    * λmax, own lambda.min.ratio, own early stop — and fold predictions are
-    * aligned onto the master grid before pooling:
-    *  - `align = "index"`: fold path position m scores master λ_m, master
-    *    positions past the fold's stop point drop out of that λ's mean
-    *    (R's `predmat[which, seq(nlami)]` + `na.rm = TRUE` — the glmnet
-    *    2.0-era behavior contemporaneous with the reference, later named
-    *    `alignment = "fraction"`);
-    *  - `align = "lambda"`: fold predictions interpolated at the master λ
-    *    values via [[ElasticNet.Path.at]] (glmnet ≥ 4.0's default
-    *    `alignment = "lambda"` — `predict(fitobj, s = lambda)`).
+  /** cv.glmnet-style CV over precomputed designs: glmnet's 100-point λ
+    * sequence is computed once on the FULL data, each fold refits the whole
+    * warm-started path on its training block-complement AT those master
+    * λs, held-out squared errors are pooled per observation, and
+    * `lambda.min` is the pooled-MSE argmin.
     */
   def cvFitDesigns(
       ds: CvDesigns,
       y: DenseVector[Double],
       alpha: Double,
-      nLambda: Int = 100,
-      tol: Double = 1e-9,
-      foldPaths: Option[String] = None): CvResult = {
+      tol: Double = 1e-9): CvResult = {
     val x = ds.x
-    val n = x.rows
-    // A design of <= BlockSize rows yields a single fold whose training
-    // split is empty (designs() drops it): without this guard every cvm
-    // entry would be NaN and the argmin would die in an opaque
-    // empty.minBy deep inside a lag-selection loop.
-    require(ds.folds.nonEmpty,
-      s"blocked CV needs more than $BlockSize rows, got $n (no non-empty training fold)")
-    val intercept = ds.full.intercept
-    val perFold = foldPaths.isDefined
-    val align = foldPaths.getOrElse("")
-    require(!perFold || align == "index" || align == "lambda",
-      s"foldPaths must be index|lambda, got $align")
-
-    // Master sequence and full-data path. In per-fold mode the master path
-    // is fit FIRST with early stopping, and the CV grid is the (possibly
-    // truncated) sequence glmnet would actually have computed.
-    val autoLams = ElasticNet.autoLambdaSequenceCov(ds.full, y, alpha, nLambda)
-    val fullPath = ElasticNet.fitPathCov(ds.full, y, alpha, autoLams,
-      tol = tol, earlyStop = perFold)
-    val lambdas = fullPath.lambdas
-    val sqErr = Array.fill(lambdas.length)(0.0)
-    val cnt = Array.fill(lambdas.length)(0L)
-
+    val lambdas = ElasticNet.autoLambdaSequenceCov(ds.full, y, alpha)
+    val fullPath = ElasticNet.fitPathCov(ds.full, y, alpha, lambdas, tol = tol)
+    val sqErr = new Array[Double](lambdas.length)
+    var maxIterHits = fullPath.maxIterHits
     for (fd <- ds.folds) {
-      val yt = y(fd.trainIdx).toDenseVector
-      val path =
-        if (perFold) {
-          val foldLams = ElasticNet.autoLambdaSequenceCov(fd.cov, yt, alpha, nLambda)
-          ElasticNet.fitPathCov(fd.cov, yt, alpha, foldLams, tol = tol,
-            earlyStop = true)
-        } else ElasticNet.fitPathCov(fd.cov, yt, alpha, lambdas, tol = tol)
-      // λ-value alignment interpolates the whole fold path onto the master
-      // grid in ONE descending two-pointer walk — Path.at per master λ would
-      // be an O(nλ²) scan per fold inside the equations × origins loops.
-      val lambdaAligned: Array[ElasticNet.Fit] =
-        if (perFold && align == "lambda") alignOnto(path, lambdas) else null
+      val path = ElasticNet.fitPathCov(fd.cov, y(fd.trainIdx).toDenseVector, alpha, lambdas,
+        tol = tol)
+      maxIterHits += path.maxIterHits
       var li = 0
       while (li < lambdas.length) {
-        val fit =
-          if (!perFold) path.fits(li)
-          else if (align == "lambda") lambdaAligned(li)
-          else if (li < path.fits.length) path.fits(li)
-          else null // fold path stopped before master position li → NA
-        if (fit != null) {
-          for (i <- fd.testIdx) {
-            val pred = fit.intercept + (x(i, ::).t dot fit.beta)
-            val e = y(i) - pred
-            sqErr(li) += e * e
-            cnt(li) += 1
-          }
+        val fit = path.fits(li)
+        for (i <- fd.testIdx) {
+          val pred = fit.intercept + (x(i, ::).t dot fit.beta)
+          val e = y(i) - pred
+          sqErr(li) += e * e
         }
         li += 1
       }
     }
-    // Pooled per-observation mean; in index-aligned per-fold mode a master
-    // position unreached by some folds averages over the observations that
-    // DO have predictions (R's weighted.mean(..., na.rm = TRUE)); a
-    // position reached by no fold is excluded from the argmin.
-    val cvm = lambdas.indices.map(li =>
-      if (cnt(li) == 0) Double.NaN else sqErr(li) / cnt(li))
-    val best = cvm.zipWithIndex.filterNot(_._1.isNaN).minBy(_._1)._2
-    CvResult(lambdas, cvm, lambdas(best), fullPath)
-  }
-
-  /** Interpolate a fitted fold path at every master λ in one simultaneous
-    * walk of the two DESCENDING sequences — same semantics as calling
-    * [[ElasticNet.Path.at]] per point (exact λ match wins, clamp outside the
-    * fold range, linear interpolation between brackets) at O(nλ_master +
-    * nλ_fold) instead of O(nλ_master · nλ_fold).
-    */
-  private[graft] def alignOnto(
-      path: ElasticNet.Path,
-      master: IndexedSeq[Double]): Array[ElasticNet.Fit] = {
-    val fits = path.fits
-    val ls = path.lambdas
-    val last = ls.length - 1
-    val out = new Array[ElasticNet.Fit](master.length)
-    var hi = 0 // fold-path cursor: ls(hi) ≥ s > ls(hi+1) once inside range
-    var mi = 0
-    while (mi < master.length) {
-      val s = master(mi)
-      out(mi) =
-        if (s >= ls.head) fits.head
-        else if (s <= ls(last)) fits(last)
-        else {
-          while (hi + 1 < last && ls(hi + 1) >= s) hi += 1
-          if (ls(hi) == s) fits(hi)
-          else {
-            val lo = hi + 1
-            val l1 = ls(hi); val l0 = ls(lo)
-            val w = (s - l0) / (l1 - l0)
-            ElasticNet.Fit(s,
-              w * fits(hi).intercept + (1 - w) * fits(lo).intercept,
-              fits(hi).beta * w + fits(lo).beta * (1 - w))
-          }
-        }
-      mi += 1
-    }
-    out
+    val cvm = sqErr.map(_ / x.rows).toIndexedSeq
+    val best = cvm.zipWithIndex.minBy(_._1)._2
+    CvResult(lambdas, cvm, lambdas(best), fullPath, maxIterHits)
   }
 
   /** The reference's default CV call shape (enetVAR.R:27-36): blocked
@@ -218,7 +127,7 @@ object BlockedCv {
       alpha: Double,
       intercept: Boolean = false,
       tol: Double = 1e-9): CvResult =
-    cvFitDesigns(designs(x, foldIds(x.rows), intercept), y, alpha, tol = tol)
+    cvFitDesigns(designs(x, intercept), y, alpha, tol)
 
   /** Stopping level equivalent to glmnet's default `thresh = 1e-7`. */
   val GlmnetEquivTol: Double = 3.16e-4

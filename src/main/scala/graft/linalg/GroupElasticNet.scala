@@ -252,13 +252,18 @@ object GroupElasticNet {
       math.exp(math.log(lmax) + (math.log(lmax * eps) - math.log(lmax)) * i / (nLambda - 1)))
   }
 
+  /** `maxIterHits` sums [[GroupPath.maxIterHits]] over the full-data path
+    * and every fold path the CV fit.
+    */
   final case class GroupCvResult(
       lambdas: IndexedSeq[Double],
       cvm: IndexedSeq[Double],
       lambdaMin: Double,
-      path: GroupPath)
+      path: GroupPath,
+      maxIterHits: Int)
 
-  /** Blocked-fold CV (M2 fold layout) for the group fit: pooled
+  /** Blocked-fold CV for the group fit on [[BlockedCv.designs]]' fold
+    * layout: glmnet's 100-point group λ sequence on the full data, pooled
     * multiresponse squared error per λ, argmin → lambda.min.
     */
   def cvFitBlocked(
@@ -266,29 +271,19 @@ object GroupElasticNet {
       y: DenseMatrix[Double],
       alpha: Double,
       intercept: Boolean = false,
-      nLambda: Int = 100,
       tol: Double = 1e-9): GroupCvResult = {
-    val n = x.rows
-    val foldid = BlockedCv.foldIds(n)
-    val lambdas = autoLambdaSequence(x, y, alpha, nLambda, intercept)
-    val sqErr = Array.fill(lambdas.length)(0.0)
-    // Mirror BlockedCv's guard: with <= BlockSize rows the single fold has
-    // an empty training split and the loop below would contribute nothing,
-    // silently returning cvm = 0 everywhere and lambdaMin = λmax.
-    val usable = foldid.distinct.sorted.map { f =>
-      ((0 until n).filter(foldid(_) != f), (0 until n).filter(foldid(_) == f))
-    }.filter(p => p._1.nonEmpty && p._2.nonEmpty)
-    require(usable.nonEmpty,
-      s"blocked group CV needs more than ${BlockedCv.BlockSize} rows, got $n (no non-empty training fold)")
-    for ((trainIdx, testIdx) <- usable) {
-      // One CovDesign per fold: Gram rows are shared by all 100 λ steps.
-      val cov = new CovDesign(x(trainIdx, ::).toDenseMatrix, intercept, true)
-      val path = fitPathCov(cov, y(trainIdx, ::).toDenseMatrix,
-        alpha, lambdas, tol = tol)
+    val ds = BlockedCv.designs(x, intercept)
+    val lambdas = autoLambdaSequence(x, y, alpha, intercept = intercept)
+    val fullPath = fitPathCov(ds.full, y, alpha, lambdas, tol = tol)
+    val sqErr = new Array[Double](lambdas.length)
+    var maxIterHits = fullPath.maxIterHits
+    for (fd <- ds.folds) {
+      val path = fitPathCov(fd.cov, y(fd.trainIdx, ::).toDenseMatrix, alpha, lambdas, tol = tol)
+      maxIterHits += path.maxIterHits
       var li = 0
       while (li < lambdas.length) {
         val fit = path.fits(li)
-        for (i <- testIdx; c <- 0 until y.cols) {
+        for (i <- fd.testIdx; c <- 0 until y.cols) {
           val pred = fit.intercepts(c) + (x(i, ::).t dot fit.b(::, c))
           val e = y(i, c) - pred
           sqErr(li) += e * e
@@ -296,9 +291,8 @@ object GroupElasticNet {
         li += 1
       }
     }
-    val cvm = sqErr.map(_ / (n * y.cols)).toIndexedSeq
+    val cvm = sqErr.map(_ / (x.rows * y.cols)).toIndexedSeq
     val best = cvm.zipWithIndex.minBy(_._1)._2
-    GroupCvResult(lambdas, cvm, lambdas(best),
-      fitPath(x, y, alpha, lambdas, intercept, tol = tol))
+    GroupCvResult(lambdas, cvm, lambdas(best), fullPath, maxIterHits)
   }
 }

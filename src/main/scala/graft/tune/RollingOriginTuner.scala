@@ -48,9 +48,9 @@ object RollingOriginTuner {
   /** Per-λ RMSE over design rows `from until from + horizon` of a fitted
     * path scored at every `master` λ, on column-major `z` (`zRows` rows)
     * and the response column starting at `y(yBase)`. A master λ maps onto
-    * the path by [[graft.linalg.BlockedCv.alignOnto]]'s rules — clamp
-    * outside the path, exact λ match, else linear interpolation — and the
-    * arithmetic is breeze's for `alignOnto` + `z(r, ::).t dot beta`, bit
+    * the path by [[ElasticNet.Path.at]]'s rules — clamp outside the
+    * path, exact λ match, else linear interpolation — and the arithmetic
+    * is breeze's for `Path.at` + `z(r, ::).t dot beta`, bit
     * for bit: interpolated coefficients `bh·w + bl·(1 − w)` and the strided
     * BLAS `ddot` breeze calls for a matrix row. A clamped or exact master
     * λ reuses its path point's RMSE, computed once. The path's
@@ -88,7 +88,7 @@ object RollingOriginTuner {
     }
     val scratch = new Array[Double](p)
     val out = new Array[Double](master.length)
-    var hi = 0 // path cursor, as in alignOnto
+    var hi = 0 // path cursor: λ_hi ≥ s > λ_(hi+1) once inside the path
     var mi = 0
     while (mi < master.length) {
       val s = master(mi)

@@ -28,7 +28,8 @@ import graft.linalg.{BlockedCv, ElasticNet}
 final case class EnetVarModel(
     design: VarDesign,
     alpha: Double,
-    equations: IndexedSeq[ElasticNet.Fit]) extends FittedVar {
+    equations: IndexedSeq[ElasticNet.Fit],
+    maxIterHits: Int) extends FittedVar {
 
   /** k×K coefficient matrix (rows = Z columns incl. intercept row when
     * present; cols = equations), reference M4 layout.
@@ -85,7 +86,6 @@ object EnetVar {
       lambdas: Seq[Double] = Seq.empty,
       intercept: Boolean = false,
       solverTol: Double = 1e-9,
-      cvFoldPaths: Option[String] = None,
       spark: Option[org.apache.spark.sql.SparkSession] = None): EnetVarModel = {
     val kk = y.cols
     require(alphas.length == 1 || alphas.length == kk,
@@ -97,20 +97,21 @@ object EnetVar {
 
     // Each part fits its equations against designs it builds once
     // (standardization, fold splits, lazily-cached Gram rows, reused
-    // across the part's equations and λ paths).
-    val fits: IndexedSeq[ElasticNet.Fit] =
+    // across the part's equations and λ paths); each equation returns its
+    // fit and the maxIter hits of every path behind it.
+    val fits: IndexedSeq[(ElasticNet.Fit, Int)] =
       graft.FanOut(spark, kk, perCore = 1, design) { (d, share) =>
         lazy val covZ = new graft.linalg.CovDesign(d.z, intercept, true)
-        lazy val cvDs = BlockedCv.designs(d.z, BlockedCv.foldIds(d.z.rows), intercept)
+        lazy val cvDs = BlockedCv.designs(d.z, intercept)
         share.map { j =>
           if (lambdas.nonEmpty) {
             val lam = if (lambdas.length == 1) lambdas.head else lambdas(j)
-            ElasticNet.fitPathCov(covZ, d.response(j), alphaOf(j),
-              ElasticNet.referenceLambdaGrid(lam), tol = solverTol).at(lam)
+            val path = ElasticNet.fitPathCov(covZ, d.response(j), alphaOf(j),
+              ElasticNet.referenceLambdaGrid(lam), tol = solverTol)
+            (path.at(lam), path.maxIterHits)
           } else {
-            val cv = BlockedCv.cvFitDesigns(cvDs, d.response(j), alphaOf(j),
-              tol = solverTol, foldPaths = cvFoldPaths)
-            cv.path.at(cv.lambdaMin)
+            val cv = BlockedCv.cvFitDesigns(cvDs, d.response(j), alphaOf(j), solverTol)
+            (cv.path.at(cv.lambdaMin), cv.maxIterHits)
           }
         }
       }
@@ -118,6 +119,6 @@ object EnetVar {
     // for InfCrit's scalar ridge term — the same convention the reference
     // applies to the per-equation λs (enetVAR.R:181 takes mean(lambda.min));
     // with a single alpha (every pipeline use) this is that alpha exactly.
-    EnetVarModel(design, (0 until kk).map(alphaOf).sum / kk, fits)
+    EnetVarModel(design, (0 until kk).map(alphaOf).sum / kk, fits.map(_._1), fits.map(_._2).sum)
   }
 }

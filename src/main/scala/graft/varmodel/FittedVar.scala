@@ -13,6 +13,11 @@ trait FittedVar {
   def design: VarDesign
   def coefMatrix: DenseMatrix[Double]
 
+  /** λ steps of the fit's solver paths (CV folds included) that used
+    * their whole `maxIter` sweep budget and so may not have converged.
+    */
+  def maxIterHits: Int
+
   /** Recursive n-ahead forecast (M5, enetVAR.R:128-154): build Z_ahead from
     * the p most-recent rows (most recent first, row-major — matching the
     * reference's `as.vector(t(y[T:(T−p+1),]))`), multiply by B, append the

@@ -13,7 +13,8 @@ final case class GroupEnetVarModel(
     design: VarDesign,
     alpha: Double,
     lambdaMin: Double,
-    fit: GroupElasticNet.GroupFit) extends FittedVar {
+    fit: GroupElasticNet.GroupFit,
+    maxIterHits: Int) extends FittedVar {
 
   /** k×K coefficient matrix in the EnetVar layout (intercept row first
     * when present, carrying the fitted intercepts).
@@ -47,6 +48,6 @@ object GroupEnetVar {
     val design = VarDesign.build(y, p, names, intercept)
     val cv = GroupElasticNet.cvFitBlocked(design.z, design.yP, alpha, intercept,
       tol = solverTol)
-    GroupEnetVarModel(design, alpha, cv.lambdaMin, cv.path.at(cv.lambdaMin))
+    GroupEnetVarModel(design, alpha, cv.lambdaMin, cv.path.at(cv.lambdaMin), cv.maxIterHits)
   }
 }

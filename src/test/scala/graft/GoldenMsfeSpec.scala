@@ -50,13 +50,23 @@ class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
   // shared by every anchor — the column-set-independent half of the run.
   private lazy val prep = GoldenExperiment.prepare(spark)
 
-  /** The Testing.R golden runs: per-origin blocked-CV λ at one α. */
-  private def cvRawErrSum(panelCols: Seq[String], lag: Int, alpha: Double): Double = {
+  /** The Testing.R golden runs: per-origin blocked-CV λ at one α. The
+    * count of λ steps that stopped at maxIter over every origin's CV paths
+    * is printed; with `converged`, it must be 0. It reads 0 on the two
+    * always-on anchors but 1166 (α 0.4) and 1322 (α 0.5) on the lag-5
+    * anchors, which therefore only print it.
+    */
+  private def cvRawErrSum(panelCols: Seq[String], lag: Int, alpha: Double,
+      converged: Boolean = false): Double = {
     val panel = GoldenExperiment.assemble(prep, panelCols)
-    ModelTrain.run(panel.y, panelCols.toIndexedSeq, panel.startPredIdx,
+    val res = ModelTrain.run(panel.y, panelCols.toIndexedSeq, panel.startPredIdx,
       h = 8, alphas = Seq(alpha), lambdas = Seq.empty, lag = lag,
       const = true, spark = Some(spark),
-      solverTol = graft.linalg.BlockedCv.GlmnetEquivTol).rawErrSum
+      solverTol = graft.linalg.BlockedCv.GlmnetEquivTol)
+    println(s"[golden] lag=$lag alpha=$alpha: ${res.maxIterHits} CV lambda steps stopped at maxIter")
+    assert(!converged || res.maxIterHits == 0,
+      s"lag=$lag alpha=$alpha: ${res.maxIterHits} CV lambda steps stopped at maxIter")
+    res.rawErrSum
   }
 
   /** The tuned path both reference runs take. No λ step of its tune may
@@ -87,10 +97,12 @@ class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
   anchor("ezlasso-30 lag=1 alpha=0.4 (golden 0.0107635485836803)",
-    expected = 0.012403281922)(cvRawErrSum(GoldenExperiment.EzlassoAll, lag = 1, alpha = 0.4))
+    expected = 0.012403281922)(
+    cvRawErrSum(GoldenExperiment.EzlassoAll, lag = 1, alpha = 0.4, converged = true))
 
   anchor("econ.vars.2 lag=4 alpha=0.95 (golden 0.01482406, engine beats it)",
-    expected = 0.012260948726)(cvRawErrSum(GoldenExperiment.EconVars2, lag = 4, alpha = 0.95))
+    expected = 0.012260948726)(
+    cvRawErrSum(GoldenExperiment.EconVars2, lag = 4, alpha = 0.95, converged = true))
 
   // Two tuned cases that perfbench/pins.tsv holds: the ~12 h run's
   // econ.vars.1 at its lower heuristic lag, and the ~6 h run's enet.selc.5

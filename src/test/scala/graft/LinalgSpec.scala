@@ -159,6 +159,17 @@ class LinalgSpec extends AnyFunSuite {
     assert(maxAbsDiff(best.beta, bOls) < 0.05)
   }
 
+  test("both blocked CVs reject a design of BlockSize rows with the one guard message") {
+    val n = BlockedCv.BlockSize
+    val xs = x(0 until n, ::).toDenseMatrix
+    val msg = s"requirement failed: blocked CV needs more than $n rows, got $n (no non-empty training fold)"
+    val single = intercept[IllegalArgumentException](BlockedCv.cvFitBlocked(xs, y(0 until n).copy, 0.5))
+    val group = intercept[IllegalArgumentException](
+      GroupElasticNet.cvFitBlocked(xs, DenseMatrix.horzcat(y(0 until n).toDenseMatrix.t, xs(::, 0 to 0)), 0.5))
+    assert(single.getMessage == msg)
+    assert(group.getMessage == msg)
+  }
+
   test("autoLambdaSequenceCov agrees with the matrix-based sequence") {
     for (intercept <- Seq(true, false)) {
       val a = ElasticNet.autoLambdaSequence(x, y, 0.5, intercept, standardize = true, 20)
@@ -223,41 +234,6 @@ class LinalgSpec extends AnyFunSuite {
       tol = BlockedCv.GlmnetEquivTol, earlyStop = true)
     assert(es.fits.length >= ElasticNet.GlmnetMnLam,
       s"stopped after ${es.fits.length} < mnlam points")
-  }
-
-  test("two-pointer alignOnto matches Path.at at every master lambda") {
-    val cov = new graft.linalg.CovDesign(x, false, true)
-    val foldLams = ElasticNet.autoLambdaSequenceCov(cov, y, 0.5, 40)
-    val path = ElasticNet.fitPathCov(cov, y, 0.5, foldLams, earlyStop = true)
-    // Master grid deliberately misaligned: wider range than the fold path
-    // (clamping at both ends), plus exact hits on fold grid points.
-    val master = (ElasticNet.autoLambdaSequenceCov(cov, y, 0.5, 57)
-      .map(_ * 1.7) ++ Seq(path.lambdas(3), path.lambdas.last / 2.0))
-      .sorted(Ordering[Double].reverse).toIndexedSeq
-    val aligned = BlockedCv.alignOnto(path, master)
-    master.indices.foreach { i =>
-      val ref = path.at(master(i))
-      assert(aligned(i).lambda == ref.lambda, s"i=$i")
-      assert(math.abs(aligned(i).intercept - ref.intercept) == 0.0, s"i=$i")
-      assert(maxAbsDiff(aligned(i).beta, ref.beta) == 0.0, s"i=$i")
-    }
-  }
-
-  test("per-fold glmnet CV (index and lambda alignment) selects a sane lambda") {
-    val ds = BlockedCv.designs(x, BlockedCv.foldIds(x.rows))
-    val bOls = (x.t * x) \ (x.t * y)
-    for (align <- Seq("index", "lambda")) {
-      val cv = BlockedCv.cvFitDesigns(ds, y, alpha = 0.5, foldPaths = Some(align))
-      assert(cv.lambdas.contains(cv.lambdaMin), align)
-      // Master grid is the early-stopped auto path — truncated on this
-      // near-noiseless signal.
-      assert(cv.lambdas.length < 100, align)
-      assert(cv.path.lambdas == cv.lambdas, align)
-      val idx = cv.lambdas.indexOf(cv.lambdaMin)
-      assert(!cv.cvm(idx).isNaN, align)
-      // Strong dense signal: the selected fit must still be near-OLS.
-      assert(maxAbsDiff(cv.path.at(cv.lambdaMin).beta, bOls) < 0.05, align)
-    }
   }
 
   // The λ-step kernels against the one-column loops they replace, raw bit

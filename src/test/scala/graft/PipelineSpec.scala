@@ -2052,7 +2052,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = "/root/testdata/sf0.001"
     val e = graft.sources.Tables.embeddings(s, d)
     val idx = graft.operators.AnnIndex.hnswFor(s, d, e)
-    val dir = java.nio.file.Files.createTempDirectory("hnsw_rt").toString
+    val dir = graft.Scratch.path("hnsw_rt")
     graft.operators.AnnIndex.saveHnsw(idx, dir)
     val back = graft.operators.AnnIndex.loadHnsw(s, dir)
     assert(back.m0 == idx.m0 && back.mUp == idx.mUp && back.top == idx.top)

@@ -58,10 +58,8 @@ class RecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       op: DataFrame => DataFrame,
       stopAfter: Option[Int],
       mode: String = "update"): Seq[Row] = {
-    val in = java.nio.file.Files.createTempDirectory(s"rec_in_$tag")
-      .toFile.getAbsolutePath
-    val chk = java.nio.file.Files.createTempDirectory(s"rec_chk_$tag")
-      .toFile.getAbsolutePath
+    val in = TestData.scratchDir(s"rec_in_$tag").getAbsolutePath
+    val chk = TestData.scratchDir(s"rec_chk_$tag").getAbsolutePath
     val schema = batches.head.schema
     val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
     def start() =
@@ -275,8 +273,7 @@ class RecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L to 5L).map(k => (k, k * 10)).toDF("k", "v"),
       (6L to 9L).map(k => (k, k * 10)).toDF("k", "v"),
       (10L to 12L).map(k => (k, k * 10)).toDF("k", "v"))
-    def tmp(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"rec_$tag").toFile.getAbsolutePath
+    def tmp(tag: String) = TestData.scratchDir(s"rec_$tag").getAbsolutePath
     def drive(plantCrash: Boolean, naiveAppend: Boolean): Seq[(Long, Long)] = {
       val (in, chk, sink) = (tmp("eo_in"), tmp("eo_chk"), tmp("eo_sink"))
       val crash = new java.util.concurrent.atomic.AtomicBoolean(plantCrash)

@@ -108,6 +108,7 @@ class SparkParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val dist = graft.varmodel.EnetVar.fit(y, p = 2,
         IndexedSeq("a", "b"), Seq(0.4), lambdas, spark = Some(spark))
       assert(local.equations == dist.equations, s"lambdas=$lambdas")
+      assert(local.maxIterHits == dist.maxIterHits, s"lambdas=$lambdas")
     }
   }
 

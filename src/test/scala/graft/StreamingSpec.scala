@@ -298,8 +298,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.operators.AnnIndex.buildLsh(base, 4, persist = false), m = 16)
     val oneShot = EventStream.nswIngest(idx, base, arr)
       .collect().map(_.toSeq).toSet
-    val dir = java.nio.file.Files.createTempDirectory("nsw_ingest")
-      .toFile.getAbsolutePath
+    val dir = graft.Scratch.path("nsw_ingest")
     (0 until 3).foreach(i => arr.filter(col("vec_id") % 3 === i)
       .coalesce(1).write.mode("append").parquet(dir))
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
@@ -1892,7 +1891,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
     test("S4 tuning table round-trips into per-equation vectors in order") {
-    val path = java.nio.file.Files.createTempDirectory("graft_tuning_").toString + "/t"
+    val path = graft.Scratch.path("graft_tuning_") + "/t"
     TuningIO.write(spark, path, Seq(("rev", 0.25, 0.01), ("n_orders", 0.9, 0.3)))
     val (alphas, lambdas) = TuningIO.asVectors(spark, path, Seq("n_orders", "rev"))
     assert(alphas == Seq(0.9, 0.25))
@@ -1908,7 +1907,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fall back silently — any other read failure on an existing
     // events.parquet must surface at stream DEFINITION time, not as a
     // wrong-schema runtime failure later.
-    val empty = java.nio.file.Files.createTempDirectory("graft_sniff_empty").toFile
+    val empty = TestData.scratchDir("graft_sniff_empty")
     try {
       // No events.parquet yet: definition must succeed (fallback schema).
       val df = EventStream.readEvents(spark, empty.getAbsolutePath)
@@ -1916,7 +1915,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally {
       empty.delete()
     }
-    val corrupt = java.nio.file.Files.createTempDirectory("graft_sniff_bad").toFile
+    val corrupt = TestData.scratchDir("graft_sniff_bad")
     val f = new java.io.File(corrupt, "events.parquet")
     java.nio.file.Files.write(f.toPath, "this is not parquet".getBytes("UTF-8"))
     try {
@@ -1979,8 +1978,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("wm_log")
-      .toFile.getAbsolutePath
+    val dir = graft.Scratch.path("wm_log")
     val listener = EventStream.progressLogListener(dir)
     s.streams.addListener(listener)
     val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
@@ -2043,8 +2041,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("want", expectedLvl)
       .filter(col("got") =!= col("want")).collect()
     assert(lvlRows.isEmpty, s"level law violated: ${lvlRows.toSeq}")
-    val dir = java.nio.file.Files.createTempDirectory("hnsw_ingest")
-      .toFile.getAbsolutePath
+    val dir = graft.Scratch.path("hnsw_ingest")
     (0 until 3).foreach(i => arr.filter(col("vec_id") % 3 === i)
       .coalesce(1).write.mode("append").parquet(dir))
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]

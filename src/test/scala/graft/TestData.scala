@@ -22,6 +22,15 @@ object TestData {
     }
   }
 
+  /** A fresh, existing directory under [[Scratch]]'s root, which is
+    * deleted at JVM exit.
+    */
+  def scratchDir(prefix: String): java.io.File = {
+    val d = new java.io.File(Scratch.path(prefix))
+    d.mkdirs()
+    d
+  }
+
   def matrix(rows: Int, cols: Int, seed: Long): DenseMatrix[Double] = {
     val g = new Lcg(seed)
     DenseMatrix.tabulate(rows, cols)((_, _) => g.gaussian())

@@ -59,8 +59,8 @@ class TuneSpec extends AnyFunSuite {
       s"caret ${c0.meanRmse} vs direct ${d0.meanRmse}")
   }
 
-  test("M15 rmseOnto equals alignOnto + breeze row dot, bit for bit") {
-    import graft.linalg.{BlockedCv, CovDesign, ElasticNet}
+  test("M15 rmseOnto equals Path.at + breeze row dot, bit for bit") {
+    import graft.linalg.{CovDesign, ElasticNet}
     val (rows, o, horizon) = (80, 60, 8)
     def bits(a: Double): Long = java.lang.Double.doubleToRawLongBits(a)
     for (p <- Seq(1, 5, 34); seed <- 1L to 3L) {
@@ -71,7 +71,7 @@ class TuneSpec extends AnyFunSuite {
       val lams = ElasticNet.autoLambdaSequenceCov(cov, yTrain, 0.5, 40)
       val path = ElasticNet.fitPathCov(cov, yTrain, 0.5, lams, earlyStop = true)
       val pl = path.lambdas
-      // All four alignOnto cases: above the path, below it, an exact path
+      // All four Path.at cases: above the path, below it, an exact path
       // lambda, and interpolated lambdas between path points.
       val master = (Seq(pl.head * 3, pl.head * 1.5, pl.last / 2, pl.last / 7, pl(2), pl(3)) ++
         pl.indices.init.map(i => 0.3 * pl(i) + 0.7 * pl(i + 1)))
@@ -86,7 +86,7 @@ class TuneSpec extends AnyFunSuite {
         }
         math.sqrt(sse / horizon)
       }
-      val ref = scored(BlockedCv.alignOnto(path, master).toIndexedSeq)
+      val ref = scored(master.map(path.at))
       val got = RollingOriginTuner.rmseOnto(path, master, z.toArray, rows, y.toArray, 0, o, horizon)
       assert(got.map(bits).toSeq == ref.map(bits), s"p=$p seed=$seed")
       // The direct-grid branch: a path fitted at the grid itself scores
