@@ -457,10 +457,10 @@ object ElasticNet {
 
   /** [[autoLambdaSequence]] over a precomputed [[CovDesign]]: λmax =
     * maxⱼ |⟨x̃ⱼ, ỹ⟩|/(N·max(α, 0.001)) read straight off the design's
-    * standardized columns — same value, no re-standardization. This is what
-    * each CV FOLD calls in per-fold-path mode: glmnet's cv.glmnet (with no
-    * user λ) hands every fold fit lambda=NULL, so each fold derives its own
-    * λmax and lambda.min.ratio from its own rows.
+    * standardized columns — same value, no re-standardization. Blocked CV
+    * calls it once on the full data and refits every fold along it; the
+    * caret-mode tuner calls it on each origin's training rows and fits that
+    * origin's path along it.
     */
   def autoLambdaSequenceCov(
       cov: CovDesign,

@@ -299,46 +299,42 @@ object Relational {
         col("prev_id"), col("next_id"), col("interp_e6"), col("method"))
   }
 
-  /** Write-once bucketed warehouse tables for s18: orders and lineitem
-    * bucketed (8) + sorted on their orderkeys via saveAsTable — the
-    * catalog metadata is what lets the scan report bucketing to the
-    * planner (a bare parquet write loses it). Keyed per (session,
-    * sfDir); quantity is cent-cast on write so the read side does no
-    * decimal work.
+  private val bucketedCache = SessionCache[String, String]()
+  /** Write-once catalog table `name`: `rows` bucketBy(8, key) +
+    * sortBy(key) through saveAsTable — the catalog metadata is what lets
+    * the scan report bucketing to the planner (a bare parquet write loses
+    * it). The files live under [[graft.Scratch]] (an external table, so
+    * nothing lands in the warehouse dir or outlives the JVM). Cached per
+    * (session, name): the catalog is the session's, and `name` must
+    * encode the derivation of `rows`. Returns `name`.
     */
-  private val bucketedCache = SessionCache[String, Boolean]()
-  private[graft] def bucketedTablesFor(s: SparkSession, d: String,
-      ordersTbl: String, lineitemTbl: String): Unit =
-    bucketedCache(s, d) {
-      // The in-memory catalog dies with the JVM but the warehouse dirs
-      // persist — a fresh session's saveAsTable then refuses the orphan
-      // LOCATION. Drop both ways: the catalog entry (same-session
-      // rebuild) and the on-disk location (cross-JVM rebuild).
-      for (tbl <- Seq(ordersTbl, lineitemTbl)) {
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val wh = java.nio.file.Paths.get(
-          new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val loc = wh.resolve(tbl)
-        if (java.nio.file.Files.exists(loc)) {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(loc)
-          try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .iterator().asScala.foreach(java.nio.file.Files.delete)
-          finally walk.close()
-        }
-      }
-      Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_orderpriority"))
-        .write.mode("overwrite")
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable(ordersTbl)
-      Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_quantity"))
-        .write.mode("overwrite")
-        .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable(lineitemTbl)
-      true
+  private def bucketedTable(s: SparkSession, name: String, key: String)(
+      rows: => DataFrame): String =
+    bucketedCache(s, name) {
+      rows.write.mode("overwrite").option("path", Scratch.path(name + "_"))
+        .bucketBy(8, key).sortBy(key).format("parquet").saveAsTable(name)
+      name
     }
+
+  /** The first 12 hex digits of the md5 of an sfDir: a table-name tag.
+    * Not hashCode — two sfDirs colliding on it would silently share one
+    * table (and Int.MinValue survives abs).
+    */
+  private def dirTag(d: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(d.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
+
+  /** s18's bucketed (orders, lineitem) table names for one sfDir: each
+    * bucketed (8) and sorted on its orderkey.
+    */
+  private[graft] def bucketedTablesFor(s: SparkSession, d: String): (String, String) = {
+    val tag = dirTag(d)
+    (bucketedTable(s, s"g15_orders_$tag", "o_orderkey") {
+      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
+    }, bucketedTable(s, s"g15_lineitem_$tag", "l_orderkey") {
+      Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"))
+    })
+  }
 
   private val ttManifestCache =
     SessionCache[String, Seq[(Long, String, Boolean)]]()
@@ -421,38 +417,16 @@ object Relational {
       p
     }
 
-  /** Per-(JVM, sfDir) bucketed catalog table of `events`: bucketBy(8,
+  /** Per-(session, sfDir) bucketed catalog table of `events`: bucketBy(8,
     * user_id) + sortBy(user_id), written once. Bucketing is the layout
     * that makes every downstream user_id aggregation AND join shuffle-free
     * — the scan itself satisfies the hash distribution (j10).
     */
-  private[graft] def bucketedEvents(s: SparkSession, d: String): String = {
-    // md5 of the dir path, not hashCode: two sfDirs colliding on hashCode
-    // would silently share one table (and Int.MinValue survives abs).
-    val name = "graft_events_bucketed_" + java.security.MessageDigest
-      .getInstance("MD5").digest(d.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    // The table lives in the SESSION's in-memory catalog, so existence is
-    // checked per session — a JVM-wide cache would hand a second session
-    // a name its own catalog has never seen. Within one session the check
-    // makes the write once-only.
-    if (!s.catalog.tableExists(name)) {
-      // A previous JVM/session may have left the managed location behind
-      // (the in-memory catalog forgets tables across sessions, and
-      // saveAsTable refuses a dirty location): drop both before writing.
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.conf.warehousePath, name)
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"),
-          round(col("value") * 1e4).cast("long").as("value_e4"))
-        .write.mode("overwrite")
-        .bucketBy(8, "user_id").sortBy("user_id")
-        .format("parquet").saveAsTable(name)
+  private[graft] def bucketedEvents(s: SparkSession, d: String): String =
+    bucketedTable(s, s"graft_events_bucketed_${dirTag(d)}", "user_id") {
+      Tables.events(s, d).select(col("user_id"), col("event_id"),
+        round(col("value") * 1e4).cast("long").as("value_e4"))
     }
-    name
-  }
 
   // ----- s14/s15: MERGE/upsert + SCD2 (the lakehouse mutation surface) ---
   // The sink family writes layouts (s7-s13) but never MUTATES them; these
@@ -884,9 +858,7 @@ object Relational {
       // accident; both aggregate the same answer, which DuckDB
       // replays. A regression that silently re-shuffles the bucketed
       // side fails the driver compare, not a test log.
-      val tag = math.abs(d.hashCode).toString
-      val (to, tl) = (s"g15_orders_$tag", s"g15_lineitem_$tag")
-      bucketedTablesFor(s, d, to, tl)
+      val (to, tl) = bucketedTablesFor(s, d)
       def agg(j: DataFrame) = j
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_lines"),
@@ -1953,7 +1925,7 @@ object Relational {
 
     ("j10_bucketed_colocated_join", (s: SparkSession, d: String) => {
       // Co-located join on a BUCKETED layout, executable: events live in a
-      // catalog table bucketBy(8, user_id) (written once per JVM —
+      // catalog table bucketBy(8, user_id) (written once per session —
       // [[bucketedEvents]]), so the per-user aggregate needs NO shuffle
       // (the scan already satisfies the hash distribution) and the
       // merge-hinted join back to the same table needs NO exchange on

@@ -48,8 +48,7 @@ object Selection {
       names: IndexedSeq[String],
       lag: Int = 10,
       maxNrVar: Int = 10): Seq[String] =
-    greedyProfileSelection(Acf.squaredVsLaggedTarget(y, lag), names, maxNrVar,
-      profileIsSquared = true)
+    greedyProfileSelection(Acf.squaredVsLaggedTarget(y, lag), names, maxNrVar)
 
   /** M13 — PACF selection (enetVAR.R:704-756): same greedy scheme on the
     * partial cross-correlation profile of each series with the target,
@@ -74,8 +73,7 @@ object Selection {
           y(::, 0).toDenseMatrix.t, y(::, j).toDenseMatrix.t), lag)
       }
     val profile = DenseMatrix.tabulate(lag, y.cols)((k, j) => colProfiles(j)(k))
-    greedyProfileSelection(profile.map(v => v * v), names, maxNrVar,
-      profileIsSquared = true)
+    greedyProfileSelection(profile.map(v => v * v), names, maxNrVar)
   }
 
   /** Bivariate partial autocorrelation of (target, x) — entry (0, 1) of
@@ -154,8 +152,7 @@ object Selection {
   private def greedyProfileSelection(
       sqProfile: DenseMatrix[Double],
       names: IndexedSeq[String],
-      maxNrVar: Int,
-      profileIsSquared: Boolean): Seq[String] = {
+      maxNrVar: Int): Seq[String] = {
     val lag = sqProfile.rows
     val k = sqProfile.cols
     def meanCol(m: DenseMatrix[Double], j: Int): Double =
@@ -249,8 +246,8 @@ object Selection {
 
   /** The full ranked (name, score) list behind [[lassoPathRanking]] — the
     * stable descending sort mirrors R's `order(co, decreasing = T)` tie
-    * behavior (ties keep column order), which the provenance check on the
-    * reference's hardcoded ezlasso-30 set needs to reproduce exactly.
+    * behavior (ties keep column order), which reproducing the reference's
+    * hardcoded ezlasso-30 set exactly needs.
     */
   def lassoPathScores(
       z: DenseMatrix[Double],

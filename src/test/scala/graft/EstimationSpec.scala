@@ -1,28 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Estimation-layer checks that need a SparkSession (the numeric kernels
   * themselves are covered matrix-level in TuneSpec/StatsSpec/LinalgSpec).
   */
-class EstimationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class EstimationSpec extends AnyFunSuite with SparkSuite {
 
   test("t22 bhFdr: the step-up rejects a rank that fails its own threshold (planted battery)") {
     // BH's distinguishing behavior vs per-test thresholding, planted

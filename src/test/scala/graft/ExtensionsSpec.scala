@@ -1,30 +1,14 @@
 package graft
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SQL surface of the native kernels: a session configured with
+/** The SQL surface of the native kernels: [[Session]] installs
   * `spark.sql.extensions=graft.plans.GraftExtensions` (the cluster-config
-  * enablement path) must expose each registered function to `spark.sql`,
+  * enablement path), so its session must expose each registered function to `spark.sql`,
   * producing the same results as the internal Column/local forms.
   */
-class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ExtensionsSpec extends AnyFunSuite with SparkSuite {
 
   test("sorted_intersect_count is callable from SQL") {
     val n = spark.sql(

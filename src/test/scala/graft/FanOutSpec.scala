@@ -1,43 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[FanOut]]'s contract: results in item order for any item count, with
   * and without a session, and a throwing part fails the call without
   * spoiling the session for the next fan-out.
   */
-class FanOutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FanOutSpec extends AnyFunSuite with SparkSuite {
 
   test("results come back in item order, one per item, for 0, 1, < parts and parts x 4 + 1 items") {
     val cores = spark.sparkContext.defaultParallelism
-    assert(cores == 4)
-    for {
+    val cases = for {
       perCore <- Seq(1, 4)
-      n <- Seq(0, 1, cores - 1, cores * perCore * 4 + 1)
-      session <- Seq(None, Some(spark))
-    } {
+      slots = cores * perCore
+      n <- Seq(0, 1, slots - 1, slots * 4 + 1)
+    } yield (n, perCore, slots)
+    // Fewer items than task slots, and more, at any core count.
+    assert(cases.exists { case (n, _, slots) => 1 < n && n < slots }, s"cores=$cores")
+    assert(cases.exists { case (n, _, slots) => n > slots }, s"cores=$cores")
+    for ((n, perCore, slots) <- cases; session <- Seq(None, Some(spark))) {
       // Each result records the step of its part's share: the part count.
       val out = FanOut(session, n, perCore, "x") { (sh, share) =>
         share.map(i => (s"$sh$i", share.step))
       }
-      val parts = if (session.isEmpty) 1 else math.max(1, math.min(n, cores * perCore))
+      val parts = if (session.isEmpty) 1 else math.max(1, math.min(n, slots))
       assert(out == (0 until n).map(i => (s"x$i", parts)),
-        s"n=$n perCore=$perCore session=${session.isDefined}")
+        s"n=$n perCore=$perCore cores=$cores session=${session.isDefined}")
     }
   }
 

@@ -1,8 +1,6 @@
 package graft
 
 import graft.experiment.{GoldenExperiment, ModelTrain, ReferenceWorkload, ReferenceWorkloadLarge}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the end-to-end golden-experiment MSFE anchors inside `sbt test`
@@ -28,23 +26,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * which carries the prepare and the JVM warm-up, 1.1 s for econ.vars.2
   * and 3.0 s for the two tuned anchors.
   */
-class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GoldenMsfeSpec extends AnyFunSuite with SparkSuite {
 
   private val panelFile = new java.io.File(GoldenExperiment.panelDir, "monthly_panel.parquet")
   private val runHeavy = sys.env.contains("SPARK_GRAFT_FULL_GOLDEN")
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   // One prepare pass (ingest + quarterly diffs + stationarity repair)
   // shared by every anchor — the column-set-independent half of the run.

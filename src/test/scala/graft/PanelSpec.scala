@@ -5,31 +5,16 @@ import graft.ingest.PanelIngest
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end panel ingest + data-prep pipeline against the converted
   * reference dataset (FIXTURES.md §1.4 derived-shape goldens: 696×147
   * monthly, 232-row GDP, 231-row quarterly frames, 163/68 split).
   */
-class PanelSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PanelSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val dir = "data/panel"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("S2: monthly panel loads with the fixed 147-column schema, 696 rows") {
     val m = PanelIngest.loadMonthly(spark, s"$dir/monthly_panel.parquet")

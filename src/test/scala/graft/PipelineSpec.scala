@@ -2,29 +2,14 @@ package graft
 
 import graft.functions.TextFunctions
 import graft.operators.TextPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit tests for the task-local text/binary kernels behind the pipeline
   * operators (winnowing, simhash, multimodal stub decode) plus the
   * planted-near-duplicate quality check for the LSH ANN search.
   */
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PipelineSpec extends AnyFunSuite with SparkSuite {
 
   /** The planted 400-vector ANN fixture: 16-dim gaussian vectors (LCG
     * seed 13) where queries 0..2 are near-duplicates (cosine ≈ 0.999) of

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based checks for the custom operators whose example-based
@@ -13,20 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * divergence from an executable brute-force reference. Seeded — every
   * run draws the same cases, so a failure here reproduces.
   */
-class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PropertySpec extends AnyFunSuite with SparkSuite {
 
   private def check(name: String, cases: Int, prop: Prop): Unit = {
     val res = SCTest.check(

@@ -1,9 +1,8 @@
 package graft
 
 import graft.streaming.EventStream
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Checkpoint RECOVERY — the operational contract stateful streaming is
@@ -27,23 +26,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * depends on: the restarted query re-reads every ValueState/MapState
   * row written by its predecessor.
   */
-class RecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class RecoverySpec extends AnyFunSuite with SparkSuite {
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    super.beforeAll()
+    // A runtime SQL conf, read when each streaming query starts.
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Drive `op` over a file-source stream: write each batch as ONE
     * parquet file, drain it, and — when `stopAfter` is set — stop the

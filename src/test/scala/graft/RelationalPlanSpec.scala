@@ -1,8 +1,6 @@
 package graft
 
 import graft.operators.Relational
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape checks for the relational corpus: the oracle harness
@@ -10,22 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan properties the queries' Scaladoc claims (a regression here would
   * still be hash-green but quietly wrong at 100 TB).
   */
-class RelationalPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RelationalPlanSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("j7: the salted join keeps the shuffled-hash shape and salts the key") {
     // The salting exemplar only demonstrates anything if the join really

@@ -1,31 +1,13 @@
 package graft
 
 import graft.operators.AnnIndex
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[SessionCache]]: one build per (session, key), a hit never evaluates
   * the by-name build, a new session builds afresh, and only a logged
   * cache writes to [[AnnIndex.buildLog]].
   */
-class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  override def beforeAll(): Unit = spark = session()
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SessionCacheSpec extends AnyFunSuite with SparkSuite {
 
   /** A build that counts its evaluations and returns a fresh instance. */
   private final class Counted {
@@ -58,7 +40,7 @@ class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val build = new Counted
     val before = cache(spark, "k")(build())
     spark.stop()
-    spark = session()
+    spark = Session.build()
     val after = cache(spark, "k")(build())
     assert(build.builds == 2)
     assert(!(before eq after))

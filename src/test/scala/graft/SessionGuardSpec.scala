@@ -7,7 +7,7 @@ import scala.util.matching.Regex
 
 /** Keeps main sources on one session factory, one session-cache type, one
   * fan-out and one scratch root: a main builds its session through
-  * [[Session]], a write-once cache is a [[SessionCache]], independent items
+  * [[Session]] (a spec too, through [[SparkSuite]]), a write-once cache is a [[SessionCache]], independent items
   * go to Spark tasks through [[FanOut]], and an on-disk artifact's path —
   * a test's temporary directory included — comes from [[Scratch]], so none
   * of these decisions is restated elsewhere.
@@ -49,7 +49,10 @@ class SessionGuardSpec extends AnyFunSuite {
   }
 
   test("SparkSession.builder appears only in graft/Session.scala") {
-    val found = hits(literal("SparkSession.builder"), Paths.get("graft/Session.scala"))
+    // Test sources too: tier-1 runs on the session the mains run on, at
+    // the core count SPARK_GRAFT_CPUS names.
+    val found = hits(literal("SparkSession.builder"), Paths.get("graft/Session.scala"),
+      Seq(root, testRoot))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 

@@ -4,7 +4,6 @@ import breeze.linalg.DenseMatrix
 import graft.experiment.ModelTrain
 import graft.tune.{RollingOriginTuner, Selection}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed-vs-local parity: the Spark-distributed fan-outs (per-origin
@@ -12,20 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * results to the sequential path — broadcast reconstruction and
   * reduce ordering must not change the numbers.
   */
-class SparkParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SparkParitySpec extends AnyFunSuite with SparkSuite {
 
   private def panel(t: Int, seed: Long): DenseMatrix[Double] = {
     val g = new TestData.Lcg(seed)
@@ -81,15 +67,18 @@ class SparkParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val y = panel(60, seed = 43L)
     val small = RollingOriginTuner.Grid(
       Seq(0.2, 0.8), (0 until 10).map(i => math.pow(10.0, -4.0 * i / 9)))
-    // 3 equations x 19 alphas = 57 segments > defaultParallelism x 4 = 16
-    // tasks, so every task folds several segments.
-    val g = new TestData.Lcg(44L)
-    val y3 = DenseMatrix.horzcat(y, DenseMatrix.tabulate(60, 1)((_, _) => g.gaussian()))
+    // At least 3 equations, and more (equation, α) segments than the
+    // tuner's defaultParallelism x 4 tasks, so tasks fold several segments.
     val wide = RollingOriginTuner.Grid(RollingOriginTuner.referenceGrid().alphas,
       (0 until 20).map(i => math.pow(10.0, 1.0 - 5.0 * i / 19)))
-    assert(3 * wide.alphas.size > spark.sparkContext.defaultParallelism * 4)
+    val tasks = spark.sparkContext.defaultParallelism * 4
+    val k = math.max(3, tasks / wide.alphas.size + 1)
+    assert(k * wide.alphas.size > tasks)
+    val g = new TestData.Lcg(44L)
+    val yk = DenseMatrix.horzcat(y, DenseMatrix.tabulate(60, k - 2)((_, _) => g.gaussian()))
+    val kNames = (0 until k).map(j => ('a' + j).toChar.toString)
     for {
-      (yy, names, grid) <- Seq((y, IndexedSeq("a", "b"), small), (y3, IndexedSeq("a", "b", "c"), wide))
+      (yy, names, grid) <- Seq((y, IndexedSeq("a", "b"), small), (yk, kNames, wide))
       caret <- Seq(false, true)
     } {
       val local = RollingOriginTuner.tune(yy, p = 1, initWindow = 30, horizon = 4,

@@ -2,31 +2,16 @@ package graft
 
 import graft.streaming.EventStream
 import graft.sources.{Tables, TuningIO}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming extension + tuning IO: the streaming windowed aggregate and
   * stateful dedup must agree with their batch equivalents on the same
   * (replayed) data; the tuning table round-trips into estimator vectors.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("streaming windowed aggregate replays to the same result as the batch aggregate") {
     val q = EventStream.windowedAgg(EventStream.readEvents(spark, sfDir))

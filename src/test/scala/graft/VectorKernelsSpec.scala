@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -13,21 +12,7 @@ import scala.util.Random
   * mismatch, and analysis-time (not runtime) rejection of wrong types
   * through the SQL registration.
   */
-class VectorKernelsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class VectorKernelsSpec extends AnyFunSuite with SparkSuite {
 
   test("vec_dot is bit-identical to the aggregate(zip_with(...)) fold on random floats") {
     val s = spark

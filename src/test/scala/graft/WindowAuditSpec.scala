@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The unpartitioned-window inventory, pinned by execution instead of by
@@ -31,22 +29,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * calendar frames, k-limited frames), so the sf choice only affects
   * the audit's own runtime.
   */
-class WindowAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
+class WindowAuditSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    super.beforeAll()
     spark.sparkContext.setLogLevel("ERROR")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def unpartitionedWindows(plan: LogicalPlan): Seq[Window] = {
     val here = plan.collect { case w: Window if w.partitionSpec.isEmpty => w }
